@@ -21,6 +21,11 @@ Exceptions (documented reasons, kept short on purpose):
   - `entry`, `queries`, `oracleSql`, `benchQueries`, `twinOf`, `main`:
     driver-contract entry points invoked reflectively by the harness.
 
+One session definition: `SparkSession.builder` may appear in src/main
+only in core/GraftSession.scala. Every session the engine, Bench and
+Verify run on is built there, so the conf Verify checks is the conf
+Bench times and the library ships. Any other builder site is flagged.
+
 Exit 1 with the flagged list if anything is found; exit 0 silently
 otherwise. Part of the closing ritual (see ROUND_NOTES / memory).
 """
@@ -36,6 +41,9 @@ SRC = os.path.join(ROOT, "src")
 
 # driver-contract names the harness invokes reflectively
 EXCEPTIONS = {"entry", "queries", "oracleSql", "benchQueries", "twinOf", "main"}
+
+SESSION_HOME = os.path.join("src", "main", "scala", "graft", "core", "GraftSession.scala")
+BUILDER_RE = re.compile(r"SparkSession\s*\.\s*builder")
 
 DEF_RE = re.compile(r"^(  |\t)(?:final |implicit |@\w+ )*def ([A-Za-z_][A-Za-z0-9_]*)")
 
@@ -83,11 +91,27 @@ def main():
         if not refs:
             flagged.append((name, sites))
 
+    builders = []
+    for path in scala_files(os.path.join(ROOT, "src", "main")):
+        rel = os.path.relpath(path, ROOT)
+        if rel == SESSION_HOME:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        for m in BUILDER_RE.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            builders.append(f"{rel}:{line}")
+
+    if builders:
+        print(f"SparkSession.builder outside {SESSION_HOME} (use GraftSession.local):")
+        for site in builders:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
             for f, n in sites:
                 print(f"  {name}  ({f}:{n})")
+    if flagged or builders:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -260,31 +260,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", "target")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-side partition discovery to 1024 paths — see the
-      // GraftSession.local comment (r20 opt: the q21/q40/q47 family
-      // reads a 358-directory table; the default's 358-task listing
-      // job costs ~0.8 s per read on a local FS)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // volume-adaptive cached-plan partitioning — see the GraftSession
-      // comment (r21 opt: the bench measures the engine as configured;
-      // timing methodology is untouched)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, only) = Verify.mainSetup("graft-bench")
     // warm the JVM + file cache once with a trivial scan so the first
     // measured query doesn't pay session bring-up
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val names = SparkEntry.benchQueries.filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.benchQueries.filter(only)
     val (line, failed, digest) = runBench(spark, sfDir, names, runs, outDir)
     System.out.println(line)
     // the digest ends stdout so a suffix-truncating capture still parses

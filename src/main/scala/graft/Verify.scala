@@ -1,4 +1,5 @@
 package graft
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -43,24 +44,31 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** Dev-loop query subset both mains honour: `SPARK_GRAFT_ONLY=a,b,c`
+    * keeps the named queries. Empty tokens are dropped, and a value that
+    * names no query keeps every query — a blank variable must never
+    * select zero queries (Bench once ran none, wrote `n_queries: 0` and
+    * exited 0).
+    */
+  def onlyFilter(raw: Option[String]): String => Boolean = {
+    val names = raw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    name => names.isEmpty || names(name)
+  }
+
+  /** What both mains start from: the engine session at `SPARK_GRAFT_CPUS`
+    * cores (default 4) and the `SPARK_GRAFT_ONLY` subset. The driver sets
+    * no filter.
+    */
+  def mainSetup(appName: String): (SparkSession, String => Boolean) =
+    (GraftSession.local(appName, sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt),
+      onlyFilter(sys.env.get("SPARK_GRAFT_ONLY")))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, only) = mainSetup("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset (same contract as Bench); the driver sets no filter
-    // empty tokens (or an all-empty var) must not filter out every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     val errors = dumpAll(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
+      SparkEntry.queries.filter { case (name, _) => only(name) })
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Catalog
+import graft.core.{Catalog, GraftSession}
 import graft.ext.{AnnIvf, LabelPropagation, PageRank, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,10 +29,12 @@ object ChaosInjector {
   * non-commutative state update — becomes a permanent regression case.
   *
   * The spec owns a dedicated retry-enabled session (the shared one runs
-  * plain local[n], where maxFailures is pinned to 1): it stops whatever
-  * context is active, runs, and stops its own — the next suite's
-  * getOrCreate builds a fresh default session, which suite-sequential
-  * execution makes safe.
+  * plain local[n], where maxFailures is pinned to 1) under the engine's
+  * own [[GraftSession.conf]] — local mode takes task retries only from
+  * the master string, so this is the one session built outside
+  * [[GraftSession.local]]. It stops whatever context is active, runs,
+  * and stops its own — the next suite's getOrCreate builds a fresh
+  * default session, which suite-sequential execution makes safe.
   */
 class ChaosRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -47,10 +49,7 @@ class ChaosRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     spark = SparkSession.builder()
       .master("local[8, 3]") // 8 threads, up to 3 attempts per task
       .appName("graft-chaos")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(GraftSession.conf(8))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // injected failures spam WARN
   }

@@ -28,6 +28,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-identical row multisets on the canonical and variant catalogs.
   * The full-registry proof at sf0.01 stays in the dev loop (138/138,
   * ROUND_NOTES_r13.md); this pins the mechanism in `sbt test`.
+  *
+  * A second law holds the same query set (plus the conf-sensitive cache
+  * users) to conf invariance: identical rows under the engine conf and
+  * under an alternate one.
   */
 class LayoutInvarianceSpec extends AnyFunSuite with SharedSpark
     with org.scalatest.BeforeAndAfterAll {
@@ -78,10 +82,44 @@ class LayoutInvarianceSpec extends AnyFunSuite with SharedSpark
 
   test("representative registry queries are bit-identical on a shuffled multi-file layout") {
     for (q <- regressionSet) {
-      val base = canon(SparkEntry.queries(q)(spark, sf))
       val got = canon(SparkEntry.queries(q)(spark, variantDir))
-      assert(base.nonEmpty, s"$q: empty baseline makes the law vacuous")
-      assert(got == base, s"$q diverged on the multi-file shuffled layout")
+      assert(engineRows(q).nonEmpty, s"$q: empty baseline makes the law vacuous")
+      assert(got == engineRows(q), s"$q diverged on the multi-file shuffled layout")
+    }
+  }
+
+  /** Conf invariance: the engine conf ([[graft.core.GraftSession.conf]])
+    * is a performance choice, never a semantic one. The layout regression
+    * set plus the cache users whose partitioning the cached-plan flag
+    * re-sizes must return the same rows with every tuning knob the
+    * engine relies on turned the other way.
+    */
+  private val confSensitiveSet = regressionSet ++ Seq(
+    "g3_bfs_hops", "g4_label_prop", "q31_etl_transactions", "d8_dup_clusters")
+
+  /** Canonical-layout rows under the engine conf: the baseline of both laws. */
+  private lazy val engineRows: Map[String, Seq[String]] =
+    confSensitiveSet.map(q => q -> canon(SparkEntry.queries(q)(spark, sf))).toMap
+
+  private val alternateConf = Map(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "7",
+    "spark.sql.codegen.wholeStage" -> "false")
+
+  test("representative registry queries are row-identical under an alternate session conf") {
+    val base = engineRows // computed under the engine conf, before the swap
+    val saved = alternateConf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      alternateConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      for (q <- confSensitiveSet) {
+        assert(base(q).nonEmpty, s"$q: empty baseline makes the law vacuous")
+        assert(canon(SparkEntry.queries(q)(spark, sf)) == base(q),
+          s"$q diverged under the alternate conf $alternateConf")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

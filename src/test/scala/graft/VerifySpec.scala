@@ -33,6 +33,14 @@ class VerifySpec extends AnyFunSuite with SharedSpark {
     assert(!new java.io.File(s"$out/v_boom/_SUCCESS").exists())
   }
 
+  test("SPARK_GRAFT_ONLY: blank or all-empty values keep every query; empty tokens are dropped") {
+    val names = Seq("q1", "q2", "q3", "")
+    assert(names.filter(Verify.onlyFilter(None)) == names)
+    for (raw <- Seq("", " , "))
+      assert(names.filter(Verify.onlyFilter(Some(raw))) == names, s"'$raw' dropped queries")
+    assert(names.filter(Verify.onlyFilter(Some("q1,,q2"))) == Seq("q1", "q2"))
+  }
+
   test("twinOf covers exactly the no-oracle queries, each mapped to a registered oracle-backed gate") {
     val registered = SparkEntry.queries.keySet
     val oracleBacked = SparkEntry.oracleSql.keySet
