@@ -26,6 +26,14 @@ only in core/GraftSession.scala. Every session the engine, Bench and
 Verify run on is built there, so the conf Verify checks is the conf
 Bench times and the library ships. Any other builder site is flagged.
 
+No unreferenced dev mains: every `object` with a `def main` under
+src/test must be named in a living doc (README.md, SCALING.md or
+COVERAGE.md) that says what it reproduces. Historical records
+(ROUND_NOTES_*, OPTIMIZATION_*, VERDICT.md, bench_records/) do not
+count: a probe whose numbers live only there has answered its question,
+and `graft.Trace` re-asks any per-query one. Any other test main is
+flagged.
+
 Exit 1 with the flagged list if anything is found; exit 0 silently
 otherwise. Part of the closing ritual (see ROUND_NOTES / memory).
 """
@@ -44,6 +52,9 @@ EXCEPTIONS = {"entry", "queries", "oracleSql", "benchQueries", "twinOf", "main"}
 
 SESSION_HOME = os.path.join("src", "main", "scala", "graft", "core", "GraftSession.scala")
 BUILDER_RE = re.compile(r"SparkSession\s*\.\s*builder")
+
+LIVING_DOCS = ("README.md", "SCALING.md", "COVERAGE.md")
+MAIN_OBJECT_RE = re.compile(r"^object\s+(\w+)[^\n]*?\{(?:(?!^object\s).)*?\bdef main\(", re.M | re.S)
 
 DEF_RE = re.compile(r"^(  |\t)(?:final |implicit |@\w+ )*def ([A-Za-z_][A-Za-z0-9_]*)")
 
@@ -102,6 +113,18 @@ def main():
             line = text.count("\n", 0, m.start()) + 1
             builders.append(f"{rel}:{line}")
 
+    docs = ""
+    for doc in LIVING_DOCS:
+        with open(os.path.join(ROOT, doc), encoding="utf-8") as fh:
+            docs += fh.read()
+    stray_mains = []
+    for path in sorted(scala_files(os.path.join(ROOT, "src", "test"))):
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        for m in MAIN_OBJECT_RE.finditer(text):
+            if not re.search(r"\b" + m.group(1) + r"\b", docs):
+                stray_mains.append(f"{m.group(1)}  ({os.path.relpath(path, ROOT)})")
+
     if builders:
         print(f"SparkSession.builder outside {SESSION_HOME} (use GraftSession.local):")
         for site in builders:
@@ -111,7 +134,11 @@ def main():
         for name, sites in flagged:
             for f, n in sites:
                 print(f"  {name}  ({f}:{n})")
-    if flagged or builders:
+    if stray_mains:
+        print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
+        for site in stray_mains:
+            print(f"  {site}")
+    if flagged or builders or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

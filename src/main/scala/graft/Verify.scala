@@ -55,7 +55,7 @@ object Verify {
     name => names.isEmpty || names(name)
   }
 
-  /** What both mains start from: the engine session at `SPARK_GRAFT_CPUS`
+  /** What the mains start from: the engine session at `SPARK_GRAFT_CPUS`
     * cores (default 4) and the `SPARK_GRAFT_ONLY` subset. The driver sets
     * no filter.
     */

@@ -39,7 +39,7 @@ object GraftSession {
     // partition discovery stays DRIVER-side up to 1024 paths: the
     // default (32) launches a Spark listing job per multi-dir table
     // read — a 358-task job for a stat sweep the driver does in tens
-    // of ms on a local FS (r20 opt, ProbePartWrite3: read-back of the
+    // of ms on a local FS (OPTIMIZATION_r20.md: read-back of the
     // 358-dir week-partitioned table 1.11 -> 0.29 s, consistent over
     // 3 interleaved rounds). The value is an I/O-profile knob, not a
     // core-count one: deployments listing high-latency object stores

@@ -55,7 +55,7 @@ object BfsHops {
       // (a sort-merge join — the frontier is a stats-free LogicalRDD)
       // skips the per-round Sort of the full adjacency; the dedup hash
       // aggregate above preserves the hash(src) partitioning, the sort
-      // adds the ordering the SMJ needs (r20 opt, ProbeIterJoin — the
+      // adds the ordering the SMJ needs (OPTIMIZATION_r20.md — the
       // LabelPropagation sorted-cache measurement, same shape)
       .sortWithinPartitions(col("src"))
       .cache()

@@ -42,7 +42,7 @@ object LabelPropagation {
     // join, and an unsorted cache re-Sorts the full adjacency every
     // round (a LogicalRDD label frame has no stats, so the planner
     // cannot broadcast it). One sort here removes iterations × |edges|
-    // sort work — r20 opt: ProbeIterJoin measured the 3-superstep chain
+    // sort work — OPTIMIZATION_r20.md measured the 3-superstep chain
     // 11.49 -> 6.23 s at sf0.1, vs 7.30 s for a forced-broadcast label
     // side (which would also be memory-unsafe at 100 TB node counts).
     // EXPLICIT partition count: with volume-adaptive cached-plan

@@ -215,8 +215,8 @@ object SimHash {
     }.reduce(_ + _)
 
   /** Saturation guard bound, MEASURED (r19 verdict item 2;
-    * `bench_records/r20_simhash_saturation.json`, probe at
-    * `src/test/scala/graft/ProbeSimHashSaturation.scala`): the pigeonhole
+    * `bench_records/r20_simhash_saturation.json`, which records the
+    * probe's sweep and method): the pigeonhole
     * lane collapses when the mean block-bucket occupancy λ = n / 2^width
     * approaches the stop-bucket cap, because EVERY route of a
     * near-duplicate pair runs through family-shared blocks and the lane

@@ -47,7 +47,7 @@ object TextStats {
     * projection computing quality and lang together tokenizes once via
     * subexpression elimination; the r20 form ran four
     * regexp_extract_all materializations + four interpreted
-    * higher-order filters per row (ProbeTextKernels r21: the quality+
+    * higher-order filters per row (OPTIMIZATION_r21.md: the quality+
     * lang projection was 0.93 s of the sf0.1 corpus pass — 4x the cost
     * of both shingle kernels combined). Values are pinned equal to the
     * relational [[tokenMemberCount]] form (and so to the unchanged

@@ -49,7 +49,7 @@ object Triangles {
     * instead of twice-directed-then-least/greatest-then-distinct), this
     * skips nothing semantically — countUnd treats the input identically
     * — but halves the pre-distinct row volume the caller pays (r20 opt:
-    * ProbeEdgeBuild measured the und build 3.01 -> 1.87 s at sf0.1).
+    * the und build measured 3.01 -> 1.87 s at sf0.1, OPTIMIZATION_r20.md).
     * Violating the u<v/distinct contract breaks the orientation
     * bijection and the counts; callers are gated by the same DuckDB
     * oracles as the directed form.
@@ -61,8 +61,8 @@ object Triangles {
     * semi-join form — the branch [[countUnd]] auto-selects past
     * [[bloomBroadcastMaxEdges]] oriented edges, exposed directly so the
     * web-scale endgame path is testable (hash-parity vs the Bloom forms
-    * in ExtSpec) and measurable (GraphScaleProbe / ProbeClosurePrune)
-    * without synthesizing a 10^8-edge graph.
+    * in ExtSpec) and measurable (GraphScaleProbe) without synthesizing a
+    * 10^8-edge graph (`bench_records/r13_closure_prune_probe.json`).
     */
   private[graft] def perNodeSemiJoinClosure(edges: DataFrame): DataFrame =
     countUnd(undSimple(edges), -1L)
@@ -71,9 +71,9 @@ object Triangles {
     * BROADCAST-VARIABLE Bloom pre-prune + semi-join form — the regime
     * [[countUnd]] auto-selects between [[bloomLiteralMaxEdges]] and
     * [[bloomBroadcastMaxEdges]] oriented edges (the r12 verdict's
-    * "distributed pre-prune" item, shipped after ProbeClosurePrune
-    * measured it 1.38× faster than the unpruned semi-join and 1.76×
-    * faster than the plan literal at 24M edges). Same distributive
+    * "distributed pre-prune" item, shipped after the r13 probe measured
+    * it 1.38×/1.76× faster than the unpruned semi-join/the plan literal
+    * at 24M edges, r13_closure_prune_probe.json). Same distributive
     * bloom build as the literal form, but the sketch ships as a
     * torrent-broadcast variable (one copy per EXECUTOR, outside the
     * serialized plan) and evaluates through a scala UDF on a
@@ -93,8 +93,8 @@ object Triangles {
     * auto path's literal band to m ≤ [[bloomLiteralMaxEdges]] = 2·10^6,
     * below every synthesizable probe scale: a probe that wants the
     * literal's cost curve above the bound must force it explicitly
-    * (ProbeRegime3's r16 'literal' points silently measured regime 2
-    * after the retune — the r16 advisor's finding).
+    * (the r16 regime-3 probe's 'literal' points, ROUND_NOTES_r17.md, hit
+    * regime 2 after the retune — the r16 advisor's finding).
     */
   private[graft] def perNodeLiteralBloomClosure(edges: DataFrame): DataFrame =
     countUnd(undSimple(edges), Long.MaxValue)
@@ -140,7 +140,7 @@ object Triangles {
     * the Bloom sketch as a PLAN LITERAL (see the branch comment in
     * [[countUnd]]). At 1% FPP the serialized filter is ~1.2 MB per
     * million oriented edges (m bits ≈ 9.6m) and the literal ships inside
-    * the serialized plan to EVERY task — ProbeClosurePrune measured the
+    * the serialized plan to EVERY task — the r13 probe measured the
     * literal form 1.76× SLOWER than the broadcast-variable form at 24M
     * edges (51.5 s vs 29.3 s, `bench_records/r13_closure_prune_probe
     * .json`), all of it task-binary deserialization of the literal.
@@ -457,7 +457,7 @@ object Triangles {
         // shuffle_hash like the other two regimes: the closing side is
         // the (small) oriented list, and a sort-merge plan sorts BOTH
         // the bloom-surviving wedge stream and the closing keys per run
-        // (r20 opt, ProbeClosingHint interleaved A/B at sf0.1: closing
+        // (OPTIMIZATION_r20.md, interleaved A/B at sf0.1: closing
         // stage 3.48 -> 3.01 s min-of-3, SHJ faster in every pair; the
         // hint predated only this branch)
         wedgeKeys.where(mightContain).join(closing.hint("shuffle_hash"), Seq("a", "b"))
@@ -475,7 +475,7 @@ object Triangles {
     // orderBy forced the range-partitioned sort — and its range-boundary
     // sampling pass, which re-executes the whole final wedge-join stage —
     // inside the operator, measured at 1.4× the whole query's cost at
-    // 24M edges (ProbeG2AB: 109–129 s vs 79–83 s). A caller that only
+    // 24M edges (ROUND_NOTES_r11.md: 109–129 s vs 79–83 s). A caller that only
     // counts or joins skips the sort entirely (as before the cache-release
     // contract); a caller that writes ordered output sorts 1 row per node,
     // never the wedge stream.

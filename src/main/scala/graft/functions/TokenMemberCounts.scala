@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB the per-row constant of the quality/lang predicate IS the
   * curation pipeline's CPU bill (measured: the quality+lang projection
   * at sf0.1 was 0.93 s of the c1/c2 prep pass vs 0.22 s for BOTH
-  * shingle kernels, ProbeTextKernels r21).
+  * shingle kernels, OPTIMIZATION_r21.md).
   */
 object TokenMemberCounts {
 

@@ -113,7 +113,7 @@ object AlsTwin {
     // big-endian — computed directly instead of formatting 16 bytes to
     // hex and parsing 12 back (the old form spent most of AlsTwin.fit's
     // driver wall here: ~40k init hashes × 16 String.format calls,
-    // ProbeAlsPhases r21); value is bit-identical by construction
+    // OPTIMIZATION_r21.md); value is bit-identical by construction
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) | ((d(2) & 0xffL) << 24) |
@@ -153,7 +153,7 @@ object AlsTwin {
   def fit(rows: Array[Array[Long]]): (Array[(Long, Long, Long)], Array[(Long, Long, Long)]) = {
     // Primitive-array (CSR) form of the alternating sweeps — the r20
     // Map-of-tuples form spent 0.4–0.9 s of DRIVER wall boxing longs and
-    // hashing keys per observation per sweep (ProbeAlsPhases). Every
+    // hashing keys per observation per sweep (OPTIMIZATION_r21.md). Every
     // arithmetic step below is the identical sequence of exact Long adds
     // and [[solve2x2]] calls (integer sums commute exactly; the solve is
     // per-entity), so the factors are bit-identical to the old form —

@@ -141,11 +141,11 @@ object ExtensionQueries {
     * min(4, cores). The gates hold kilobytes of state, so the batch
     * session's shuffle default buys pure state-store bring-up (the r18
     * e6/e12 finding, generalized to all eight gates in r20 —
-    * ProbeStreamState: e7 3.27→2.07 s, e8 1.19→0.86 s at 32→8 on 32
+    * OPTIMIZATION_r20.md: e7 3.27→2.07 s, e8 1.19→0.86 s at 32→8 on 32
     * cores) — but a FIXED bound over-partitions low-core runs: at 4
     * cores the 8-partition arm measured e7 +26 % / e8 +25 % vs
     * inheriting the session's 4 (two task waves per stateful stage per
-    * micro-batch). The bound retuned 8→4 in r21 (ProbeStateParts4,
+    * micro-batch). The bound retuned 8→4 in r21 (OPTIMIZATION_r21.md,
     * interleaved min-of-3 over all eight gates at 32 AND 8 cores: 4
     * wins or ties every gate at both — e6 3.34→2.57, e12 3.25→2.73,
     * e10 3.22→2.82 s at 32 cores; family mins 17.1→14.9 s — and 2 was

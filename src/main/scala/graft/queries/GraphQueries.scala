@@ -30,7 +30,7 @@ object GraphQueries {
     * queries' `undSimple(coPurchaseEdges)` derives — built directly:
     * per-order sorted distinct parts, i<j combinations, global distinct.
     * Set-identical to the self-join + least/greatest + distinct chain
-    * (ProbeEdgeBuild pins set equality and measured 3.01 -> 1.87 s at
+    * (OPTIMIZATION_r20.md: set equality pinned, measured 3.01 -> 1.87 s at
     * sf0.1: each unordered pair is emitted ONCE pre-distinct instead of
     * twice-directed, and the orderkey groupBy shuffles 2 narrow columns
     * where the self-join materialized the doubled edge list). Orders

@@ -92,7 +92,7 @@ object DocStream {
 
   /** `statePartitions` sizes the streaming-dedup state partitioning via
     * a session clone — the [[EventStream]] sessionFor knob (the digest
-    * state here is kilobytes; ProbeStreamState measured 1.19 -> 0.86 s
+    * state here is kilobytes; OPTIMIZATION_r20.md: 1.19 -> 0.86 s
     * at 32 -> 8 partitions on the sf0.1 gate). None inherits the session.
     */
   def runDedupToCompletion(spark: SparkSession, dir: String,

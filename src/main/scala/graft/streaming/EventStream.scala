@@ -51,7 +51,7 @@ object EventStream {
     * stateful operator opens one or more state store instances per
     * partition per micro-batch). The gates here hold kilobytes of state,
     * so the batch session's core-count default buys nothing but store
-    * bring-up — r20 opt, ProbeStreamState at sf0.1/32 cores, min-of-2:
+    * bring-up — r20 opt (OPTIMIZATION_r20.md), sf0.1/32 cores, min-of-2:
     * e4 1.88→1.60 s, e5 3.23→2.41 s, e7 3.27→2.07 s, e8 1.19→0.86 s at
     * 32→8 partitions. Sizing state partitions to expected state volume
     * (not the batch shuffle default) is the standard stateful-streaming

@@ -341,9 +341,9 @@ class ExtSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(semi == got, s"semi-join closure diverged: $semi vs $got")
 
-    // the broadcast-variable Bloom pre-prune form (the ProbeClosurePrune
-    // candidate) must also agree row-for-row: same sketch, different
-    // shipping (broadcast var vs plan literal) + semi-join verify
+    // the broadcast-variable Bloom pre-prune form (the candidate in
+    // bench_records/r13_closure_prune_probe.json) must also agree row-for-
+    // row: same sketch, broadcast var vs plan literal, semi-join verify
     val bcast = Triangles.perNodeBroadcastBloomClosure(noisy.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bcast == got, s"broadcast-bloom closure diverged: $bcast vs $got")

@@ -4,50 +4,21 @@ import graft.core.{Catalog, GraftSession}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev-loop probe #2: (a) does PageRank's window-built cache already
-  * expose a src ordering (no per-iteration Sort)?  (b) what does
-  * pre-sorting the oriented cache buy the triangle wedge self-join?
+/** Dev-loop probe: what does pre-sorting the oriented cache by `src`
+  * buy the triangle wedge self-join (the r20 sorted-cache change cited
+  * in `Triangles.scala` and SCALING.md §4)? Min-of-2 per arm, traced.
+  * Usage: Test/runMain graft.ProbeIterJoin2 [sfDir]
   */
 object ProbeIterJoin2 {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.local("probe-iterjoin2", 32)
-    spark.sparkContext.setLogLevel("WARN")
     val li = Catalog(spark, sf).lineitem.select(col("l_orderkey"), col("l_partkey"))
     li.count()
     def edges: DataFrame = li.as("a").join(li.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") =!= col("b.l_partkey"))
       .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-
-    def timed(name: String)(f: => Long): Unit = {
-      val ts = (1 to 2).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"[probe] $name%-34s min ${ts.map(_._1).min}%.2f s  (${ts.map(t => f"${t._1}%.2f").mkString(", ")})  n=${ts.head._2}")
-    }
-
-    // (a) g1 superstep plan under the current window-built cache
-    {
-      val withDeg = edges.repartition(col("src"))
-        .withColumn("outdeg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .cache()
-      withDeg.count()
-      val nodes = withDeg.select(col("src").as("node"))
-        .union(withDeg.select(col("dst").as("node"))).distinct()
-      val rank = nodes.select(col("node"), lit(1000L).as("rank")).localCheckpoint(true)
-      val inSum = withDeg.join(rank.withColumnRenamed("node", "src"), Seq("src"))
-        .selectExpr("dst", "rank DIV outdeg AS contrib")
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("in_sum"))
-      println("[probe] === g1 superstep plan ===")
-      inSum.explain("formatted")
-      withDeg.unpersist()
-    }
-
-    // (b) triangle wedge self-join: sorted vs unsorted oriented cache
     def triRun(sortCache: Boolean): Long = {
       val und = edges.selectExpr("least(src, dst) AS u", "greatest(src, dst) AS v")
         .where(col("u") =!= col("v")).distinct().cache()
@@ -75,8 +46,9 @@ object ProbeIterJoin2 {
       oriented.unpersist()
       n
     }
-    timed("g2 wedge, unsorted cache")(triRun(sortCache = false))
-    timed("g2 wedge, sorted cache")(triRun(sortCache = true))
+    for ((arm, sorted) <- Seq("unsorted" -> false, "sorted" -> true))
+      Trace.report(s"g2 wedge, $arm cache",
+        (1 to 2).map(_ => Trace.traced(spark)(triRun(sorted))).minBy(_.wall))
     spark.stop()
   }
 }
