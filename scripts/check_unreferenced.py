@@ -26,6 +26,13 @@ only in core/GraftSession.scala. Every session the engine, Bench and
 Verify run on is built there, so the conf Verify checks is the conf
 Bench times and the library ships. Any other builder site is flagged.
 
+One cache lifecycle: `.cache()`, `.persist(` and `.unpersist(` may
+appear in src/main code only in core/Materialize.scala. Every operator
+cache is taken in a `Materialize` scope, which releases it when the
+scope exits (returning or throwing), so CacheHygieneSpec's empty
+CacheManager holds by construction. Comments and string literals are
+not searched; any other call site is flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -52,6 +59,20 @@ EXCEPTIONS = {"entry", "queries", "oracleSql", "benchQueries", "twinOf", "main"}
 
 SESSION_HOME = os.path.join("src", "main", "scala", "graft", "core", "GraftSession.scala")
 BUILDER_RE = re.compile(r"SparkSession\s*\.\s*builder")
+
+CACHE_HOME = os.path.join("src", "main", "scala", "graft", "core", "Materialize.scala")
+CACHE_RE = re.compile(r"\.\s*(?:cache\(\)|persist\(|unpersist\()")
+# string/char literals are kept as-is (so a `//` inside one is not a
+# comment); comments are blanked, keeping their newlines for line numbers
+LEXEME_RE = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
+
+
+def code_only(text):
+    """`text` with Scala comments replaced by their newlines."""
+    def blank(m):
+        lexeme = m.group(0)
+        return "\n" * lexeme.count("\n") if lexeme.startswith(("//", "/*")) else lexeme
+    return LEXEME_RE.sub(blank, text)
 
 LIVING_DOCS = ("README.md", "SCALING.md", "COVERAGE.md")
 MAIN_OBJECT_RE = re.compile(r"^object\s+(\w+)[^\n]*?\{(?:(?!^object\s).)*?\bdef main\(", re.M | re.S)
@@ -113,6 +134,16 @@ def main():
             line = text.count("\n", 0, m.start()) + 1
             builders.append(f"{rel}:{line}")
 
+    caches = []
+    for path in sorted(scala_files(os.path.join(ROOT, "src", "main"))):
+        rel = os.path.relpath(path, ROOT)
+        if rel == CACHE_HOME:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            code = code_only(fh.read())
+        for m in CACHE_RE.finditer(code):
+            caches.append(f"{rel}:{code.count(chr(10), 0, m.start()) + 1}")
+
     docs = ""
     for doc in LIVING_DOCS:
         with open(os.path.join(ROOT, doc), encoding="utf-8") as fh:
@@ -129,6 +160,10 @@ def main():
         print(f"SparkSession.builder outside {SESSION_HOME} (use GraftSession.local):")
         for site in builders:
             print(f"  {site}")
+    if caches:
+        print(f"cache/persist/unpersist outside {CACHE_HOME} (use Materialize.scoped):")
+        for site in caches:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -138,7 +173,7 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or stray_mains:
+    if flagged or builders or caches or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.core.Catalog
+import graft.core.{Catalog, Materialize}
 import graft.functions.Exact._
 import graft.transform.{Derive, SchemaCompat}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -126,18 +126,17 @@ object Etl {
     * partitioning per the reference (`:175,208-211,222-225`). Returns
     * written row counts (read back from the sinks, verifying the write).
     */
-  def run(spark: SparkSession, sfDir: String, outDir: String): Map[String, Long] = {
+  def run(spark: SparkSession, sfDir: String,
+          outDir: String): Map[String, Long] = Materialize.scoped { scope =>
     val cat = Catalog(spark, sfDir)
-    val base = cleanBase(cat.lineitem, cat.orders).cache()
-    try {
-      graft.sources.Writers.parquet(transactions(base), s"$outDir/transactions")
-      SchemaCompat.writePartitionedIfPresent(weeklyDemand(base), s"$outDir/temporal", "week_no")
-      SchemaCompat.writePartitionedIfPresent(
-        customerProfile(base, cat.customer), s"$outDir/customer", "c_mktsegment")
-      SchemaCompat.writePartitionedIfPresent(itemTable(base, cat.part), s"$outDir/item", "p_brand")
-      Seq("transactions", "temporal", "customer", "item")
-        .map(t => t -> spark.read.parquet(s"$outDir/$t").count()).toMap
-    } finally { base.unpersist(); () }
+    val base = scope.cache(cleanBase(cat.lineitem, cat.orders))
+    graft.sources.Writers.parquet(transactions(base), s"$outDir/transactions")
+    SchemaCompat.writePartitionedIfPresent(weeklyDemand(base), s"$outDir/temporal", "week_no")
+    SchemaCompat.writePartitionedIfPresent(
+      customerProfile(base, cat.customer), s"$outDir/customer", "c_mktsegment")
+    SchemaCompat.writePartitionedIfPresent(itemTable(base, cat.part), s"$outDir/item", "p_brand")
+    Seq("transactions", "temporal", "customer", "item")
+      .map(t => t -> spark.read.parquet(s"$outDir/$t").count()).toMap
   }
 
   /** Shared DuckDB CTE replaying [[cleanBase]]. */

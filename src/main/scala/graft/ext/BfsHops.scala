@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,8 @@ object BfsHops {
     * @return (node, hops) for every node within `maxHops` of a seed,
     *         ordered by node id
     */
-  def hops(edges: DataFrame, seedMod: Long = 50L, maxHops: Int = 4): DataFrame = {
+  def hops(edges: DataFrame, seedMod: Long = 50L,
+           maxHops: Int = 4): DataFrame = Materialize.scoped { scope =>
     // co-partition the adjacency by src ONCE and cache (the PageRank
     // idiom): every superstep's frontier join then reuses the cached
     // HashPartitioning(src) and shuffles only the frontier — without
@@ -48,7 +50,7 @@ object BfsHops {
     // repartition adds no exchange: hash(src) already clusters equal
     // (src, dst) pairs, and Catalyst accepts a subset partitioning for
     // the aggregate's distribution requirement.
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = scope.cache(edges.select(col("src"), col("dst"))
       .repartition(col("src"))
       .dropDuplicates(Seq("src", "dst"))
       // sorted at cache-build time so each superstep's frontier join
@@ -57,13 +59,11 @@ object BfsHops {
       // aggregate above preserves the hash(src) partitioning, the sort
       // adds the ordering the SMJ needs (OPTIMIZATION_r20.md — the
       // LabelPropagation sorted-cache measurement, same shape)
-      .sortWithinPartitions(col("src"))
-      .cache()
+      .sortWithinPartitions(col("src")))
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node")))
       .distinct()
 
-    try {
     // settled set and frontier both live as localCheckpoints (the
     // DedupClusters/PageRank lifecycle): lineage stays truncated per
     // round as before, and superseded rounds free on GC via the
@@ -95,11 +95,7 @@ object BfsHops {
         frontier = next
       }
     }
-    // the settled set is checkpointed — nothing lazy reads the adjacency
-    // cache anymore; release it in a finally so a mid-superstep
-    // exception cannot leak it (CacheHygieneSpec pins this)
     dist.orderBy(col("node"))
-    } finally adj.unpersist()
   }
 
   /** DuckDB twin over an `edges(src, dst)` CTE the caller prepends: the

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,37 +39,27 @@ object ContainmentJoin {
     *         word `n`-grams appear in b (a ≠ b), ordered by (a, b).
     *         doc_a is the CONTAINED side; the relation is asymmetric.
     */
-  def pairs(documents: DataFrame, n: Int = 3, thresholdPct: Int = 80): DataFrame = {
-    val (result, g) = buildPairs(documents, n, thresholdPct)
-    // materialize the (small) pair set, then release the corpus-wide
-    // gram cache — the CorpusPipeline localCheckpoint-then-unpersist
-    // lifecycle (CacheHygieneSpec pins the empty cache manager). The
-    // checkpoint takes the UNSORTED pair set and the (doc_a, doc_b)
+  def pairs(documents: DataFrame, n: Int = 3, thresholdPct: Int = 80): DataFrame =
+    // the (small) pair set is checkpointed UNSORTED and the (doc_a, doc_b)
     // ordering is applied lazily OVER it: eagerly checkpointing after
     // the sort forced the range-boundary sampling pass to re-execute
     // the verify-join stage — the Triangles.countUnd lesson.
-    val out = try result.localCheckpoint(true) finally g.unpersist()
-    out.orderBy(col("doc_a"), col("doc_b"))
-  }
+    Materialize.checkpointed(pairsCompute(_, documents, n, thresholdPct))
+      .orderBy(col("doc_a"), col("doc_b"))
 
-  /** The pre-materialization compute plan of [[pairs]] — what PlanSpec
-    * inspects (the public form checkpoints the result, which collapses
-    * the executed plan to an RDD scan). Leaves the gram cache
-    * registered; test-only.
+  /** The pre-materialization compute plan of [[pairs]], its gram cache
+    * held by `scope` — what PlanSpec inspects (the public form
+    * checkpoints the result, which collapses the executed plan to an
+    * RDD scan).
     */
-  private[graft] def pairsCompute(documents: DataFrame, n: Int = 3,
-                                  thresholdPct: Int = 80): DataFrame =
-    buildPairs(documents, n, thresholdPct)._1
-
-  private def buildPairs(documents: DataFrame, n: Int,
-                         thresholdPct: Int): (DataFrame, DataFrame) = {
+  private[graft] def pairsCompute(scope: Materialize.Scope, documents: DataFrame,
+                                  n: Int = 3, thresholdPct: Int = 80): DataFrame = {
     // cached: feeds the posting explode AND both verify sides
-    val g = documents.select(col("doc_id"),
+    val g = scope.cache(documents.select(col("doc_id"),
         array_sort(array_distinct(
           TextStats.hashedWordGramsCol(col("text"), n))).as("grams"))
       .withColumn("n_grams", size(col("grams")).cast("long"))
-      .where(col("n_grams") > 0)
-      .cache()
+      .where(col("n_grams") > 0))
     val posting = g.select(col("doc_id"), col("n_grams"), explode(col("grams")).as("gram"))
     val dfreq = posting.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val pfx = posting.join(dfreq, Seq("gram"))
@@ -81,7 +72,7 @@ object ContainmentJoin {
       .where(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-    val result = cand
+    cand
       .join(g.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"),
         col("n_grams").as("n_grams_a")), Seq("doc_a"))
       .join(g.select(col("doc_id").as("doc_b"), col("grams").as("grams_b")), Seq("doc_b"))
@@ -91,7 +82,6 @@ object ContainmentJoin {
       .where(col("n_inter") * 100 >= col("n_grams_a") * thresholdPct)
       .select(col("doc_a"), col("doc_b"), col("n_grams_a"), col("n_inter"),
         expr("n_inter * 100 DIV n_grams_a").as("containment_pct"))
-    (result, g)
   }
 
   /** DuckDB twin of [[pairs]]: same distinct word-gram sets (shared

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,16 +30,8 @@ object CorpusPipeline {
     * the single-split scan task. At 100 TB the input has thousands of
     * splits and this is a no-op shuffle of (doc_id, text) — the standard
     * "spread a hot narrow input before expensive per-row compute" move,
-    * paid once per pipeline.
-    *
-    * LIFECYCLE: the materialization point is a LAZY `localCheckpoint`,
-    * not `.cache()` — same barrier (the RDD boundary stops Catalyst
-    * re-inlining computed-column predicates into the scan), same
-    * run-once materialization on first action, but the blocks are
-    * ContextCleaner-managed: they free when the frame is GC'd instead
-    * of registering a CacheManager entry the caller must remember to
-    * `unpersist()` (CacheHygieneSpec pins that every registry query
-    * built on this leaves the CacheManager empty).
+    * paid once per pipeline. The barrier is a lazy `localCheckpoint`,
+    * not a cache: it has no release point (see [[graft.core.Materialize]]).
     */
   def spreadText(documents: DataFrame): DataFrame =
     documents
@@ -66,53 +59,32 @@ object CorpusPipeline {
     * r7's verdict prescribed for c1 (its spreadText-cached form re-ran
     * every regex against cached full-width text, 5.0→6.9 s).
     */
-  private def preparedCorpus(documents: DataFrame): DataFrame =
-    MinHashDedup.prepared(
+  private def preparedCorpus(scope: Materialize.Scope, documents: DataFrame): DataFrame =
+    scope.cache(MinHashDedup.prepared(
       documents
         .repartition(documents.sparkSession.sparkContext.defaultParallelism)
         .select(col("doc_id"), col("text"),
           TextStats.nWordsCol(col("text")).as("n_words"),
           TextStats.qualityScoreCol(col("text")).as("quality_score"),
-          TextStats.predictedLangCol(col("text")).as("predicted_lang")))
-      .cache()
-
-  /** Materialize the (narrow, already-filtered) curation result and
-    * release the pipeline's cache. `localCheckpoint` is eager, so by the
-    * time `unpersist` runs nothing lazy references the cached frame; the
-    * checkpointed rows are the curated output — the smallest frame in the
-    * whole pipeline — and their blocks are reclaimed by the
-    * ContextCleaner when the caller drops the result. Without this every
-    * curate call leaked a corpus-wide cached frame into the session
-    * (caches only, not correctness). Curation is already effectively
-    * eager — the component rounds run driver-side convergence actions —
-    * so this adds one tiny materialization, not a semantic change.
-    */
-  private def released(result: DataFrame, cache: DataFrame): DataFrame =
-    try result.localCheckpoint() finally cache.unpersist()
+          TextStats.predictedLangCol(col("text")).as("predicted_lang"))))
 
   def curate(documents: DataFrame, minQuality: Double = 0.8,
-             lang: String = "en", jaccard: Double = 0.5): DataFrame = {
-    // full-corpus representative semantics: components (and the pairs
-    // feeding them) run over ALL docs, so a survivor whose cluster rep
-    // was rejected is dropped — the quality/lang predicates apply AFTER
-    // the cluster join, on stored columns of the prepared frame
-    val prep = preparedCorpus(documents)
-    // finally: released() drops the cache on the success path; the
-    // idempotent re-unpersist covers a failure inside the component
-    // rounds' eager driver actions (r15, exception-safe cache lifecycle)
-    try {
+             lang: String = "en", jaccard: Double = 0.5): DataFrame =
+    Materialize.checkpointed { scope =>
+      // full-corpus representative semantics: components (and the pairs
+      // feeding them) run over ALL docs, so a survivor whose cluster rep
+      // was rejected is dropped — the quality/lang predicates apply AFTER
+      // the cluster join, on stored columns of the prepared frame
+      val prep = preparedCorpus(scope, documents)
       val comp = DedupClusters.components(
         prep, MinHashDedup.verifiedPairsFromPrepared(prep, jaccard))
-      released(
-        prep.join(comp, "doc_id")
-          .filter(
-            col("quality_score") >= minQuality &&
-            col("predicted_lang") === lang &&
-            col("doc_id") === col("cluster_id"))
-          .select(col("doc_id"), col("n_words"), col("quality_score")),
-        prep)
-    } finally prep.unpersist()
-  }
+      prep.join(comp, "doc_id")
+        .filter(
+          col("quality_score") >= minQuality &&
+          col("predicted_lang") === lang &&
+          col("doc_id") === col("cluster_id"))
+        .select(col("doc_id"), col("n_words"), col("quality_score"))
+    }
 
   /** Filter-first curation: quality + language predicates applied BEFORE
     * any dedup work, so MinHash signatures, the LSH pair join, and the
@@ -127,33 +99,29 @@ object CorpusPipeline {
     * should suppress survivors.
     */
   def curateFiltered(documents: DataFrame, minQuality: Double = 0.8,
-                     lang: String = "en", jaccard: Double = 0.5): DataFrame = {
-    // quality/lang are per-row column algebra, so the survivor set is ONE
-    // narrow filtered scan — no scored-frame self-joins (measured 2s
-    // SLOWER than curate() at sf0.1 in the joined formulation; the whole
-    // point of filter-first is that rejects never reach a shuffle).
-    // ONE text pass for the whole pipeline, every regex evaluated ONCE
-    // (see preparedCorpus — a predicate over the cached no-text frame
-    // reads stored values instead of re-deriving them). Sig/grams for
-    // rejected docs are wasted per-row CPU (~25% at this corpus's
-    // rejection rate) but never reach a shuffle; at high rejection rates
-    // a second filtered text pass wins instead — that trade re-pays the
-    // regex pass, so it starts losing below ~50% rejection.
-    val prepAll = preparedCorpus(documents)
-    // finally: same idempotent failure cover as [[curate]] (r15)
-    try {
+                     lang: String = "en", jaccard: Double = 0.5): DataFrame =
+    Materialize.checkpointed { scope =>
+      // quality/lang are per-row column algebra, so the survivor set is ONE
+      // narrow filtered scan — no scored-frame self-joins (measured 2s
+      // SLOWER than curate() at sf0.1 in the joined formulation; the whole
+      // point of filter-first is that rejects never reach a shuffle).
+      // ONE text pass for the whole pipeline, every regex evaluated ONCE
+      // (see preparedCorpus — a predicate over the cached no-text frame
+      // reads stored values instead of re-deriving them). Sig/grams for
+      // rejected docs are wasted per-row CPU (~25% at this corpus's
+      // rejection rate) but never reach a shuffle; at high rejection rates
+      // a second filtered text pass wins instead — that trade re-pays the
+      // regex pass, so it starts losing below ~50% rejection.
+      val prepAll = preparedCorpus(scope, documents)
       val prep = prepAll.filter(
         col("quality_score") >= minQuality && col("predicted_lang") === lang)
       val comp = DedupClusters.components(
         prep, MinHashDedup.verifiedPairsFromPrepared(prep, jaccard))
-      released(
-        prep
-          .join(comp, "doc_id")
-          .filter(col("doc_id") === col("cluster_id"))
-          .select(col("doc_id"), col("n_words"), col("quality_score")),
-        prepAll)
-    } finally prepAll.unpersist()
-  }
+      prep
+        .join(comp, "doc_id")
+        .filter(col("doc_id") === col("cluster_id"))
+        .select(col("doc_id"), col("n_words"), col("quality_score"))
+    }
 
   /** DuckDB twin of [[curateFiltered]]: the identical verified-pairs +
     * recursive-closure SQL, with every dedup CTE reading the `sdocs`

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,28 +25,26 @@ object DedupClusters {
   /** (doc_id, cluster_id) for every document; cluster_id = min doc_id
     * reachable through `pairs` (columns doc_a, doc_b).
     *
-    * `checkpointEvery`: rounds between lineage truncations. Default 1 —
-    * truncating EVERY round keeps each round's plan the same fixed shape
-    * over a materialized previous round, so whole-stage codegen compiles
-    * once and is cache-hit thereafter, where growing lineage recompiles a
-    * bigger plan per round (measured 6.1s -> 5.1s on the sf0.1 d8 shape;
-    * the checkpointed state is |connected| label rows, far smaller than
-    * the corpus, so the write is noise). Cluster deployments with pricey
-    * local disks or very long chains can widen the interval.
+    * Every round's labels are truncated with a `localCheckpoint`: it
+    * keeps each round's plan the same fixed shape over a materialized
+    * previous round, so whole-stage codegen compiles once and is
+    * cache-hit thereafter, where growing lineage recompiles a bigger plan
+    * per round (measured 6.1s -> 5.1s on the sf0.1 d8 shape; the
+    * checkpointed state is |connected| label rows, far smaller than the
+    * corpus, so the write is noise).
     */
-  def components(documents: DataFrame, pairs: DataFrame, maxIter: Int = 20,
-                 checkpointEvery: Int = 1): DataFrame = {
+  def components(documents: DataFrame, pairs: DataFrame,
+                 maxIter: Int = 20): DataFrame = Materialize.scoped { scope =>
     // cache the PAIR LIST before unioning it into the symmetric edge
     // list: the union's two branches otherwise each re-derive the full
     // pair pipeline inside the edge materialization job (for minhash
     // pairs that is the banding shuffle + verify joins TWICE — the 10x
     // scale probe measured d8 paying ~2x its pair cost here). Pairs are
     // orders of magnitude smaller than the corpus; the cache is noise.
-    val pairsC = pairs.cache()
+    val pairsC = scope.cache(pairs)
     // symmetric edge list, cached: reused every iteration
-    val edges = pairsC.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairsC.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
+    val edges = scope.cache(pairsC.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairsC.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     // iterate over CONNECTED vertices only: a doc with no edge can never
     // change its label, so singletons (the overwhelming majority of a
     // deduplicated corpus) rejoin after convergence via a left join —
@@ -58,17 +57,10 @@ object DedupClusters {
     // each saved round is a join + aggregate + checkpoint + probe job.
     // The fixpoint (min reachable doc_id) and the convergence probe are
     // unchanged; only the starting point moves.
-    var labels = edges
+    var labels = scope.cache(edges
       .groupBy(col("src"))
       .agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("cluster_id"))
-      .cache()
-    // finally: the edge/pair build caches release on every exit; on an
-    // exception (including the non-convergence throw below, which
-    // previously leaked all three frames) the in-flight labels cache
-    // releases too — on success the result stays lazy over labels, so
-    // only the catch touches it (r15, exception-safe cache lifecycle)
-    try {
+      .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("cluster_id")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -77,29 +69,21 @@ object DedupClusters {
         .groupBy(col("src")).agg(min(col("cluster_id")).as("nmin"))
       // the convergence probe rides along as a flag column — no separate
       // next-vs-previous join per round (one job per iteration total)
-      val nextRaw = labels
+      val next = labels
         .join(neighborMin, col("doc_id") === col("src"), "left")
         .select(
           col("doc_id"),
           least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"),
           (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id")).as("relabeled"))
-      // each round's plan nests the previous round's; truncate the
-      // lineage so planning and codegen stay O(1) per iteration and an
-      // executor loss doesn't replay the whole history (cluster
-      // deployments use a reliable checkpoint dir instead of local)
-      val next =
-        if (iter % checkpointEvery == checkpointEvery - 1) nextRaw.localCheckpoint()
-        else nextRaw.cache()
-      // next's CacheManager entry registers eagerly but materializes in
-      // the probe count below — a throw there (executor loss, a hostile
-      // row surfacing mid-edge-evaluation) would leak it past the outer
-      // catch, which only covers the `labels` var. Release it here and
-      // rethrow; the outer catch then releases the previous round's
-      // labels (unpersist is idempotent — the r16 advisor note).
-      val changed =
-        try next.filter(col("relabeled")).limit(1).count()
-        catch { case t: Throwable => next.unpersist(); throw t }
-      labels.unpersist()
+        // each round's plan nests the previous round's; truncate the
+        // lineage so planning and codegen stay O(1) per iteration and an
+        // executor loss doesn't replay the whole history (cluster
+        // deployments use a reliable checkpoint dir instead of local)
+        .localCheckpoint()
+      val changed = next.filter(col("relabeled")).limit(1).count()
+      // frees the seed labels' cache after round 0; later labels are
+      // checkpoints the scope does not hold
+      scope.release(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -113,18 +97,11 @@ object DedupClusters {
         s"DedupClusters.components did not converge within $maxIter iterations: " +
           "some component's diameter exceeds maxIter; raise maxIter (labels would " +
           "otherwise silently diverge from min-reachable-doc_id semantics)")
-    // the converged labels are checkpointed/cached, so nothing lazy
-    // reads the edge list anymore — the finally releases it (and the
-    // pair cache) instead of leaking cached frames per components() call
+    // the converged labels are checkpointed, so nothing lazy reads the
+    // scope's caches once it exits
     documents.select(col("doc_id"))
       .join(labels.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    } catch {
-      case t: Throwable => labels.unpersist(); throw t
-    } finally {
-      edges.unpersist()
-      pairsC.unpersist()
-    }
   }
 
   /** Cluster summary: one row per component with its representative and

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,8 @@ object LabelPropagation {
     *         ordered by node id; isolated-in-degree nodes keep their
     *         previous label
     */
-  def communities(edges: DataFrame, iterations: Int = 3): DataFrame = {
+  def communities(edges: DataFrame,
+                  iterations: Int = 3): DataFrame = Materialize.scoped { scope =>
     // partitioned AND sorted by src at cache-build time: every superstep
     // joins this cache to the ~|nodes| label frame with a sort-merge
     // join, and an unsorted cache re-Sorts the full adjacency every
@@ -55,11 +57,10 @@ object LabelPropagation {
     // interleaved A/Bs while every other iterative operator won). An
     // explicit count is AQE-exempt, pinning today's behavior at any
     // conf; shuffle-partition count tracks deployment sizing.
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = scope.cache(edges.select(col("src"), col("dst"))
       .repartition(edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
         col("src"))
-      .sortWithinPartitions(col("src")).cache()
-    try {
+      .sortWithinPartitions(col("src")))
     // nodes feeds ONLY the seed labels frame (one consumer — no cache);
     // adj's cache is what the supersteps reuse
     val nodes = adj.select(col("src").as("node"))
@@ -101,11 +102,7 @@ object LabelPropagation {
           coalesce(col("new_label"), col("label")).as("label"))
         .localCheckpoint(true)
     }
-    // final labels are checkpointed — nothing lazy reads the adjacency
-    // cache anymore; release it in a finally so a failed superstep (or
-    // the negative-id require above) cannot leak it (CacheHygieneSpec)
     labels.orderBy(col("node"))
-    } finally adj.unpersist()
   }
 
   /** DuckDB twin over an `edges(src, dst)` CTE the caller prepends: the

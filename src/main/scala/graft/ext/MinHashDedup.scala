@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -173,18 +174,11 @@ object MinHashDedup {
     * use [[prepared]] + [[verifiedPairsFromPrepared]] instead.)
     */
   def verifiedPairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.5,
-                    bucketCap: Int = 50): DataFrame = {
-    val g = documents.select(
-      col("doc_id"), graft.functions.HashedNgrams.of(col("text"), n).as("grams"))
-      .cache()   // joined twice (doc_a / doc_b sides)
-    // materialize the (small) verified pair set eagerly, then release
-    // the corpus-wide gram cache — returning a lazy plan over it leaked
-    // one gram cache per call into long-lived sessions (the
-    // CorpusPipeline localCheckpoint-then-unpersist lifecycle;
-    // CacheHygieneSpec pins the empty cache manager after d8)
-    try verify(candidatePairs(documents, n, bucketCap), g, threshold)
-      .localCheckpoint(true)
-    finally g.unpersist()
+                    bucketCap: Int = 50): DataFrame = Materialize.checkpointed { scope =>
+    // cached: joined twice (doc_a / doc_b sides)
+    val g = scope.cache(documents.select(
+      col("doc_id"), graft.functions.HashedNgrams.of(col("text"), n).as("grams")))
+    verify(candidatePairs(documents, n, bucketCap), g, threshold)
   }
 
   /** Per-doc dedup state in ONE text scan: the MinHash signature array

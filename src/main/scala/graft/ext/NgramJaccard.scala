@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -62,12 +63,12 @@ object NgramJaccard {
     *    for `array_intersect`.
     */
   def pairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.3,
-            bucketWidth: Int = 50): DataFrame = {
+            bucketWidth: Int = 50): DataFrame = Materialize.checkpointed { scope =>
     // cached: consumed by both sides of the self-join below — without a
     // materialization point the gram pipeline runs twice. Grams come
     // pre-sorted from the native expression (one loop per doc; the
     // transform-lambda form interprets md5 per element).
-    val g = documents.select(
+    val g = scope.cache(documents.select(
       col("doc_id"), col("lang"),
       floor(col("n_chars") / bucketWidth).as("len_bucket"),
       graft.functions.HashedNgrams.of(col("text"), n).as("grams"))
@@ -76,13 +77,12 @@ object NgramJaccard {
       // no n-gram similarity — excluded, or the all-empty pair divides
       // 0/0 at the jaccard (ANSI abort; the r13 hostile probe). Oracle
       // mirrors with the same n_grams > 0 predicate.
-      .filter(col("n_grams") > 0)
-      .cache()
+      .filter(col("n_grams") > 0))
     val a = g.select(col("doc_id").as("doc_a"), col("lang"), col("len_bucket"),
       col("grams").as("grams_a"), col("n_grams").as("na"))
     val b = g.select(col("doc_id").as("doc_b"), col("lang"), col("len_bucket"),
       col("grams").as("grams_b"), col("n_grams").as("nb"))
-    val result = a.join(b, Seq("lang", "len_bucket"))
+    a.join(b, Seq("lang", "len_bucket"))
       .filter(col("doc_a") < col("doc_b"))
       .filter(least(col("na"), col("nb")) >= lit(threshold) * greatest(col("na"), col("nb")))
       // graft-native codegen'd merge scan over the pre-sorted gram arrays
@@ -92,9 +92,6 @@ object NgramJaccard {
         col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // materialize the (small) pair set, release the corpus-wide gram
-    // cache in a finally (the CorpusPipeline lifecycle; CacheHygieneSpec)
-    try result.localCheckpoint(true) finally g.unpersist()
   }
 
   /** [[pairs]] with a MinHash-band prefilter on the candidate set: a pair
@@ -126,7 +123,8 @@ object NgramJaccard {
     * cap-immune discriminative bands.
     */
   def pairsBanded(documents: DataFrame, n: Int = 5, threshold: Double = 0.3,
-                  bucketWidth: Int = 50, bucketCap: Int = 50): DataFrame = {
+                  bucketWidth: Int = 50,
+                  bucketCap: Int = 50): DataFrame = Materialize.checkpointed { scope =>
     import MinHashDedup.{bandsCount, rowsPerBand, numHashes, P}
     val sigs = documents
       .filter(length(col("text")) >= n)
@@ -141,11 +139,11 @@ object NgramJaccard {
       posexplode(array(bandKeys: _*)).as(Seq("band", "band_key")))
     val cand = MinHashDedup.pairsFromBuckets(
       banded, struct(col("lang"), col("len_bucket"), col("band")), col("band_key"), bucketCap)
-    val g = documents.select(
+    // cached: joined twice (doc_a / doc_b sides)
+    val g = scope.cache(documents.select(
       col("doc_id"), graft.functions.HashedNgrams.of(col("text"), n).as("grams"))
-      .withColumn("n_grams", size(col("grams")))
-      .cache()   // joined twice (doc_a / doc_b sides)
-    val result = cand
+      .withColumn("n_grams", size(col("grams"))))
+    cand
       .join(g.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"),
         col("n_grams").as("na")), "doc_a")
       .join(g.select(col("doc_id").as("doc_b"), col("grams").as("grams_b"),
@@ -157,9 +155,6 @@ object NgramJaccard {
         col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // materialize the (small) pair set, release the corpus-wide gram
-    // cache in a finally (the CorpusPipeline lifecycle; CacheHygieneSpec)
-    try result.localCheckpoint(true) finally g.unpersist()
   }
 
   /** DuckDB twin of [[pairsBanded]]: identical signatures, banding,

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,7 @@ object PageRank {
     *         `scale`, ties broken by node id
     */
   def ranks(edges: DataFrame, iterations: Int = 5, topK: Int = 100,
-            scale: Long = 1000000000000L): DataFrame = {
+            scale: Long = 1000000000000L): DataFrame = Materialize.scoped { scope =>
     // ONE pass over the (possibly expensive) edge-producing plan: the
     // out-degree rides an in-partition window on the src partitioning
     // the iterations need anyway — the groupBy+join formulation
@@ -47,32 +48,25 @@ object PageRank {
     // edges twice more (4 edge passes total; collapsing to one
     // measured 6.7 -> 5.6 s isolated at sf0.1's 2.4M-edge graph — the
     // remaining cost is the honest 5 supersteps over the cached edges)
-    val withDeg = edges
+    val withDeg = scope.cache(edges
       .repartition(col("src"))
       .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .cache()
-    val nodes = withDeg.select(col("src").as("node"))
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+    val nodes = scope.cache(withDeg.select(col("src").as("node"))
       .union(withDeg.select(col("dst").as("node")))
-      .distinct()
-      .cache()
-    // finally: the build caches release on every exit — the empty-graph
-    // early return, a mid-superstep exception, or the normal
-    // checkpointed finish (the cache-lifecycle contract, exception-safe
-    // since r15; CacheHygieneSpec pins the empty cache manager)
-    try {
-      // ONE scalar driver pull for the iterative fit (the AnnIvf-centroid
-      // license: a fixed handful of rows steering plan constants, never
-      // data). Folding n into literals removes five broadcast-nested-loop
-      // scalar joins from the superstep plans; the arithmetic is the same
-      // Long floor division the oracle's nn CTE performs.
-      val n = nodes.count()
-      if (n == 0L) {
-        // empty edge list: the operator's normal (node, rank) shape with
-        // zero rows — an upstream filter matching nothing must not kill
-        // the pipeline
-        return nodes.select(col("node"), lit(0L).as("rank"))
-      }
+      .distinct())
+    // ONE scalar driver pull for the iterative fit (the AnnIvf-centroid
+    // license: a fixed handful of rows steering plan constants, never
+    // data). Folding n into literals removes five broadcast-nested-loop
+    // scalar joins from the superstep plans; the arithmetic is the same
+    // Long floor division the oracle's nn CTE performs.
+    val n = nodes.count()
+    if (n == 0L) {
+      // empty edge list: the operator's normal (node, rank) shape with
+      // zero rows — an upstream filter matching nothing must not kill
+      // the pipeline
+      nodes.select(col("node"), lit(0L).as("rank"))
+    } else {
       val teleport = (scale * 15L) / (100L * n)
 
       var rank = nodes.select(col("node"), lit(scale / n).as("rank"))
@@ -96,12 +90,7 @@ object PageRank {
             s"${teleport}L + (85 * coalesce(in_sum, 0L)) DIV 100 AS rank")
           .localCheckpoint(true)
       }
-      // the final ranks are checkpointed — nothing lazy reads the build
-      // caches anymore
       rank.orderBy(col("rank").desc, col("node").asc).limit(topK)
-    } finally {
-      withDeg.unpersist()
-      nodes.unpersist()
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -285,55 +286,49 @@ object SimHash {
     * saturate at terrestrial corpus sizes) or pre-group by a cheap
     * family key before pigeonholing.
     */
-  def pairs(documents: DataFrame, maxHamming: Int = 3, bucketCap: Int = 50): DataFrame = {
+  def pairs(documents: DataFrame, maxHamming: Int = 3,
+            bucketCap: Int = 50): DataFrame = Materialize.checkpointed { scope =>
     val layout = blockLayout(maxHamming)
     val nBlocks = layout.size
-    val fpInts = fingerprints(documents)
+    val fpInts = scope.cache(fingerprints(documents)
       .select(col("doc_id") +: layout.zipWithIndex.map {
         case ((off, w), i) => blockInt(off, w).as(s"blk_$i")
-      }: _*)
-      .cache()
-    // the whole build releases the corpus-wide fingerprint cache in one
-    // finally — a failed materialization (or a saturation rejection)
-    // cannot leak it (the CorpusPipeline lifecycle; CacheHygieneSpec)
-    try {
-      // saturation guard (r20, measured — see [[defaultMaxOccupancyPerCap]]):
-      // mean bucket occupancy λ = n / 2^minWidth must stay under the
-      // bound × cap, else the cap silently drops the only routes
-      // near-duplicate pairs have. The count materializes the cache the
-      // self-join below reuses, so the extra job is ~free.
-      val nDocs = fpInts.count()
-      val minWidth = layout.map(_._2).min
-      val lambda = nDocs.toDouble / (1L << minWidth)
-      val bound = resolvedMaxOccupancyPerCap(documents.sparkSession)
-      require(bucketCap == Int.MaxValue || lambda <= bound * bucketCap,
-        f"simhash pairs: block space saturated — $nDocs docs over ${layout.size} " +
-          f"blocks of $minWidth bits gives mean bucket occupancy $lambda%.1f > " +
-          f"$bound x bucketCap=$bucketCap (measured collapse past this bound: " +
-          f"recall 0.95 at ratio 0.64, 0.686 at 0.96, 0.354 at 1.28 — " +
-          f"bench_records/r20_simhash_saturation.json). Use the MinHash banded " +
-          f"lane for corpora this size, pre-group by a family key, raise " +
-          f"bucketCap, or override spark.graft.simhash.maxOccupancyPerCap " +
-          f"after re-measuring")
-      val blocked = fpInts.select(
-        col("doc_id"), posexplode(array((0 until nBlocks).map(i => col(s"blk_$i")): _*))
-          .as(Seq("block", "block_val")))
-      // stop-bucket cap: a block value shared by thousands of docs (heavy
-      // shared vocabulary) contributes k^2 candidate pairs and almost no
-      // dedup signal — drop buckets above the cap (standard LSH practice;
-      // the oracle applies the identical cap). Pair generation is the
-      // single-shuffle bucket-collect ([[MinHashDedup.pairsFromBuckets]]).
-      val cand = MinHashDedup.pairsFromBuckets(blocked, col("block"), col("block_val"), bucketCap)
-      val withInts = cand
-        .join(fpInts.toDF("doc_a" +: (0 until nBlocks).map(i => s"a_$i"): _*), "doc_a")
-        .join(fpInts.toDF("doc_b" +: (0 until nBlocks).map(i => s"b_$i"): _*), "doc_b")
-      val hamming = (0 until nBlocks)
-        .map(i => bit_count(col(s"a_$i").bitwiseXOR(col(s"b_$i"))))
-        .reduce(_ + _)
-      withInts.withColumn("hamming", hamming)
-        .filter(col("hamming") <= maxHamming)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-        .localCheckpoint(true)
-    } finally fpInts.unpersist()
+      }: _*))
+    // saturation guard (r20, measured — see [[defaultMaxOccupancyPerCap]]):
+    // mean bucket occupancy λ = n / 2^minWidth must stay under the
+    // bound × cap, else the cap silently drops the only routes
+    // near-duplicate pairs have. The count materializes the cache the
+    // self-join below reuses, so the extra job is ~free.
+    val nDocs = fpInts.count()
+    val minWidth = layout.map(_._2).min
+    val lambda = nDocs.toDouble / (1L << minWidth)
+    val bound = resolvedMaxOccupancyPerCap(documents.sparkSession)
+    require(bucketCap == Int.MaxValue || lambda <= bound * bucketCap,
+      f"simhash pairs: block space saturated — $nDocs docs over ${layout.size} " +
+        f"blocks of $minWidth bits gives mean bucket occupancy $lambda%.1f > " +
+        f"$bound x bucketCap=$bucketCap (measured collapse past this bound: " +
+        f"recall 0.95 at ratio 0.64, 0.686 at 0.96, 0.354 at 1.28 — " +
+        f"bench_records/r20_simhash_saturation.json). Use the MinHash banded " +
+        f"lane for corpora this size, pre-group by a family key, raise " +
+        f"bucketCap, or override spark.graft.simhash.maxOccupancyPerCap " +
+        f"after re-measuring")
+    val blocked = fpInts.select(
+      col("doc_id"), posexplode(array((0 until nBlocks).map(i => col(s"blk_$i")): _*))
+        .as(Seq("block", "block_val")))
+    // stop-bucket cap: a block value shared by thousands of docs (heavy
+    // shared vocabulary) contributes k^2 candidate pairs and almost no
+    // dedup signal — drop buckets above the cap (standard LSH practice;
+    // the oracle applies the identical cap). Pair generation is the
+    // single-shuffle bucket-collect ([[MinHashDedup.pairsFromBuckets]]).
+    val cand = MinHashDedup.pairsFromBuckets(blocked, col("block"), col("block_val"), bucketCap)
+    val withInts = cand
+      .join(fpInts.toDF("doc_a" +: (0 until nBlocks).map(i => s"a_$i"): _*), "doc_a")
+      .join(fpInts.toDF("doc_b" +: (0 until nBlocks).map(i => s"b_$i"): _*), "doc_b")
+    val hamming = (0 until nBlocks)
+      .map(i => bit_count(col(s"a_$i").bitwiseXOR(col(s"b_$i"))))
+      .reduce(_ + _)
+    withInts.withColumn("hamming", hamming)
+      .filter(col("hamming") <= maxHamming)
+      .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -120,21 +121,20 @@ object Triangles {
   /** [[perNodeCapped]] over a pre-built simple undirected edge set —
     * same contract and rationale as [[perNodeOfSimpleUnd]].
     */
-  def perNodeCappedOfSimpleUnd(und: DataFrame, maxDegree: Long = 128L): DataFrame = {
-    val und0 = und.cache()
-    val deg0 = und0
-      .select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val keep = deg0.where(col("deg") <= maxDegree).select(col("node"))
-    val capped = und0
-      .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-      .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-    // countUnd materializes its result before returning, so nothing
-    // lazy reads und0 afterwards — release it in a finally so a failed
-    // count cannot leak it (CacheHygieneSpec)
-    try countUnd(capped, bloomLiteralMaxEdges)
-    finally und0.unpersist()
-  }
+  def perNodeCappedOfSimpleUnd(und: DataFrame, maxDegree: Long = 128L): DataFrame =
+    Materialize.scoped { scope =>
+      val und0 = scope.cache(und)
+      val deg0 = und0
+        .select(explode(array(col("u"), col("v"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      val keep = deg0.where(col("deg") <= maxDegree).select(col("node"))
+      val capped = und0
+        .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+      // countUnd materializes its result before returning, so nothing
+      // lazy reads und0 once the scope releases it
+      countUnd(capped, bloomLiteralMaxEdges)
+    }
 
   /** Above this oriented-edge count the closure filter stops embedding
     * the Bloom sketch as a PLAN LITERAL (see the branch comment in
@@ -318,28 +318,22 @@ object Triangles {
       .where(col("u") =!= col("v"))
       .distinct()
 
-  private def countUnd(und0: DataFrame, bloomMaxEdges: Long): DataFrame = {
+  private def countUnd(und0: DataFrame,
+                       bloomMaxEdges: Long): DataFrame = Materialize.checkpointed { scope =>
     // und feeds deg TWICE (du and dv joins) plus the orientation join:
     // uncached, the whole edge-producing subtree (for the co-purchase
     // graph, a lineitem self-join) re-evaluates three times in the
     // executed plan (seen live: three BroadcastHashJoins on l_orderkey).
     // Cache both build frames, materialize the oriented list, release —
     // the PageRank one-pass lesson applied to the orientation build.
-    val und = und0.cache()
-    val deg = und
+    val und = scope.cache(und0)
+    val deg = scope.cache(und
       .select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .cache()
-    // finally: und/deg release EARLY on the success path (right after
-    // the oriented list materializes, as before) and the finally's
-    // idempotent re-unpersist only matters on an exception, where it
-    // releases whichever build caches are still live (r15)
-    var oriented: DataFrame = null
-    try {
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
 
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    oriented = und
+    val oriented = scope.cache(und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
       .select(
@@ -359,15 +353,14 @@ object Triangles {
       // SMJ sorts vanish (r20 opt: ProbeIterJoin2 measured the wedge
       // stage 6.00 -> 4.42 s at the sf0.1 co-purchase graph; the same
       // sorted-cache idiom as LabelPropagation/BfsHops adjacency)
-      .sortWithinPartitions(col("src"))
-      .cache()
+      .sortWithinPartitions(col("src")))
     // materialize the oriented list, then release the build-only frames
     // (everything downstream — both wedge sides and the closing probe —
     // reads the oriented cache alone); the count also sizes the closure
     // Bloom filter below (a plan constant, the AnnIvf-centroid license)
     val m = oriented.count()
-    und.unpersist()
-    deg.unpersist()
+    scope.release(und)
+    scope.release(deg)
 
     val x = oriented.select(col("src"), col("dst").as("a"), col("ddeg").as("da"))
     val y = oriented.select(col("src"), col("dst").as("b"), col("ddeg").as("db"))
@@ -465,13 +458,9 @@ object Triangles {
         wedgeKeys.join(closing.hint("shuffle_hash"), Seq("a", "b"))
       }
 
-    // materialize the per-node counts (a localCheckpoint: blocks are
-    // ContextCleaner-managed, freed when the caller drops the frame),
-    // then release the oriented cache — the one build frame still held.
-    // Without this, every perNode() call leaked its oriented list into
-    // the caller's session (CacheHygieneSpec pins the empty manager).
-    // The checkpoint takes the UNSORTED aggregate and the global sort is
-    // returned lazily OVER the checkpoint: checkpointing after the
+    // the per-node counts are checkpointed before the oriented cache is
+    // released. The checkpoint takes the UNSORTED aggregate and the global
+    // sort is returned lazily OVER the checkpoint: checkpointing after the
     // orderBy forced the range-partitioned sort — and its range-boundary
     // sampling pass, which re-executes the whole final wedge-join stage —
     // inside the operator, measured at 1.4× the whole query's cost at
@@ -479,17 +468,10 @@ object Triangles {
     // counts or joins skips the sort entirely (as before the cache-release
     // contract); a caller that writes ordered output sorts 1 row per node,
     // never the wedge stream.
-    val counts = tri
+    tri
       .select(explode(array(col("src"), col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint(true)
-    counts.orderBy(col("node"))
-    } finally {
-      und.unpersist()
-      deg.unpersist()
-      if (oriented != null) oriented.unpersist()
-    }
-  }
+  }.orderBy(col("node"))
 
   /** DuckDB twin over an `edges(src, dst)` CTE the caller prepends:
     * the id-ordered triple join enumerates each triangle once as

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -255,35 +256,30 @@ object AlsTwin {
     */
   def recommend(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    // finally: every path (empty-fit early return, a mid-fit exception,
-    // the normal checkpoint) releases the ratings cache — the
-    // exception-safe half of the cache-lifecycle contract (r15)
-    val rat = ratingsInt(orders, lineitem).cache()
-    try {
+    Materialize.checkpointed { scope =>
+      val rat = scope.cache(ratingsInt(orders, lineitem))
       val fitRows: Array[Array[Long]] = rat
         .orderBy(col("custkey"), col("partkey")).limit(maxFitRows)
         .collect()
         .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2)))
-      if (fitRows.isEmpty) {
-        val out = rat.select(col("custkey"), col("partkey"),
-          lit(0L).as("pred"), lit(0).as("rn")).limit(0).localCheckpoint(true)
-        return out.orderBy(col("custkey"), col("partkey"))
+      if (fitRows.isEmpty)
+        rat.select(col("custkey"), col("partkey"),
+          lit(0L).as("pred"), lit(0).as("rn")).limit(0)
+      else {
+        val (uf, itf) = fit(fitRows)
+        val ufDf = spark.createDataFrame(uf.toIndexedSeq).toDF("custkey", "x1", "x2")
+        val ifDf = spark.createDataFrame(itf.toIndexedSeq).toDF("partkey", "y1", "y2")
+        val scored = rat
+          .join(broadcast(ufDf), Seq("custkey"))
+          .join(broadcast(ifDf), Seq("partkey"))
+          .withColumn("pred", col("x1") * col("y1") + col("x2") * col("y2"))
+        val w = Window.partitionBy(col("custkey"))
+          .orderBy(col("pred").desc, col("partkey").asc)
+        scored.withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= TopN)
+          .select(col("custkey"), col("partkey"), col("pred"), col("rn"))
       }
-      val (uf, itf) = fit(fitRows)
-      val ufDf = spark.createDataFrame(uf.toIndexedSeq).toDF("custkey", "x1", "x2")
-      val ifDf = spark.createDataFrame(itf.toIndexedSeq).toDF("partkey", "y1", "y2")
-      val scored = rat
-        .join(broadcast(ufDf), Seq("custkey"))
-        .join(broadcast(ifDf), Seq("partkey"))
-        .withColumn("pred", col("x1") * col("y1") + col("x2") * col("y2"))
-      val w = Window.partitionBy(col("custkey"))
-        .orderBy(col("pred").desc, col("partkey").asc)
-      val res = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= TopN)
-        .select(col("custkey"), col("partkey"), col("pred"), col("rn"))
-        .localCheckpoint(true)
-      res.orderBy(col("custkey"), col("partkey"))
-    } finally rat.unpersist()
+    }.orderBy(col("custkey"), col("partkey"))
   }
 
   /** DuckDB oracle: the full factorization — integer ratings, bounded

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.ml.fpm.FPGrowth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,11 +36,8 @@ object BasketItemsets {
     val fp = new FPGrowth().setItemsCol("items")
       .setMinSupport(minSupport).setMinConfidence(0.1)
     // the fit is eager and the model holds its own itemsets frame, so
-    // the basket cache releases as soon as training returns — in a
-    // finally, so a failed fit cannot leak it (CacheHygieneSpec pins
-    // the empty CacheManager)
-    val b = baskets(lineitem).cache()
-    val model = try fp.fit(b) finally b.unpersist()
+    // the basket cache releases as soon as training returns
+    val model = Materialize.scoped(scope => fp.fit(scope.cache(baskets(lineitem))))
     model.freqItemsets
       .filter(size(col("items")) <= maxSize)
       .select(array_join(sort_array(col("items")), ",").as("itemset"), col("freq"))
@@ -96,8 +94,7 @@ object BasketItemsets {
                        minConfidence: Double = 0.1): DataFrame = {
     val fp = new FPGrowth().setItemsCol("items")
       .setMinSupport(minSupport).setMinConfidence(minConfidence)
-    val b = baskets(lineitem).cache()
-    val model = try fp.fit(b) finally b.unpersist()
+    val model = Materialize.scoped(scope => fp.fit(scope.cache(baskets(lineitem))))
     model.associationRules
       .filter(size(col("antecedent")) === 1 && size(col("consequent")) === 1)
       .select(

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
@@ -67,9 +68,10 @@ object ChurnPipeline {
     * asserted within tolerance in tests per SURVEY §5).
     */
   def metrics(customer: DataFrame, orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val ex = examples(customer, orders, lineitem).cache()
-    // eager: fit + AUC + counts all materialize inside the try
-    val r = try fitEvaluate(ex) finally ex.unpersist()
+    // eager: fit + AUC + counts all materialize inside the scope
+    val r = Materialize.scoped { scope =>
+      fitEvaluate(scope.cache(examples(customer, orders, lineitem)))
+    }
     val spark = customer.sparkSession
     import spark.implicits._
     Seq((r.auc, r.train, r.test)).toDF("auc", "n_train", "n_test")

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -184,32 +185,26 @@ object ChurnTree {
 
   /** Per-example churn-tree scores under the deterministic fit. The
     * result materializes UNSORTED as a ContextCleaner-managed checkpoint
-    * and the feature cache is released before return (the cache-release
-    * contract); the global sort is returned lazily over the checkpoint.
+    * and the feature cache is released before return
+    * ([[Materialize.checkpointed]]); the global sort is returned lazily
+    * over the checkpoint.
     */
   def scores(customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
-             window: Int = 30): DataFrame = {
-    // finally: every path (empty-fit early return, a mid-fit exception,
-    // the normal checkpoint) releases the feature cache (r15)
-    val ex = features(customer, orders, lineitem, window).cache()
-    try {
+             window: Int = 30): DataFrame =
+    Materialize.checkpointed { scope =>
+      val ex = scope.cache(features(customer, orders, lineitem, window))
       val fitRows: Array[Array[Long]] = ex
         .orderBy(col("custkey"), col("partkey")).limit(maxFitRows)
         .select(col("f1"), col("f2"), col("f3"), col("label"))
         .collect()
         .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      if (fitRows.isEmpty) {
-        val out = assign(ex, Tree(Split(1, 0L), Split(1, 0L), Split(1, 0L),
-          new Array[Long](4), new Array[Long](4))).limit(0).localCheckpoint(true)
-        // same ordered-output contract as the normal path (uniform even
-        // though the frame is empty today)
-        return out.orderBy(col("custkey"), col("partkey"))
-      }
-      val tree = fit(fitRows)
-      val res = assign(ex, tree).localCheckpoint(true)
-      res.orderBy(col("custkey"), col("partkey"))
-    } finally ex.unpersist()
-  }
+      // the empty fit keeps the same ordered-output contract as the
+      // normal path (uniform even though the frame is empty today)
+      if (fitRows.isEmpty)
+        assign(ex, Tree(Split(1, 0L), Split(1, 0L), Split(1, 0L),
+          new Array[Long](4), new Array[Long](4))).limit(0)
+      else assign(ex, fit(fitRows))
+    }.orderBy(col("custkey"), col("partkey"))
 
   /** DuckDB oracle: the full pipeline — repurchase label, integer
     * features, rank-quantile candidates, the three Gini split searches

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -161,9 +162,9 @@ object Recommender {
     val bucket = pmod(
       conv(substring(md5(concat_ws(":", col("user"), col("item")).cast("binary")), 1, 12), 16, 10)
         .cast("long"), lit(100L))
-    val withBucket = ratings.withColumn("bucket", bucket).cache()
-    val train = withBucket.filter(col("bucket") < trainPct).drop("bucket").cache()
-    try {
+    Materialize.scoped { scope =>
+      val withBucket = scope.cache(ratings.withColumn("bucket", bucket))
+      val train = scope.cache(withBucket.filter(col("bucket") < trainPct).drop("bucket"))
       val test = withBucket.filter(col("bucket") >= trainPct).drop("bucket")
       val model = als(seed).fit(train)
       val ranked = model.recommendForAllUsers(candidatePool)
@@ -177,7 +178,7 @@ object Recommender {
       val hits = test.join(top, Seq("user", "item"), "left_semi").count()
       val total = test.count()
       if (total == 0) 0.0 else hits.toDouble / total
-    } finally { train.unpersist(); withBucket.unpersist() }
+    }
   }
 
   def holdoutMetricsOf(ratings: DataFrame, n: Int = 5,
@@ -185,14 +186,13 @@ object Recommender {
     val bucket = pmod(
       conv(substring(md5(concat_ws(":", col("user"), col("item")).cast("binary")), 1, 12), 16, 10)
         .cast("long"), lit(100L))
-    val withBucket = ratings.withColumn("bucket", bucket).cache()
-    val train = withBucket.filter(col("bucket") < trainPct).drop("bucket").cache()
-    var recs: DataFrame = null
-    try {
+    Materialize.scoped { scope =>
+      val withBucket = scope.cache(ratings.withColumn("bucket", bucket))
+      val train = scope.cache(withBucket.filter(col("bucket") < trainPct).drop("bucket"))
       val test = withBucket.filter(col("bucket") >= trainPct).drop("bucket")
       val model = als(seed).fit(train)
-      recs = model.recommendForAllUsers(n)
-        .select(col("user"), explode(col("recommendations.item")).as("item")).cache()
+      val recs = scope.cache(model.recommendForAllUsers(n)
+        .select(col("user"), explode(col("recommendations.item")).as("item")))
       val hits = test.join(recs, Seq("user", "item"), "left_semi").count()
       val total = test.count()
       val hitRate = if (total == 0) 0.0 else hits.toDouble / total
@@ -205,9 +205,6 @@ object Recommender {
         .agg(avg(col("count"))).head().getDouble(0)
       val randomPrecision = avgTrainPerUser / catalog
       (hitRate, if (randomPrecision == 0.0) 0.0 else trainPrecision / randomPrecision)
-    } finally {
-      if (recs != null) recs.unpersist()
-      train.unpersist(); withBucket.unpersist()
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -104,23 +105,18 @@ object SegmentationAutoK {
     * WSSSE and quantized silhouette sum, plus `selected` = 1 on the
     * reference's choice (max silhouette, ties → lower WSSSE → lower K).
     * The per-K frames materialize as one 7-row checkpoint before the
-    * build cache is released (cache-lifecycle contract).
+    * build cache is released ([[Materialize.checkpointed]]).
     */
   def report(customer: DataFrame, orders: DataFrame, kMin: Int = 2,
              kMax: Int = 8, iters: Int = 3): DataFrame = {
-    val q = SegmentationLloyd.quantized(
-      SegmentationPipeline.features(customer, orders)).cache()
-    // finally: an exception mid-sweep (7 fits + 7 aggregate passes hold
-    // the cache open) must not leave a CacheManager entry behind — the
-    // cache-lifecycle contract CacheHygieneSpec enforces
-    val crit =
-      try {
-        val sample = SegmentationLloyd.collectFitSample(q)
-        (kMin to kMax)
-          .map(k => critFrame(q, k, SegmentationLloyd.fitLloydData(sample, k, iters)))
-          .reduce(_.unionByName(_))
-          .localCheckpoint(true)
-      } finally q.unpersist()
+    val crit = Materialize.checkpointed { scope =>
+      val q = scope.cache(SegmentationLloyd.quantized(
+        SegmentationPipeline.features(customer, orders)))
+      val sample = SegmentationLloyd.collectFitSample(q)
+      (kMin to kMax)
+        .map(k => critFrame(q, k, SegmentationLloyd.fitLloydData(sample, k, iters)))
+        .reduce(_.unionByName(_))
+    }
     // the ranking runs over a (kMax-kMin+1)-row checkpointed frame — the
     // single-partition window is free here
     val w = Window.orderBy(col("sil_q").desc, col("wssse_dec").asc, col("k").asc)

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -162,16 +163,15 @@ object SegmentationLloyd {
 
   /** Per-customer segment under the deterministic Lloyd fit. The result
     * materializes UNSORTED as a ContextCleaner-managed checkpoint (the
-    * cache-release contract; the g2 lesson — callers that count or join
-    * pay no sort) and the build cache is released before return.
+    * g2 lesson — callers that count or join pay no sort) and the build
+    * cache is released before return ([[Materialize.checkpointed]]).
     */
   def segments(customer: DataFrame, orders: DataFrame, k: Int = 4,
                iters: Int = 3): DataFrame = {
-    val q = quantized(SegmentationPipeline.features(customer, orders)).cache()
-    val res =
-      try assign(q, fitLloyd(q, k, iters)).localCheckpoint(true)
-      finally q.unpersist()
-    res.orderBy(col("custkey"))
+    Materialize.checkpointed { scope =>
+      val q = scope.cache(quantized(SegmentationPipeline.features(customer, orders)))
+      assign(q, fitLloyd(q, k, iters))
+    }.orderBy(col("custkey"))
   }
 
   /** DuckDB oracle: the full pipeline — RFM features, max-abs

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Materialize
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
@@ -55,18 +56,19 @@ object SegmentationPipeline {
       .setWithStd(true).setWithMean(false)
     val evaluator = new ClusteringEvaluator().setFeaturesCol("features")
       .setPredictionCol("prediction").setMetricName("silhouette")
-    val cached = features.cache()
-    // every fit/evaluate is eager — release the feature cache in a
-    // finally (a failed fit must not leak it into the caller's session)
-    val fits =
-      try ks.map { k =>
+    // every fit/evaluate is eager, so the feature cache releases when
+    // the sweep returns
+    val fits = Materialize.scoped { scope =>
+      val cached = scope.cache(features)
+      ks.map { k =>
         val km = new KMeans().setK(k).setSeed(seed).setFeaturesCol("features")
         val model = new Pipeline().setStages(Array(assembler, scaler, km)).fit(cached)
         val assigned = model.transform(cached)
         val sil = evaluator.evaluate(assigned)
         val wssse = model.stages.last.asInstanceOf[KMeansModel].summary.trainingCost
         Fitted(model, k, sil, wssse)
-      } finally cached.unpersist()
+      }
+    }
     fits.maxBy(f => (f.silhouette, -f.wssse))
   }
 

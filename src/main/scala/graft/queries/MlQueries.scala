@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Catalog
+import graft.core.{Catalog, Materialize}
 import graft.ml._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -91,8 +91,8 @@ object MlQueries {
       ((s: SparkSession, d: String) => {
         import org.apache.spark.sql.functions._
         val c = Catalog(s, d)
-        val f = SegmentationPipeline.features(c.customer, c.orders).cache()
-        try {
+        Materialize.checkpointed { scope =>
+          val f = scope.cache(SegmentationPipeline.features(c.customer, c.orders))
           val model = SegmentationPipeline.fitFixedK(f, 4)
           val digest = java.security.MessageDigest.getInstance("MD5")
             .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -117,17 +117,14 @@ object MlQueries {
             else memCenters.zip(loadedCenters).count { case (a, b) => a != b }.toLong
           val mem = model.transform(f).select(col("custkey"), col("prediction").as("p_mem"))
           val re = loaded.transform(f).select(col("custkey"), col("prediction").as("p_loaded"))
-          // one-row comparison result: materialize it, release the
-          // feature cache in the finally (CacheHygieneSpec pins the
-          // empty manager, now on the failure path too)
+          // one-row comparison result
           mem.join(re, Seq("custkey"))
             .agg(
               count(lit(1)).as("n_scored"),
               coalesce(sum(when(col("p_mem") =!= col("p_loaded"), 1L).otherwise(0L)),
                 lit(0L)).as("n_mismatch"))
             .withColumn("n_centers_mismatch", lit(nCentersMismatch))
-            .localCheckpoint(true)
-        } finally f.unpersist()
+        }
       }),
       // n_scored replays the feature-frame row count (the acctbal
       // domain filter mirrors SegmentationPipeline.features and the

@@ -1,25 +1,63 @@
 package graft
 
+import graft.core.Materialize
 import org.apache.spark.sql.GraftSessionBridge
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Operator cache lifecycle: every multi-pass operator must release the
   * caches it takes before returning. A CacheManager entry is never
   * reclaimed automatically — in a long-lived session composing
   * operators, one leaked build cache per call accumulates until
-  * executors spill or OOM. The contract the graph/cluster family
-  * follows (the DedupClusters lifecycle): iterative state lives as
-  * `localCheckpoint`s (ContextCleaner-managed, freed on GC), build
-  * frames (`adjacency`, `oriented`, gram caches) are `unpersist`ed once
-  * the result is materialized, and the CacheManager is EMPTY when the
-  * operator returns.
+  * executors spill or OOM. Every operator cache is taken in a
+  * [[graft.core.Materialize]] scope, which releases it on exit;
+  * iterative state lives as `localCheckpoint`s (ContextCleaner-managed,
+  * freed on GC), so the CacheManager is EMPTY when the operator returns.
+  * The first cases pin the primitive itself; the rest pin the operators.
   *
   * The CacheManager is per-SharedState (one per JVM here), so each
   * check clears residue from other suites first — the assertion is then
   * exactly "this query added nothing that survived its own completion".
   */
 class CacheHygieneSpec extends AnyFunSuite with SharedSpark {
+
+  test("Materialize.scoped: a throwing body releases every cache it still holds") {
+    spark.catalog.clearCache()
+    intercept[IllegalStateException] {
+      Materialize.scoped { scope =>
+        val a = scope.cache(spark.range(10).toDF("a"))
+        val b = scope.cache(spark.range(20).toDF("b"))
+        scope.release(a)
+        scope.release(a) // idempotent
+        assert(a.storageLevel == StorageLevel.NONE && b.storageLevel != StorageLevel.NONE,
+          "release(a) must free a alone")
+        throw new IllegalStateException("body throws while b is held")
+      }
+    }
+    assert(GraftSessionBridge.cacheManagerIsEmpty(spark),
+      "the scope's exit did not release the cache still held when its body threw")
+  }
+
+  test("Materialize.checkpointed: the result reads no cache and keeps the body's rows") {
+    spark.catalog.clearCache()
+    var bodyRows = -1L
+    val out = Materialize.checkpointed { scope =>
+      val c = scope.cache(spark.range(1000).withColumn("k", col("id") % 7))
+      val res = c.join(c.groupBy(col("k")).count(), "k").where(col("id") % 3 === 0)
+      bodyRows = res.count()
+      res
+    }
+    assert(GraftSessionBridge.cacheManagerIsEmpty(spark))
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collect { case r: InMemoryRelation => r }.isEmpty,
+      s"the checkpointed result still reads a cache:\n$plan")
+    assert(plan.collect { case r: LogicalRDD => r }.nonEmpty,
+      s"the result is not a checkpoint:\n$plan")
+    assert(bodyRows == 334L && out.count() == bodyRows)
+  }
 
   private val queries = Seq(
     "g1_pagerank",        // PageRank: withDeg + nodes build caches
@@ -124,14 +162,11 @@ class CacheHygieneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("a throw DURING a round's convergence probe releases the in-flight cache") {
-    // the r16 advisor note: with checkpointEvery > 1 a round's next frame
-    // is a .cache() whose CacheManager entry registers eagerly but
-    // materializes inside the probe count — a throw THERE (modeled with a
-    // pair column that throws on evaluation, standing in for executor
-    // loss or a hostile row) used to leak it, because the outer catch only
-    // covers the `labels` var, which is still the previous round's frame
-    // at probe time. maxIter=0 (the test above) never runs a round, so
-    // only this mid-probe path exercises the inner release.
+    // a throw inside a round (modeled with a pair column that throws on
+    // evaluation, standing in for executor loss or a hostile row) lands
+    // in round 0's eager checkpoint, while the pair, edge and seed-label
+    // caches are registered. maxIter=0 (the test above) never runs a
+    // round, so only this path throws with a round in flight.
     import spark.implicits._
     spark.catalog.clearCache()
     val docs = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
@@ -139,19 +174,17 @@ class CacheHygieneSpec extends AnyFunSuite with SharedSpark {
       if (x >= 0) throw new RuntimeException("probe-time boom") else x)
     // the pair frame must NOT be a LocalRelation: ConvertToLocalRelation
     // evaluates deterministic expressions (UDFs included) at PLANNING
-    // time, which would throw inside pairsC.cache()'s plan compilation —
+    // time, which would throw inside the pair cache's plan compilation —
     // before any cache registers — and make this test vacuously green. A
     // Range leaf keeps the UDF a runtime expression, so the throw lands
-    // inside the round-0 probe count with all four caches registered.
+    // inside round 0 with all three caches registered.
     val pairs = spark.range(1)
       .select(lit(1L).as("doc_a"), boom(col("id") + 2L).as("doc_b"))
     intercept[Exception] { QuietExpectedThrows {
-      graft.ext.DedupClusters.components(docs, pairs, maxIter = 5,
-        checkpointEvery = 3)
+      graft.ext.DedupClusters.components(docs, pairs, maxIter = 5)
     } }
     assert(GraftSessionBridge.cacheManagerIsEmpty(spark),
-      "a throw inside the round-0 probe count leaked the in-flight round " +
-        "cache (or a build cache) past the operator's release paths")
+      "a throw inside round 0 leaked a build cache past the operator's scope")
   }
 
   test("a rejected LabelPropagation input releases the adjacency cache") {

@@ -161,11 +161,12 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     // the shipped plan must carry the compiled expression instead.
     // pairs() checkpoints its result (the executed plan the registry
     // returns is an RDD scan), so the shape pin reads the
-    // pre-materialization compute plan:
-    val p = graft.ext.ContainmentJoin
-      .pairsCompute(core.Catalog(spark, sf).documents)
-      .queryExecution.executedPlan.toString
-    spark.catalog.clearCache() // pairsCompute leaves the gram cache registered
+    // pre-materialization compute plan, its gram cache held by the scope:
+    val p = core.Materialize.scoped { scope =>
+      graft.ext.ContainmentJoin
+        .pairsCompute(scope, core.Catalog(spark, sf).documents)
+        .queryExecution.executedPlan.toString
+    }
     assert(p.contains("word_gram_hashes"), s"native word-gram expression not in plan:\n$p")
     assert(!p.contains("CartesianProduct"), s"containment join went cartesian:\n$p")
   }
