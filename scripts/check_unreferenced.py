@@ -33,6 +33,14 @@ scope exits (returning or throwing), so CacheHygieneSpec's empty
 CacheManager holds by construction. Comments and string literals are
 not searched; any other call site is flagged.
 
+One streaming run lifecycle: `.writeStream`, `processAllAvailable(`
+and `newSession(` may appear in src/main code only in
+streaming/StreamRunner.scala. Every run-to-completion stream runs on
+the gate session the runner clones (the caller's runtime SQL conf plus
+the state-partition bound), is started, drained and stopped there, and
+comes back emission-checked. Comments and string literals are not
+searched; any other site is flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -62,6 +70,9 @@ BUILDER_RE = re.compile(r"SparkSession\s*\.\s*builder")
 
 CACHE_HOME = os.path.join("src", "main", "scala", "graft", "core", "Materialize.scala")
 CACHE_RE = re.compile(r"\.\s*(?:cache\(\)|persist\(|unpersist\()")
+
+STREAM_HOME = os.path.join("src", "main", "scala", "graft", "streaming", "StreamRunner.scala")
+STREAM_RE = re.compile(r"\.\s*writeStream\b|\bprocessAllAvailable\(|\bnewSession\(")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
 LEXEME_RE = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
@@ -78,6 +89,20 @@ LIVING_DOCS = ("README.md", "SCALING.md", "COVERAGE.md")
 MAIN_OBJECT_RE = re.compile(r"^object\s+(\w+)[^\n]*?\{(?:(?!^object\s).)*?\bdef main\(", re.M | re.S)
 
 DEF_RE = re.compile(r"^(  |\t)(?:final |implicit |@\w+ )*def ([A-Za-z_][A-Za-z0-9_]*)")
+
+
+def confined_outside(home, pattern):
+    """`file:line` of every match of `pattern` in src/main code outside `home`."""
+    sites = []
+    for path in sorted(scala_files(os.path.join(ROOT, "src", "main"))):
+        rel = os.path.relpath(path, ROOT)
+        if rel == home:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            code = code_only(fh.read())
+        for m in pattern.finditer(code):
+            sites.append(f"{rel}:{code.count(chr(10), 0, m.start()) + 1}")
+    return sites
 
 
 def scala_files(base):
@@ -134,15 +159,8 @@ def main():
             line = text.count("\n", 0, m.start()) + 1
             builders.append(f"{rel}:{line}")
 
-    caches = []
-    for path in sorted(scala_files(os.path.join(ROOT, "src", "main"))):
-        rel = os.path.relpath(path, ROOT)
-        if rel == CACHE_HOME:
-            continue
-        with open(path, encoding="utf-8") as fh:
-            code = code_only(fh.read())
-        for m in CACHE_RE.finditer(code):
-            caches.append(f"{rel}:{code.count(chr(10), 0, m.start()) + 1}")
+    caches = confined_outside(CACHE_HOME, CACHE_RE)
+    streams = confined_outside(STREAM_HOME, STREAM_RE)
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -164,6 +182,10 @@ def main():
         print(f"cache/persist/unpersist outside {CACHE_HOME} (use Materialize.scoped):")
         for site in caches:
             print(f"  {site}")
+    if streams:
+        print(f"writeStream/processAllAvailable/newSession outside {STREAM_HOME} (use StreamRunner):")
+        for site in streams:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -173,7 +195,7 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or caches or stray_mains:
+    if flagged or builders or caches or streams or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -130,6 +130,18 @@ object Scratch {
     p.toString
   }
 
+  /** Name of a per-sf scratch entry: `tag`, the sanitized `sf` path
+    * (readability) and the full md5 of the raw path (collision-freedom).
+    * Sanitization alone is not injective (`/a/b` and `/a_b` both
+    * sanitize to `_a_b`), and a 32-bit hashCode could collide silently
+    * once memoized.
+    */
+  def stagingName(tag: String, sf: String): String = {
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"${tag}_${sf.replaceAll("[^A-Za-z0-9._-]", "_")}_$digest"
+  }
+
   /** Path under the process root, NOT pre-created — for sinks whose
     * writers own directory creation (parquet/checkpoint writers).
     */

@@ -137,26 +137,6 @@ object ExtensionQueries {
     }
   }
 
-  /** State partitioning for the run-to-completion streaming gates:
-    * min(4, cores). The gates hold kilobytes of state, so the batch
-    * session's shuffle default buys pure state-store bring-up (the r18
-    * e6/e12 finding, generalized to all eight gates in r20 —
-    * OPTIMIZATION_r20.md: e7 3.27→2.07 s, e8 1.19→0.86 s at 32→8 on 32
-    * cores) — but a FIXED bound over-partitions low-core runs: at 4
-    * cores the 8-partition arm measured e7 +26 % / e8 +25 % vs
-    * inheriting the session's 4 (two task waves per stateful stage per
-    * micro-batch). The bound retuned 8→4 in r21 (OPTIMIZATION_r21.md,
-    * interleaved min-of-3 over all eight gates at 32 AND 8 cores: 4
-    * wins or ties every gate at both — e6 3.34→2.57, e12 3.25→2.73,
-    * e10 3.22→2.82 s at 32 cores; family mins 17.1→14.9 s — and 2 was
-    * measured noise-equal to 4 on e6, so 4 keeps the headroom).
-    * min(volume-bound, cores) keeps the win at every core count the
-    * scaling sweep measures; real deployments with real state volume
-    * pass None and size the session conf instead.
-    */
-  private def gateStateParts(s: SparkSession): Int =
-    math.min(4, s.sparkContext.defaultParallelism)
-
   /** The events table staged into a scratch DIRECTORY (the file-stream
     * source requires one), memoized per sf path so the copy is paid once
     * per process — NOT inside e4's timed bench window, whose min-of-N
@@ -179,18 +159,12 @@ object ExtensionQueries {
   private val stagedEvents = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedEventsDir(s: SparkSession, d: String): String =
     stagedEvents.getOrElseUpdate(d, {
-      // dir name = sanitized path (readability) + full md5 of the RAW
-      // path (collision-freedom): sanitization alone is not injective
-      // (/a/b and /a_b both sanitize to a_b), and a 32-bit hashCode
-      // could collide silently once memoized
       // under the per-process Scratch root: concurrent harness processes
       // on the same sf never share (or race) a staged copy — the memo
       // above still pays the copy once per process (r15, the mm3
       // cross-process finding generalized)
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val dir = java.nio.file.Paths.get(graft.core.Scratch.dir(
-        "e4_events_" + d.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + digest))
+        graft.core.Scratch.stagingName("e4_events", d)))
       val rw = dir.toString + "_rw"
       s.read.parquet(s"$d/events.parquet").coalesce(1)
         .write.mode("overwrite").parquet(rw)
@@ -211,10 +185,8 @@ object ExtensionQueries {
   private val stagedDupDocs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedDupDocsDir(s: SparkSession, d: String): String =
     stagedDupDocs.getOrElseUpdate(d, {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val dir = java.nio.file.Paths.get(graft.core.Scratch.dir(
-        "e8_docs_" + d.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + digest))
+        graft.core.Scratch.stagingName("e8_docs", d)))
       stageParquetPayload(
         java.nio.file.Paths.get(s"$d/documents.parquet"), dir, "batch0_")
       val slice = dir.toString + "_slice"
@@ -241,10 +213,8 @@ object ExtensionQueries {
   private val stagedSplitEvents = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def stagedSplitEventFiles(s: SparkSession, d: String): (String, String) =
     stagedSplitEvents.getOrElseUpdate(d, {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val base = java.nio.file.Paths.get(graft.core.Scratch.path(
-        "e10_split_" + d.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + digest))
+        graft.core.Scratch.stagingName("e10_split", d)))
       val cut = to_timestamp(lit("2024-01-16 00:00:00")) // UTC session frame
       val raw = graft.core.EventTime.normalizeTs(s.read.parquet(s"$d/events.parquet"))
       def half(name: String, pred: org.apache.spark.sql.Column): String = {
@@ -739,8 +709,7 @@ object ExtensionQueries {
     // the running sum is arrival-order-independent)
     "e4_stateful_totals" -> (
       ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.runStatefulToCompletion(s, stagedEventsDir(s, d),
-          statePartitions = Some(gateStateParts(s)))),
+        graft.streaming.EventStream.runStatefulToCompletion(s, stagedEventsDir(s, d))),
       Some("""SELECT user_id, count(*) AS n_events,
              |  CAST(COALESCE(SUM(CAST(floor(value * 10000) AS BIGINT)), 0) AS DOUBLE) / 10000 AS total_value
              |FROM events GROUP BY user_id""".stripMargin)),
@@ -750,10 +719,7 @@ object ExtensionQueries {
     // the batch interval join exactly — no watermark cutoff
     "e6_stream_stream_join" -> (
       ((s: SparkSession, d: String) =>
-        // bounded state partitions: the gate's join state is kilobytes, and a
-        // stream-stream join opens 4 state stores per partition per side
-        graft.streaming.EventStream.runAttributionToCompletion(
-          s, stagedEventsDir(s, d), 30, statePartitions = Some(gateStateParts(s)))),
+        graft.streaming.EventStream.runAttributionToCompletion(s, stagedEventsDir(s, d), 30)),
       Some("""SELECT a.user_id,
              |  a.event_id AS view_event_id, b.event_id AS purchase_event_id,
              |  a.ts AS view_ts, b.ts AS purchase_ts
@@ -773,8 +739,7 @@ object ExtensionQueries {
     "e12_stream_outer_join" -> (
       ((s: SparkSession, d: String) =>
         graft.streaming.EventStream.runAttributionToCompletion(
-          s, stagedEventsDir(s, d), 30, queryName = "graft_stream_e12",
-          statePartitions = Some(gateStateParts(s)), joinType = "left_outer")),
+          s, stagedEventsDir(s, d), 30, joinType = "left_outer")),
       Some("""WITH mx AS (
              |  SELECT least(
              |    (SELECT epoch_us(max(ts)) // 1000 FROM events WHERE event_type = 'view'),
@@ -808,8 +773,7 @@ object ExtensionQueries {
     "e7_stream_file_sink" -> (
       ((s: SparkSession, d: String) =>
         graft.streaming.EventStream.runHourlyToParquet(
-          s, stagedEventsDir(s, d),
-          graft.core.Scratch.path("e7_sink"), statePartitions = Some(gateStateParts(s)))),
+          s, stagedEventsDir(s, d), graft.core.Scratch.path("e7_sink"))),
       Some("""SELECT date_trunc('hour', ts) AS hour, event_type,
              |  count(*) AS n_events,
              |  CAST(CAST(SUM(CAST(CASE WHEN value IS NULL OR isnan(value) OR abs(value) > 99999999999999.9 THEN NULL ELSE value END AS DECIMAL(18,4))) AS VARCHAR(64)) AS DOUBLE) AS total_value
@@ -826,8 +790,7 @@ object ExtensionQueries {
     // within one gap of the stream's end stay open in state by design
     "e5_stateful_sessions" -> (
       ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.runStatefulSessionsToCompletion(s, stagedEventsDir(s, d), 30,
-          statePartitions = Some(gateStateParts(s)))),
+        graft.streaming.EventStream.runStatefulSessionsToCompletion(s, stagedEventsDir(s, d), 30)),
       Some(s"""WITH marked AS (
               |  SELECT user_id, event_id, ts, value,
               |    CASE WHEN lag(ts) OVER w IS NULL
@@ -861,8 +824,7 @@ object ExtensionQueries {
     // StreamingSpec with explicit micro-batches
     "e8_stream_dedup" -> (
       ((s: SparkSession, d: String) =>
-        graft.streaming.DocStream.runDedupToCompletion(s, stagedDupDocsDir(s, d),
-            statePartitions = Some(gateStateParts(s)))
+        graft.streaming.DocStream.runDedupToCompletion(s, stagedDupDocsDir(s, d))
           .select(col("digest"))),
       Some("SELECT DISTINCT md5(text) AS digest FROM documents")),
 
@@ -871,8 +833,7 @@ object ExtensionQueries {
     "e9_stream_static_join" -> (
       ((s: SparkSession, d: String) =>
         graft.streaming.EventStream.runStreamStaticToCompletion(
-          s, stagedEventsDir(s, d), Catalog(s, d).customer,
-          statePartitions = Some(gateStateParts(s)))),
+          s, stagedEventsDir(s, d), Catalog(s, d).customer)),
       Some("""SELECT c_nationkey, count(*) AS n_purchases,
              |  CAST(CAST(SUM(CAST(CASE WHEN value IS NULL OR isnan(value) OR abs(value) > 99999999999999.9 THEN NULL ELSE value END AS DECIMAL(18,4))) AS VARCHAR(64)) AS DOUBLE) AS total_value
              |FROM events JOIN customer ON user_id = c_custkey
@@ -886,8 +847,7 @@ object ExtensionQueries {
     "e10_stream_restart" -> (
       ((s: SparkSession, d: String) => {
         val (a, b) = stagedSplitEventFiles(s, d)
-        graft.streaming.EventStream.runHourlyRestart(s, a, b,
-          graft.core.Scratch.path("e10_scratch"), statePartitions = Some(gateStateParts(s)))
+        graft.streaming.EventStream.runHourlyRestart(s, a, b, graft.core.Scratch.path("e10_scratch"))
       }),
       Some("""SELECT date_trunc('hour', ts) AS hour, event_type,
              |  count(*) AS n_events,

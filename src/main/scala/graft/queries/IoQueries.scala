@@ -163,7 +163,7 @@ object IoQueries {
   private val upsertBase = scala.collection.concurrent.TrieMap.empty[String, String]
   private def upsertBaseTable(s: SparkSession, d: String): String =
     upsertBase.getOrElseUpdate(d, {
-      val tmp = scratch("upsert_" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
+      val tmp = scratch(graft.core.Scratch.stagingName("upsert", d))
       val derived = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
         .select("l_orderkey", "l_linenumber", "net_price", "week_no")
       graft.sources.Writers.partitionedParquet(derived, s"$tmp/by_week", "week_no")
@@ -216,7 +216,7 @@ object IoQueries {
   private val mergeBase = scala.collection.concurrent.TrieMap.empty[String, String]
   private def mergeBaseTable(s: SparkSession, d: String): String =
     mergeBase.getOrElseUpdate(d, {
-      val tmp = scratch("merge_" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
+      val tmp = scratch(graft.core.Scratch.stagingName("merge", d))
       val derived = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
         .select("l_orderkey", "l_linenumber", "net_price", "week_no")
       graft.sources.Writers.partitionedParquet(derived, s"$tmp/by_week", "week_no")

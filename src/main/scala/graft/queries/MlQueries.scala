@@ -94,11 +94,9 @@ object MlQueries {
         Materialize.checkpointed { scope =>
           val f = scope.cache(SegmentationPipeline.features(c.customer, c.orders))
           val model = SegmentationPipeline.fitFixedK(f, 4)
-          val digest = java.security.MessageDigest.getInstance("MD5")
-            .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
           // per-process Scratch: a concurrent process's save cannot
           // corrupt this one's load (r15)
-          val path = graft.core.Scratch.path(s"ml_model_$digest")
+          val path = graft.core.Scratch.path(graft.core.Scratch.stagingName("ml_model", d))
           graft.serve.Serving.saveModel(model, path)
           val loaded = graft.serve.Serving.loadModel(path)
           // persisted-parameter check: cluster centers of the loaded

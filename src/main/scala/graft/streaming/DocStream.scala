@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `documents` corpus — the streaming face
@@ -71,35 +70,17 @@ object DocStream {
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("digest")
 
-  private def runToCompletion(df: DataFrame, queryName: String): DataFrame = {
-    df.sparkSession.catalog.dropTempView(queryName)   // stale sink from a prior run
-    val q: StreamingQuery = df.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(queryName)
-  }
-
-  /** Run [[tokenStats]] / [[dedupByDigest]] over a static directory to
-    * completion via the in-memory sink (test harness, as in
-    * [[EventStream.runToCompletion]]).
+  /** Run [[tokenStats]] (test harness, as in
+    * [[EventStream.runToCompletion]]) / [[dedupByDigest]] (the e8 gate)
+    * over a static directory to completion via the in-memory sink.
     */
   def runStatsToCompletion(spark: SparkSession, dir: String): DataFrame =
-    runToCompletion(tokenStats(readStream(spark, dir)), "graft_doc_stats")
+    StreamRunner.toMemory(tokenStats(readStream(StreamRunner.session(spark), dir)),
+      "append", "graft_doc_stats")(identity)
 
-  /** `statePartitions` sizes the streaming-dedup state partitioning via
-    * a session clone — the [[EventStream]] sessionFor knob (the digest
-    * state here is kilobytes; OPTIMIZATION_r20.md: 1.19 -> 0.86 s
-    * at 32 -> 8 partitions on the sf0.1 gate). None inherits the session.
-    */
-  def runDedupToCompletion(spark: SparkSession, dir: String,
-                           statePartitions: Option[Int] = None): DataFrame = {
-    val session = EventStream.sessionFor(spark, statePartitions)
-    runToCompletion(dedupByDigest(readStream(session, dir)), "graft_doc_dedup")
-  }
+  def runDedupToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRunner.toMemory(dedupByDigest(readStream(StreamRunner.session(spark), dir)),
+      "append", "graft_doc_dedup")(identity)
 
   /** The production BOUNDED-state dedup ([[dedupWithinWatermark]]) as one
     * end-to-end call over a static directory. The corpus source carries
@@ -116,8 +97,9 @@ object DocStream {
     // INITIAL watermark (epoch 0) — doc_id 0 would otherwise stamp to
     // exactly the watermark and be dropped as late before reaching the
     // dedup state
-    val stamped = readStream(spark, dir)
+    val stamped = readStream(StreamRunner.session(spark), dir)
       .withColumn("event_ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-    runToCompletion(dedupWithinWatermark(stamped, "event_ts", horizon), "graft_doc_wdedup")
+    StreamRunner.toMemory(dedupWithinWatermark(stamped, "event_ts", horizon),
+      "append", "graft_doc_wdedup")(identity)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** A gap-session held in `flatMapGroupsWithState` state (or just closed):
@@ -30,43 +29,6 @@ final case class UserSession(user_id: Long, session_start: java.time.Instant,
   * per open (window, event_type)); `maxFilesPerTrigger` paces backfill.
   */
 object EventStream {
-
-  /** Every run-to-completion gate helper funnels its sink through this:
-    * a streaming gate that emits ZERO rows exits "cleanly" and then fails
-    * (or worse, silently skews) only at the oracle compare — exactly how
-    * r9's ingestion regression hid e5/e7 writing empty sinks. Emission is
-    * part of each helper's contract, so an empty sink fails HERE, loudly,
-    * at the operator boundary.
-    */
-  private def requireEmission(df: DataFrame, gate: String): DataFrame = {
-    require(!df.isEmpty,
-      s"streaming gate $gate emitted 0 rows — watermark never closed any " +
-        "state or the source produced no data; refusing to return an empty sink")
-    df
-  }
-
-  /** Session for a run-to-completion gate: `statePartitions` sizes the
-    * streaming STATE partitioning (a streaming query pins its state
-    * partitioning to `spark.sql.shuffle.partitions` AT START; every
-    * stateful operator opens one or more state store instances per
-    * partition per micro-batch). The gates here hold kilobytes of state,
-    * so the batch session's core-count default buys nothing but store
-    * bring-up — r20 opt (OPTIMIZATION_r20.md), sf0.1/32 cores, min-of-2:
-    * e4 1.88→1.60 s, e5 3.23→2.41 s, e7 3.27→2.07 s, e8 1.19→0.86 s at
-    * 32→8 partitions. Sizing state partitions to expected state volume
-    * (not the batch shuffle default) is the standard stateful-streaming
-    * deployment knob; None inherits the session value — what a real
-    * deployment with real state volume would run. The override is scoped
-    * to a session CLONE (shared SparkContext and cache, isolated SQL
-    * conf): concurrently planned batch queries never see it, and no
-    * crash can leave it behind.
-    */
-  private[streaming] def sessionFor(spark: SparkSession, statePartitions: Option[Int]): SparkSession =
-    statePartitions.fold(spark) { n =>
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", n.toString)
-      s2
-    }
 
   /** File-based streaming read of an events directory.
     *
@@ -147,25 +109,14 @@ object EventStream {
     * deterministically. The result equals the batch per-user aggregate —
     * the CORRECTNESS gate for the stateful-streaming operator family.
     */
-  def runStatefulToCompletion(spark: SparkSession, dir: String,
-                              queryName: String = "graft_state_e4",
-                              statePartitions: Option[Int] = None): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
-    session.catalog.dropTempView(queryName)   // stale sink table from a prior run
-    val q: StreamingQuery = runningUserTotals(readStream(session, dir))
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(session.table(queryName)
-      .groupBy(col("user_id"))
-      .agg(
-        max(col("n_events")).as("n_events"),
-        max_by(col("total_value"), col("n_events")).as("total_value")), queryName)
-  }
+  def runStatefulToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRunner.toMemory(runningUserTotals(readStream(StreamRunner.session(spark), dir)),
+        "update", "graft_state_e4") {
+      _.groupBy(col("user_id"))
+        .agg(
+          max(col("n_events")).as("n_events"),
+          max_by(col("total_value"), col("n_events")).as("total_value"))
+    }
 
   /** Gap-sessionization as ARBITRARY stateful streaming
     * (`flatMapGroupsWithState`, Append + EventTimeTimeout) — the other
@@ -253,21 +204,10 @@ object EventStream {
     * triggers the no-data timeout batch that emits every closed session
     * (Append mode — each session appears exactly once in the sink).
     */
-  def runStatefulSessionsToCompletion(spark: SparkSession, dir: String, gapMinutes: Int = 30,
-                                      queryName: String = "graft_state_e5",
-                                      statePartitions: Option[Int] = None): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
-    session.catalog.dropTempView(queryName)
-    val q: StreamingQuery = statefulSessions(readStream(session, dir), gapMinutes)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(session.table(queryName), queryName)
-  }
+  def runStatefulSessionsToCompletion(spark: SparkSession, dir: String,
+                                      gapMinutes: Int = 30): DataFrame =
+    StreamRunner.toMemory(statefulSessions(readStream(StreamRunner.session(spark), dir), gapMinutes),
+      "append", "graft_state_e5")(identity)
 
   /** Stream-stream interval join: view -> purchase attribution within
     * `windowMinutes` of the view, per user — the two-sided stateful-join
@@ -309,32 +249,12 @@ object EventStream {
 
   /** Drive [[streamStreamAttribution]] to completion (append-mode memory
     * sink); the result equals the batch interval join.
-    *
-    * `statePartitions`: a streaming query pins its state partitioning to
-    * `spark.sql.shuffle.partitions` AT START, and a stream-stream join
-    * opens FOUR state stores per partition per side — at the batch
-    * default of 32 that is ~130 store instances of bring-up per run for
-    * kilobytes of state. Sizing state partitions to expected state
-    * volume (not to the batch shuffle default) is the standard stateful-
-    * streaming deployment knob; pass None to inherit the session value
-    * (what a large deployment with real state volume would do).
     */
   def runAttributionToCompletion(spark: SparkSession, dir: String, windowMinutes: Int = 30,
-                                 queryName: String = "graft_stream_e6",
-                                 statePartitions: Option[Int] = None,
-                                 joinType: String = "inner"): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
-    session.catalog.dropTempView(queryName)
-    val q: StreamingQuery = streamStreamAttribution(session, dir, windowMinutes, joinType)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(session.table(queryName), queryName)
-  }
+                                 joinType: String = "inner"): DataFrame =
+    StreamRunner.toMemory(
+      streamStreamAttribution(StreamRunner.session(spark), dir, windowMinutes, joinType),
+      "append", s"graft_attribution_$joinType")(identity)
 
   /** Drive [[hourlyAgg]] through the PRODUCTION sink — parquet files
     * plus a checkpoint directory — and read the committed files back.
@@ -357,23 +277,14 @@ object EventStream {
     * resume the finished query and emit nothing — each invocation
     * measures one complete run, like every streaming gate here.
     */
-  def runHourlyToParquet(spark: SparkSession, dir: String, scratch: String,
-                         statePartitions: Option[Int] = None): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
+  def runHourlyToParquet(spark: SparkSession, dir: String, scratch: String): DataFrame = {
+    val session = StreamRunner.session(spark)
     val out = s"$scratch/out"; val ckpt = s"$scratch/ckpt"
     val fs = org.apache.hadoop.fs.FileSystem.get(session.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val q: StreamingQuery = hourlyAgg(readStream(session, dir))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(session.read.parquet(out), "e7_file_sink")
+    StreamRunner.toFiles(hourlyAgg(readStream(session, dir)), out, ckpt)
+    StreamRunner.committed(session, out, "e7_file_sink")
   }
 
   /** e10: checkpointed RESTART with exactly-once file-sink output —
@@ -391,9 +302,8 @@ object EventStream {
     * commit log, so an uncommitted file from the stop is invisible.
     */
   def runHourlyRestart(spark: SparkSession, fileA: String, fileB: String,
-                       scratch: String,
-                       statePartitions: Option[Int] = None): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
+                       scratch: String): DataFrame = {
+    val session = StreamRunner.session(spark)
     val src = s"$scratch/src"; val out = s"$scratch/out"; val ckpt = s"$scratch/ckpt"
     val fs = org.apache.hadoop.fs.FileSystem.get(session.sparkContext.hadoopConfiguration)
     for (p <- Seq(src, out, ckpt)) fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -402,22 +312,12 @@ object EventStream {
       java.nio.file.Files.copy(java.nio.file.Paths.get(file),
         java.nio.file.Paths.get(src, as),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def run(): Unit = {
-      val q: StreamingQuery = hourlyAgg(readStream(session, src))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    def run(): Unit = StreamRunner.toFiles(hourlyAgg(readStream(session, src)), out, ckpt)
     arrive(fileA, "a.parquet")
     run()
     arrive(fileB, "b.parquet")
     run()
-    requireEmission(session.read.parquet(out), "e10_restart")
+    StreamRunner.committed(session, out, "e10_restart")
   }
 
   /** e9: stream-static enrichment join — the remaining Structured
@@ -432,42 +332,24 @@ object EventStream {
     * join+aggregate.
     */
   def runStreamStaticToCompletion(spark: SparkSession, dir: String,
-                                  customer: DataFrame,
-                                  queryName: String = "graft_e9",
-                                  statePartitions: Option[Int] = None): DataFrame = {
-    val session = sessionFor(spark, statePartitions)
-    val enriched = readStream(session, dir)
+                                  customer: DataFrame): DataFrame = {
+    val enriched = readStream(StreamRunner.session(spark), dir)
       .filter(col("event_type") === "purchase")
       .join(broadcast(customer.select(col("c_custkey"), col("c_nationkey"))),
         col("user_id") === col("c_custkey"))
-    val q: StreamingQuery = enriched
+    StreamRunner.toMemory(enriched
       .groupBy(col("c_nationkey"))
       .agg(
         count(lit(1)).as("n_purchases"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(session.table(queryName), queryName)
+        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total_value")),
+      "complete", "graft_e9")(identity)
   }
 
   /** Run the hourly aggregate over a static directory to completion via
     * the in-memory sink; returns the result table. Used by tests to prove
     * batch/stream equivalence.
     */
-  def runToCompletion(spark: SparkSession, dir: String, queryName: String = "graft_stream"): DataFrame = {
-    val q: StreamingQuery = hourlyAgg(readStream(spark, dir))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    requireEmission(spark.table(queryName), queryName)
-  }
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRunner.toMemory(hourlyAgg(readStream(StreamRunner.session(spark), dir)),
+      "complete", "graft_stream")(identity)
 }

@@ -100,8 +100,7 @@ class HostileValuesSpec extends AnyFunSuite with SharedSpark {
       .write.mode("overwrite").parquet(s"$dir/src")
     try {
       val out = graft.streaming.EventStream
-        .runStatefulToCompletion(spark, s"$dir/src",
-          queryName = "graft_hostile_e4_spec")
+        .runStatefulToCompletion(spark, s"$dir/src")
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
       assert(out(7L) == ((3L, 1.25)), s"user 7: ${out(7L)}")
       assert(out(8L) == ((1L, 0.0)), s"user 8: ${out(8L)}")

@@ -88,7 +88,6 @@ class IngestionSpec extends AnyFunSuite with SharedSpark {
         col("user_id"), col("event_type"), col("value"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     assertThrows[IllegalArgumentException](
-      EventStream.runStatefulSessionsToCompletion(spark, dir, 30,
-        queryName = "graft_empty_emit_test"))
+      EventStream.runStatefulSessionsToCompletion(spark, dir, 30))
   }
 }

@@ -31,7 +31,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * A second law holds the same query set (plus the conf-sensitive cache
   * users) to conf invariance: identical rows under the engine conf and
-  * under an alternate one.
+  * under an alternate one. The streaming gates e4/e6/e8 run on the
+  * session clone `graft.streaming.StreamRunner` makes, which carries the
+  * caller's runtime SQL conf, so they too run under the alternate conf
+  * (AQE, whole-stage codegen and the cached-plan flag off); only the
+  * shuffle-partition count is the runner's own state-partition bound.
   */
 class LayoutInvarianceSpec extends AnyFunSuite with SharedSpark
     with org.scalatest.BeforeAndAfterAll {

@@ -69,4 +69,14 @@ class ScratchSweepSpec extends AnyFunSuite {
       System.getProperty("java.io.tmpdir"), "graft_sweep_spec_missing")
     graft.core.Scratch.sweepStale(ghost, graft.core.Scratch.staleAfterMs)
   }
+
+  test("stagingName keeps sf paths apart that sanitize alike") {
+    val (a, b) = ("/a/b", "/a_b")
+    assert(a.replaceAll("[^A-Za-z0-9._-]", "_") == b.replaceAll("[^A-Za-z0-9._-]", "_"),
+      "the fixture paths must collide under sanitization alone")
+    val (na, nb) = (graft.core.Scratch.stagingName("e4_events", a),
+      graft.core.Scratch.stagingName("e4_events", b))
+    assert(na != nb, s"/a/b and /a_b share the staging name $na")
+    assert(na.startsWith("e4_events__a_b_") && nb.startsWith("e4_events__a_b_"))
+  }
 }

@@ -80,8 +80,7 @@ class StreamingPropertySpec extends AnyFunSuite with SharedSpark
     for ((rows, i) <- samples(eventsGen, seed = 170001L, n = 3).zipWithIndex) {
       val df = toDf(rows)
       val dir = stage(df)
-      val streamed = EventStream.runToCompletion(spark, dir,
-          queryName = s"graft_prop_hourly_$i")
+      val streamed = EventStream.runToCompletion(spark, dir)
         .selectExpr("hour", "event_type", "n_events", "total_value")
       val batch = Events.hourly(df)
         .selectExpr("hour", "event_type", "n_events", "total_value")
@@ -95,8 +94,7 @@ class StreamingPropertySpec extends AnyFunSuite with SharedSpark
     for ((rows, i) <- samples(eventsGen, seed = 170101L, n = 3).zipWithIndex) {
       val df = toDf(rows)
       val dir = stage(df)
-      val streamed = EventStream.runStatefulSessionsToCompletion(spark, dir, 30,
-          queryName = s"graft_prop_sessions_$i")
+      val streamed = EventStream.runStatefulSessionsToCompletion(spark, dir, 30)
         .selectExpr("user_id", "session_start", "session_end", "n_events")
       val wmMs = df.selectExpr("max(unix_micros(ts)) DIV 1000").head().getLong(0)
       val batchAll = Events.sessionize(df, 30)

@@ -141,8 +141,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // fragment session over the emitted span, no duplicate
     writeFile("f3.parquet", now, Seq(
       (6L, ns("2024-01-01T10:03:00Z"), 1L, "view", 1.0, "")))
-    val out = EventStream.runStatefulSessionsToCompletion(spark, dir.toString, 30,
-      queryName = "graft_late_e5")
+    val out = EventStream.runStatefulSessionsToCompletion(spark, dir.toString, 30)
       .selectExpr("user_id", "CAST(session_start AS STRING) AS s",
         "CAST(session_end AS STRING) AS e", "n_events")
       .collect()
@@ -236,6 +235,29 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(streamed.count() == distinctContents)
     // every surviving row is a real document row
     assert(streamed.drop("digest").exceptAll(docs).isEmpty)
+  }
+
+  test("streaming digest dedup refuses an empty sink (e8 is under the emission contract)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_docdedup_empty").toString
+    spark.read.parquet(s"$sf/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(dir)
+    assertThrows[IllegalArgumentException](
+      graft.streaming.DocStream.runDedupToCompletion(spark, dir))
+  }
+
+  test("a streaming gate runs under the caller's runtime conf and the state-partition bound") {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "false"))
+      val gate = SparkEntry.queries("e4_stateful_totals")(spark, sf).sparkSession
+      for (k <- keys) assert(gate.conf.get(k) == "false", s"$k did not reach the gate session")
+      assert(gate.conf.get("spark.sql.shuffle.partitions") ==
+        math.min(4, spark.sparkContext.defaultParallelism).toString)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("watermark-dedup runner drives the bounded-state path end to end") {
