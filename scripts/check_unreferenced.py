@@ -30,16 +30,24 @@ One cache lifecycle: `.cache()`, `.persist(` and `.unpersist(` may
 appear in src/main code only in core/Materialize.scala. Every operator
 cache is taken in a `Materialize` scope, which releases it when the
 scope exits (returning or throwing), so CacheHygieneSpec's empty
-CacheManager holds by construction. Comments and string literals are
-not searched; any other call site is flagged.
+CacheManager holds by construction. Comments are not searched; any
+other call site is flagged.
 
 One streaming run lifecycle: `.writeStream`, `processAllAvailable(`
 and `newSession(` may appear in src/main code only in
 streaming/StreamRunner.scala. Every run-to-completion stream runs on
 the gate session the runner clones (the caller's runtime SQL conf plus
 the state-partition bound), is started, drained and stopped there, and
-comes back emission-checked. Comments and string literals are not
-searched; any other site is flagged.
+comes back emission-checked. Comments are not searched; any other
+site is flagged.
+
+One hash scheme: `conv(substring(md5(` and `'0x' || substr(md5(` may
+appear in src/main code only in functions/Md5Prefix.scala. The engine's
+48-bit md5-prefix hash has one definition there, in its Spark, DuckDB
+and JVM forms, so the Spark operators and the DuckDB oracles that
+replay them cannot drift apart. Comments are not searched; string
+literals are, because the DuckDB form lives in them. Any other site is
+flagged.
 
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
@@ -73,6 +81,9 @@ CACHE_RE = re.compile(r"\.\s*(?:cache\(\)|persist\(|unpersist\()")
 
 STREAM_HOME = os.path.join("src", "main", "scala", "graft", "streaming", "StreamRunner.scala")
 STREAM_RE = re.compile(r"\.\s*writeStream\b|\bprocessAllAvailable\(|\bnewSession\(")
+
+HASH_HOME = os.path.join("src", "main", "scala", "graft", "functions", "Md5Prefix.scala")
+HASH_RE = re.compile(r"conv\(\s*substring\(\s*md5\(|'0x'\s*\|\|\s*substr\(\s*md5\(")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
 LEXEME_RE = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
@@ -161,6 +172,7 @@ def main():
 
     caches = confined_outside(CACHE_HOME, CACHE_RE)
     streams = confined_outside(STREAM_HOME, STREAM_RE)
+    hashes = confined_outside(HASH_HOME, HASH_RE)
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -186,6 +198,10 @@ def main():
         print(f"writeStream/processAllAvailable/newSession outside {STREAM_HOME} (use StreamRunner):")
         for site in streams:
             print(f"  {site}")
+    if hashes:
+        print(f"md5-prefix hash written out outside {HASH_HOME} (use Md5Prefix):")
+        for site in hashes:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -195,7 +211,7 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or caches or streams or stray_mains:
+    if flagged or builders or caches or streams or hashes or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -142,6 +142,27 @@ object Scratch {
     s"${tag}_${sf.replaceAll("[^A-Za-z0-9._-]", "_")}_$digest"
   }
 
+  /** One entry of the [[staged]] memo: the map insert only places this
+    * holder, and the build runs under the holder's own lock (a lazy
+    * val), so one key's staging never blocks another's. A build that
+    * throws leaves the value unset and the next call retries it.
+    */
+  private final class Once(build: => Any) { lazy val value: Any = build }
+
+  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, Once]()
+
+  /** `build(dir)` for the created scratch dir [[stagingName]]`(tag,
+    * sf)`, run at most once per key in this process: every later or
+    * concurrent call gets the first call's result. The per-sf staging
+    * copies the streaming and write gates read are built here, once,
+    * and a concurrent first call waits for the build instead of
+    * rewriting the same overwrite-mode dir under it.
+    */
+  def staged[T](tag: String, sf: String)(build: String => T): T = {
+    val name = stagingName(tag, sf)
+    stagedDirs.computeIfAbsent(name, _ => new Once(build(dir(name)))).value.asInstanceOf[T]
+  }
+
   /** Path under the process root, NOT pre-created — for sinks whose
     * writers own directory creation (parquet/checkpoint writers).
     */

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * the previous round — so each node's adjacency list is expanded
   * exactly once over the whole run and total join work is Σ|frontier|
   * ≈ |reached|, not iterations × |reached|. The settled set is carried
-  * as a cached 2-column frame, the newly-reached delta is computed
-  * with a single anti-join per round, and superstep materialization +
-  * lineage truncation follow [[PageRank]] (each round plans against a
-  * cached frame, not the whole history; superseded caches released).
+  * as a 2-column frame, the newly-reached delta is computed with a
+  * single anti-join per round, and both are localCheckpointed every
+  * round, as in [[PageRank]] (each round plans against a checkpointed
+  * frame, not the whole history; superseded rounds' blocks free on GC).
   * All arithmetic is integer, so the hop counts hash-gate against an
   * oracle that replays the fixed-point as an unrolled min-union CTE
   * chain — frontier expansion and min-union are different SCHEDULES of

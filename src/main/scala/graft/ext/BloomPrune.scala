@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * bit layout can never be replayed by another engine — so, like the
   * count-min sketch (t12), this one derives its `numHashes` bit
   * positions from the engine's shared md5-prefix scheme
-  * ([[TextStats.docIdBucketCol]]): both engines compute the identical
+  * ([[graft.functions.Md5Prefix]]): both engines compute the identical
   * bit set, which is what makes the whole operator hash-gateable.
   *
   * Representation: the filter is DATA — the distinct set of SET bit
@@ -36,12 +37,10 @@ object BloomPrune {
 
   /** md5-prefix bit position of `key` for hash lane `j`, in `[0, m)`. */
   private def posCol(key: Column, j: Int, m: Int): Column =
-    pmod(
-      conv(substring(md5(concat(lit(s"$j:"), key).cast("binary")), 1, 12), 16, 10)
-        .cast("long"), lit(m.toLong))
+    Md5Prefix.bucket(concat(lit(s"$j:"), key), m)
 
   private def posSql(key: String, j: String, m: Int): String =
-    s"CAST('0x' || substr(md5($j || ':' || $key), 1, 12) AS BIGINT) % $m"
+    s"${Md5Prefix.sql(s"$j || ':' || $key")} % $m"
 
   /** The filter: distinct set bit positions over the base keys. */
   def build(base: DataFrame, keyCol: String, m: Int, numHashes: Int): DataFrame =

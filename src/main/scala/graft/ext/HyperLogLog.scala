@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,8 +45,7 @@ object HyperLogLog {
     */
   def registers(keys: DataFrame, keyCol: String): DataFrame =
     keys
-      .select(conv(substring(md5(col(keyCol).cast("binary")), 1, 12), 16, 10)
-        .cast("long").as("h"))
+      .select(Md5Prefix.of(col(keyCol)).as("h"))
       .selectExpr("CAST(h % 256 AS INT) AS bucket", "h DIV 256 AS w")
       .selectExpr("bucket",
         "CAST(CASE WHEN w = 0 THEN 41 ELSE 41 - length(bin(w)) END AS INT) AS rho")
@@ -69,7 +69,7 @@ object HyperLogLog {
     * prepends (the exact-distinct companion joins in one scalar).
     */
   def estimateSqlTail: String =
-    s"""h AS (SELECT CAST('0x' || substr(md5(key), 1, 12) AS BIGINT) AS h FROM keys),
+    s"""h AS (SELECT ${Md5Prefix.sql("key")} AS h FROM keys),
        |rh AS (
        |  SELECT CAST(h % 256 AS INT) AS bucket,
        |    CAST(CASE WHEN h // 256 = 0 THEN 41

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   * aggregation on (dst, label), and picks the winner with a second
   * partial+final `max(struct(votes, -label))` — an aggregate, NOT a
   * per-dst window, so the argmax never sorts and never ships more than
-  * one candidate row per (partition, dst) to the final stage. Superstep
-  * materialization + lineage truncation follow [[PageRank]] (each round
-  * plans against a cached 2-column frame; superseded caches released).
+  * one candidate row per (partition, dst) to the final stage. The
+  * labels are localCheckpointed every round, as in [[PageRank]] (each
+  * round plans against a checkpointed 2-column frame; superseded
+  * rounds' blocks free on GC).
   */
 object LabelPropagation {
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.core.Materialize
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -318,8 +319,8 @@ object MinHashDedup {
        |  range(1, greatest(length(text) - ${n - 1}, 0) + 1),
        |  i -> substr(text, i, $n)))) AS shingle FROM $table),
        |shab AS (SELECT doc_id,
-       |  CAST('0x' || substr(md5(shingle), 1, 12) AS BIGINT) % $P AS a,
-       |  CAST('0x' || substr(md5(shingle), 13, 12) AS BIGINT) % $P AS b
+       |  ${Md5Prefix.sql("shingle")} % $P AS a,
+       |  ${Md5Prefix.sql("shingle", 1)} % $P AS b
        |  FROM sh)""".stripMargin
 
   private[ext] def oracleSigs(n: Int, table: String): String = {

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.core.Materialize
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -41,15 +42,14 @@ object NgramJaccard {
     * element); `ShingleHashesSpec` pins native == HOF.
     */
   def hashedNgrams(text: Column, n: Int): Column =
-    transform(charNgrams(text, n),
-      g => conv(substring(md5(g.cast("binary")), 1, 12), 16, 10).cast("long"))
+    transform(charNgrams(text, n), g => Md5Prefix.of(g))
 
   /** Oracle fragment for [[hashedNgrams]]. */
   def hashedNgramsSql(n: Int): String =
     s"""list_transform(
        |    list_distinct(list_transform(range(1, greatest(length(text) - ${n - 1}, 0) + 1),
        |      i -> substr(text, i, $n))),
-       |    g -> CAST('0x' || substr(md5(g), 1, 12) AS BIGINT))""".stripMargin
+       |    g -> ${Md5Prefix.sql("g")})""".stripMargin
 
   /** Pairs (doc_a < doc_b) within the same (lang, length-bucket) block
     * whose distinct n-gram Jaccard >= `threshold`.

@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * (node, rank) frame to the edge partitioning, one partial+final sum
   * by dst, and one left join back to the node set; the edge frame
   * itself never re-shuffles. 5 iterations = 5 such passes — the
-  * classic bulk-synchronous schedule (at 1000 executors you'd also
-  * checkpoint ranks every few rounds to truncate lineage, as
-  * [[DedupClusters]] does for its propagation loop).
+  * classic bulk-synchronous schedule, with the ranks localCheckpointed
+  * every round, so each pass plans against a 2-column frame with its
+  * lineage truncated (as [[DedupClusters]] does for its propagation
+  * loop).
   */
 object PageRank {
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -324,11 +325,11 @@ object TextStats {
     * ([[Decontaminate]]): 8 bytes per gram instead of the gram string.
     *
     * Shipped as the native [[graft.functions.WordGramHashesExpr]] — the
-    * relational twin `transform(wordGramsCol(text, n), g ->
-    * conv(substring(md5(g), 1, 12), 16, 10))` re-splits the document per
-    * gram inside the interpreted lambda (O(words²) per row; it was 7.9 s
-    * of d14's 7.8-s sf0.1 bench). Bit parity between the two is pinned
-    * in WordGramHashesSpec.
+    * relational twin `transform(wordGramsCol(text, n), g =>
+    * Md5Prefix.of(g))` re-splits the document per gram inside the
+    * interpreted lambda (O(words²) per row; it was 7.9 s of d14's
+    * 7.8-s sf0.1 bench). Bit parity between the two is pinned in
+    * WordGramHashesSpec.
     */
   def hashedWordGramsCol(text: Column, n: Int): Column =
     // coalesce pins NULL-text semantics to the relational twin's: the
@@ -344,8 +345,7 @@ object TextStats {
     * expression (and as documentation of the exact semantics).
     */
   def hashedWordGramsRelational(text: Column, n: Int): Column =
-    transform(wordGramsCol(text, n),
-      g => conv(substring(md5(g.cast("binary")), 1, 12), 16, 10).cast("long"))
+    transform(wordGramsCol(text, n), g => Md5Prefix.of(g))
 
   /** The DuckDB twin of [[hashedWordGramsCol]] (a list expression over
     * column `text` of `table`'s rows — embed inside a SELECT).
@@ -354,7 +354,7 @@ object TextStats {
     s"""list_transform(
        |  list_transform(range(1, greatest(len(string_split_regex(trim(text), '\\s+')) - ${n - 1}, 0) + 1),
        |    i -> array_to_string(list_slice(string_split_regex(trim(text), '\\s+'), i, i + ${n - 1}), ' ')),
-       |  g -> CAST('0x' || substr(md5(g), 1, 12) AS BIGINT))""".stripMargin
+       |  g -> ${Md5Prefix.sql("g")})""".stripMargin
 
   /** Gopher-style repetition signal: the fraction of word n-grams that
     * are duplicates within the SAME document (1 - distinct/total) — the
@@ -521,21 +521,17 @@ object TextStats {
        |FROM exploded""".stripMargin
   }
 
-  /** The engine's shared content-stable document bucket: the md5
-    * hex-prefix of the stringified doc_id as a 48-bit integer, mod
-    * `buckets`. ONE definition (plus its SQL twin below) for every
-    * bucket-keyed operator — [[hashSplit]], [[sampleBySource]],
-    * [[packSequences]] — so the scheme cannot silently diverge between
-    * call sites or engines.
+  /** The engine's shared content-stable document bucket: the
+    * [[Md5Prefix]] of the stringified doc_id, mod `buckets` — the bucket
+    * every bucket-keyed operator ([[hashSplit]], [[sampleBySource]],
+    * [[packSequences]]) keys on.
     */
   def docIdBucketCol(buckets: Int): Column =
-    pmod(
-      conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 12), 16, 10)
-        .cast("long"), lit(buckets.toLong))
+    Md5Prefix.bucket(col("doc_id").cast("string"), buckets)
 
   /** DuckDB twin of [[docIdBucketCol]]. */
   def docIdBucketSql(buckets: Int): String =
-    s"CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12) AS BIGINT) % $buckets"
+    s"${Md5Prefix.sql("CAST(doc_id AS VARCHAR)")} % $buckets"
 
   /** Deterministic stratified take: exactly `min(n, |group|)` docs per
     * group, picked by seeded-md5 order — balanced eval/holdout subsets
@@ -782,16 +778,14 @@ object TextStats {
        |  ${ksExprs.mkString(",\n  ")}
        |FROM t ORDER BY v""".stripMargin
 
-  /** Count-min cell hash for sketch row `j`: md5 of `"j:token"`, 48-bit
-    * hex prefix, mod `width` — the engine's md5-prefix scheme
-    * ([[docIdBucketCol]]) seeded per row, so the d hash functions are
-    * independent-enough AND engine-replayable (a count-min built on
-    * murmur/xxhash could never be hash-gated against another engine).
+  /** Count-min cell hash for sketch row `j`: the [[Md5Prefix]] of
+    * `"j:token"` mod `width` — the engine's md5-prefix scheme seeded
+    * per row, so the d hash functions are independent-enough AND
+    * engine-replayable (a count-min built on murmur/xxhash could never
+    * be hash-gated against another engine).
     */
   private def cmHashCol(token: Column, j: Int, width: Int): Column =
-    pmod(
-      conv(substring(md5(concat(lit(s"$j:"), token).cast("binary")), 1, 12), 16, 10)
-        .cast("long"), lit(width.toLong))
+    Md5Prefix.bucket(concat(lit(s"$j:"), token), width)
 
   /** Count-min sketch of the corpus token frequencies as DATA: `depth ×
     * width` cells `(r, c, cnt)`. The sketch is THE sublinear-memory
@@ -846,14 +840,14 @@ object TextStats {
        |  SELECT token, count(*) AS freq FROM toks
        |  WHERE length(token) > 0 GROUP BY token),
        |cells AS (
-       |  SELECT j, CAST('0x' || substr(md5(j || ':' || token), 1, 12) AS BIGINT) % $width AS c,
+       |  SELECT j, ${Md5Prefix.sql("j || ':' || token")} % $width AS c,
        |    CAST(SUM(freq) AS BIGINT) AS cnt
        |  FROM tf, range(0, $depth) t(j)
        |  GROUP BY 1, 2),
        |top AS (SELECT token, freq FROM tf ORDER BY freq DESC, token ASC LIMIT $probeK),
        |probes AS (
        |  SELECT token, freq, j,
-       |    CAST('0x' || substr(md5(j || ':' || token), 1, 12) AS BIGINT) % $width AS c
+       |    ${Md5Prefix.sql("j || ':' || token")} % $width AS c
        |  FROM top, range(0, $depth) t(j))
        |SELECT p.token, p.freq, CAST(MIN(s.cnt) AS BIGINT) AS cm_estimate
        |FROM probes p JOIN cells s ON p.j = s.j AND p.c = s.c

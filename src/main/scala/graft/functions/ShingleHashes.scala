@@ -10,12 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared one-pass shingle hashing for the dedup family.
   *
-  * The relational formulation — `transform(charNgrams(text), g ->
-  * conv(substring(md5(g), 1, 12), 16, 10))` plus an explode + 64-min
-  * groupBy for MinHash signatures — is semantically right but pays two
-  * structural costs at scale: Spark's higher-order functions are
-  * CodegenFallback (per-element interpreted lambda dispatch over
-  * millions of shingles), and the signature aggregate shuffles
+  * The relational formulation — `transform(charNgrams(text), g =>
+  * Md5Prefix.of(g))` plus an explode + 64-min groupBy for MinHash
+  * signatures — is semantically right but pays two structural costs
+  * at scale: Spark's higher-order functions are CodegenFallback
+  * (per-element interpreted lambda dispatch over millions of
+  * shingles), and the signature aggregate shuffles
   * (doc_id, shingle-hash) rows only to take 64 per-doc minimums. Both
   * collapse into a narrow per-row pass: hash each distinct shingle once
   * with a reused MessageDigest and either emit the sorted 48-bit gram
@@ -25,22 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Bit-parity contract (what the DuckDB oracles replay, unchanged):
   * shingles are the DISTINCT (first-occurrence) code-point n-grams of
-  * `substr` semantics; gram hash = first 12 md5 hex chars as an
-  * unsigned 48-bit integer; `a = hash % P`, `b` = hex chars 13..24
-  * `% P`; `sig_j = min over shingles of (a + j*b) % P`. All exact
-  * integer arithmetic — engine- and order-independent.
+  * `substr` semantics; gram hash = [[Md5Prefix]] lane 0; `a = hash %
+  * P`, `b` = lane 1 `% P`; `sig_j = min over shingles of (a + j*b) %
+  * P`. All exact integer arithmetic — engine- and order-independent.
   */
 object ShingleHashes {
-
-  /** 48-bit unsigned value of md5 bytes `[from, from+6)` (hex chars
-    * `[2*from+1, 2*from+12]` — the `conv(substring(...), 16, 10)` twin).
-    */
-  private def hex48(digest: Array[Byte], from: Int): Long = {
-    var v = 0L
-    var i = from
-    while (i < from + 6) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
-    v
-  }
 
   /** Distinct code-point n-grams of `text` (first-occurrence order),
     * hashed; returns null-free UTF8String bytes path only.
@@ -65,13 +54,13 @@ object ShingleHashes {
 
   /** Sorted 48-bit gram hashes, md5-collision duplicates kept —
     * identical multiset to `sort_array(transform(charNgrams(text, n),
-    * g -> conv(substring(md5(g), 1, 12), 16, 10)))`.
+    * g => Md5Prefix.of(g)))`.
     */
   def gramHashes(text: UTF8String, n: Int): GenericArrayData = {
     val digests = distinctShingleDigests(text, n)
     val out = new Array[Long](digests.size())
     var i = 0
-    while (i < out.length) { out(i) = hex48(digests.get(i), 0); i += 1 }
+    while (i < out.length) { out(i) = Md5Prefix.fold(digests.get(i)); i += 1 }
     java.util.Arrays.sort(out)
     new GenericArrayData(out)
   }
@@ -87,8 +76,8 @@ object ShingleHashes {
     var i = 0
     while (i < digests.size()) {
       val d = digests.get(i)
-      val a = hex48(d, 0) % p
-      val b = hex48(d, 6) % p
+      val a = Md5Prefix.fold(d) % p
+      val b = Md5Prefix.fold(d, 1) % p
       var j = 0
       while (j < numHashes) {
         val h = (a + j * b) % p

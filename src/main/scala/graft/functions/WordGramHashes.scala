@@ -14,11 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * [[ShingleHashes]]' character shingles, for the containment /
   * decontamination family.
   *
-  * The relational formulation (`transform(wordGramsCol(text, n), g ->
-  * conv(substring(md5(g), 1, 12), 16, 10))`) is semantically right but
-  * structurally slow: Spark's higher-order functions are CodegenFallback,
-  * and the outer `split(trim(text))` referenced inside the `transform`
-  * lambda is re-evaluated PER ELEMENT in interpreted mode — every gram
+  * The relational formulation (`transform(wordGramsCol(text, n), g =>
+  * Md5Prefix.of(g))`) is semantically right but structurally slow:
+  * Spark's higher-order functions are CodegenFallback, and the outer
+  * `split(trim(text))` referenced inside the `transform` lambda is
+  * re-evaluated PER ELEMENT in interpreted mode — every gram
   * re-splits the whole document, O(words²) regex work per row (measured:
   * the gram build was 7.9 s of d14's 7.8-s sf0.1 bench cost, everything
   * downstream ~1 s). Here the split runs once, a reused MessageDigest
@@ -33,20 +33,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *  - fewer than `n` tokens → empty array (the `when(size >= n)` guard);
   *  - gram i = tokens[i..i+n-1] joined by a single space, document order,
   *    duplicates kept;
-  *  - hash = first 12 md5 hex chars of the gram's UTF-8 bytes as an
-  *    unsigned 48-bit integer (`conv(substring(md5(g), 1, 12), 16, 10)`).
+  *  - hash = [[Md5Prefix]] lane 0 of the gram's UTF-8 bytes.
   */
 object WordGramHashes {
 
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-
-  /** md5 bytes [0, 6) as an unsigned 48-bit long (first 12 hex chars). */
-  private def hex48(digest: Array[Byte]): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 6) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
-    v
-  }
 
   def wordGramHashes(text: UTF8String, n: Int): GenericArrayData = {
     // UTF8String.trim() strips ASCII 0x20 only — the StringTrim twin
@@ -65,7 +56,7 @@ object WordGramHashes {
         j += 1
       }
       md.reset()
-      out(i) = hex48(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8)))
+      out(i) = Md5Prefix.fold(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8)))
       i += 1
     }
     new GenericArrayData(out)

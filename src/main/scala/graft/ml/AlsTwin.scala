@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.core.Materialize
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,8 +26,7 @@ import org.apache.spark.sql.functions._
   *      sum — order-independent), confidence-capped at
   *      c−1 = min(r, [[ConfCap]]) to bound every later product;
   *   2. item factors initialize from the engine's shared md5-prefix
-  *      hash (`conv(substr(md5('als:item:dim'),1,12),16,10) mod 2001 −
-  *      1000` — the [[graft.ext.TextStats]] bucket scheme) onto the
+  *      hash ([[Md5Prefix]] of `'als:item:dim'` mod 2001 − 1000) onto the
   *      [[Q]]=10³ grid, so both engines start from the SAME integer
   *      vectors with no seeded RNG;
   *   3. each alternating solve is the closed-form 2×2 regularized
@@ -105,27 +105,13 @@ object AlsTwin {
       // with HAVING ... IS NOT NULL)
       .filter(col("r").isNotNull)
 
-  /** The engine's shared 48-bit md5-prefix hash, computed driver-side:
-    * identical to `conv(substring(md5(s), 1, 12), 16, 10)` in Spark
-    * and `CAST('0x' || substr(md5(s), 1, 12) AS BIGINT)` in DuckDB.
-    */
-  def hash48(s: String): Long = {
-    // first 12 hex chars of the md5 == the first 6 digest bytes read
-    // big-endian — computed directly instead of formatting 16 bytes to
-    // hex and parsing 12 back (the old form spent most of AlsTwin.fit's
-    // driver wall here: ~40k init hashes × 16 String.format calls,
-    // OPTIMIZATION_r21.md); value is bit-identical by construction
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) | ((d(2) & 0xffL) << 24) |
-      ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
-  }
-
-  /** Initial factor for one (entity, dim): md5 prefix mod 2001 − 1000,
-    * a grid value in [−Q, Q] (raw [−1, 1]).
+  /** Initial factor for one (entity, dim): the [[Md5Prefix]] of
+    * `als:<partkey>:<dim>` mod 2001 − 1000, a grid value in [−Q, Q]
+    * (raw [−1, 1]).
     */
   def initFactor(partkey: Long, dim: Int): Long =
-    hash48(s"als:$partkey:$dim") % 2001L - 1000L
+    Md5Prefix.fold(java.security.MessageDigest.getInstance("MD5")
+      .digest(s"als:$partkey:$dim".getBytes("UTF-8"))) % 2001L - 1000L
 
   /** Closed-form regularized 2×2 solve, quantized back to the grid.
     * m11/m22 already include λ. Every operand is an exactly-
@@ -336,8 +322,8 @@ object AlsTwin {
        |fqc AS (SELECT custkey, partkey, LEAST(r, $ConfCap) AS cm1 FROM fq),
        |if0 AS (
        |  SELECT partkey AS id,
-       |    CAST('0x' || substr(md5('als:' || partkey || ':1'), 1, 12) AS BIGINT) % 2001 - 1000 AS f1,
-       |    CAST('0x' || substr(md5('als:' || partkey || ':2'), 1, 12) AS BIGINT) % 2001 - 1000 AS f2
+       |    ${Md5Prefix.sql("'als:' || partkey || ':1'")} % 2001 - 1000 AS f1,
+       |    ${Md5Prefix.sql("'als:' || partkey || ':2'")} % 2001 - 1000 AS f2
        |  FROM (SELECT DISTINCT partkey FROM fq)),
        |${sweeps.mkString(",\n")}
        |SELECT custkey, partkey, pred, CAST(rn AS INT) AS rn FROM (

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.core.Materialize
+import graft.functions.Md5Prefix
 import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -159,9 +160,7 @@ object Recommender {
     */
   def holdoutFilteredHitRateOf(ratings: DataFrame, n: Int = 5, seed: Long = 42L,
                                trainPct: Int = 80, candidatePool: Int = 50): Double = {
-    val bucket = pmod(
-      conv(substring(md5(concat_ws(":", col("user"), col("item")).cast("binary")), 1, 12), 16, 10)
-        .cast("long"), lit(100L))
+    val bucket = Md5Prefix.bucket(concat_ws(":", col("user"), col("item")), 100)
     Materialize.scoped { scope =>
       val withBucket = scope.cache(ratings.withColumn("bucket", bucket))
       val train = scope.cache(withBucket.filter(col("bucket") < trainPct).drop("bucket"))
@@ -183,9 +182,7 @@ object Recommender {
 
   def holdoutMetricsOf(ratings: DataFrame, n: Int = 5,
                        seed: Long = 42L, trainPct: Int = 80): (Double, Double) = {
-    val bucket = pmod(
-      conv(substring(md5(concat_ws(":", col("user"), col("item")).cast("binary")), 1, 12), 16, 10)
-        .cast("long"), lit(100L))
+    val bucket = Md5Prefix.bucket(concat_ws(":", col("user"), col("item")), 100)
     Materialize.scoped { scope =>
       val withBucket = scope.cache(ratings.withColumn("bucket", bucket))
       val train = scope.cache(withBucket.filter(col("bucket") < trainPct).drop("bucket"))

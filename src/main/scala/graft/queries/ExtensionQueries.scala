@@ -156,23 +156,20 @@ object ExtensionQueries {
     * where it is semantically pinned: e10's explicit two-file restart
     * schedule and StreamingPropertySpec's generated disorder laws.
     */
-  private val stagedEvents = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedEventsDir(s: SparkSession, d: String): String =
-    stagedEvents.getOrElseUpdate(d, {
-      // under the per-process Scratch root: concurrent harness processes
-      // on the same sf never share (or race) a staged copy — the memo
-      // above still pays the copy once per process (r15, the mm3
-      // cross-process finding generalized)
-      val dir = java.nio.file.Paths.get(graft.core.Scratch.dir(
-        graft.core.Scratch.stagingName("e4_events", d)))
-      val rw = dir.toString + "_rw"
+    // under the per-process Scratch root: concurrent harness processes
+    // on the same sf never share (or race) a staged copy, and the copy
+    // is still paid once per process (r15, the mm3 cross-process
+    // finding generalized)
+    graft.core.Scratch.staged("e4_events", d) { dir =>
+      val rw = dir + "_rw"
       s.read.parquet(s"$d/events.parquet").coalesce(1)
         .write.mode("overwrite").parquet(rw)
-      stageParquetPayload(java.nio.file.Paths.get(rw), dir, "events_")
+      stageParquetPayload(java.nio.file.Paths.get(rw), java.nio.file.Paths.get(dir), "events_")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(rw), true)
-      dir.toString
-    })
+      dir
+    }
 
   /** A two-file docs directory with PLANTED full-row duplicates for the
     * streaming-dedup gate: file 0 is the corpus, file 1 re-ships the
@@ -182,23 +179,20 @@ object ExtensionQueries {
     * without pinning file order. Memoized per sf path like
     * [[stagedEventsDir]].
     */
-  private val stagedDupDocs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedDupDocsDir(s: SparkSession, d: String): String =
-    stagedDupDocs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Paths.get(graft.core.Scratch.dir(
-        graft.core.Scratch.stagingName("e8_docs", d)))
-      stageParquetPayload(
-        java.nio.file.Paths.get(s"$d/documents.parquet"), dir, "batch0_")
-      val slice = dir.toString + "_slice"
+    graft.core.Scratch.staged("e8_docs", d) { dir =>
+      stageParquetPayload(java.nio.file.Paths.get(s"$d/documents.parquet"),
+        java.nio.file.Paths.get(dir), "batch0_")
+      val slice = dir + "_slice"
       Catalog(s, d).documents
         .filter(TextStats.docIdBucketCol(100) >= 80)
         .coalesce(1).write.mode("overwrite").parquet(slice)
       val part = new java.io.File(slice).listFiles()
         .filter(f => f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath, dir.resolve("batch1.parquet"),
+      java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dir, "batch1.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.toString
-    })
+      dir
+    }
 
   /** The events table time-split into two single-file halves (cut at
     * 2024-01-16 UTC on the canonically-normalized `ts`, so the written
@@ -210,11 +204,8 @@ object ExtensionQueries {
     * window set) equals the one-shot run's. Memoized per sf path like
     * [[stagedEventsDir]].
     */
-  private val stagedSplitEvents = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def stagedSplitEventFiles(s: SparkSession, d: String): (String, String) =
-    stagedSplitEvents.getOrElseUpdate(d, {
-      val base = java.nio.file.Paths.get(graft.core.Scratch.path(
-        graft.core.Scratch.stagingName("e10_split", d)))
+    graft.core.Scratch.staged("e10_split", d) { base =>
       val cut = to_timestamp(lit("2024-01-16 00:00:00")) // UTC session frame
       val raw = graft.core.EventTime.normalizeTs(s.read.parquet(s"$d/events.parquet"))
       def half(name: String, pred: org.apache.spark.sql.Column): String = {
@@ -224,7 +215,7 @@ object ExtensionQueries {
           .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
       }
       (half("a", col("ts") < cut), half("b", col("ts") >= cut))
-    })
+    }
 
   private def embeddingDups(s: SparkSession, d: String): DataFrame =
     VectorOps.blockedAllPairs(Catalog(s, d).embeddings, 0.4)

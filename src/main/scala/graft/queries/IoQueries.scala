@@ -144,6 +144,24 @@ object IoQueries {
       .orderBy(col("r_name"))
   }
 
+  /** The pre-existing week-partitioned lineitem table the upsert and
+    * the merge each target (one copy per `tag`, as both write to it),
+    * built once per (process, sf) — in production the base table IS
+    * standing state, so the measured write pays only the slice
+    * overwrite + read-back. Memoizing is sound because the fix is
+    * always derived from the SOURCE lineitem (not from the table),
+    * making the write idempotent across bench's min-of-N repeats; the
+    * week-51 invariant then also proves repeated writes leave other
+    * partitions alone.
+    */
+  private def weeklyBaseTable(s: SparkSession, d: String, tag: String): String =
+    graft.core.Scratch.staged(tag, d) { tmp =>
+      val derived = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
+        .select("l_orderkey", "l_linenumber", "net_price", "week_no")
+      graft.sources.Writers.partitionedParquet(derived, s"$tmp/by_week", "week_no")
+      s"$tmp/by_week"
+    }
+
   /** Partition-level upsert (dynamic partition overwrite): write the
     * derived lineitem table partitioned by week, then overwrite ONLY
     * week 52 with corrected rows (net_price doubled — a late-arriving
@@ -152,26 +170,8 @@ object IoQueries {
     * what static overwrite mode would destroy (it truncates the whole
     * table to the written slice).
     */
-  /** The pre-existing partitioned table the upsert targets, built once
-    * per (process, sf) — in production the base table IS standing state,
-    * so the measured upsert pays only the slice overwrite + read-back.
-    * Memoizing is sound because the fix is always derived from the
-    * SOURCE lineitem (not from the table), making the overwrite
-    * idempotent across bench's min-of-N repeats; the week-51 invariant
-    * then also proves repeated upserts leave other partitions alone.
-    */
-  private val upsertBase = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def upsertBaseTable(s: SparkSession, d: String): String =
-    upsertBase.getOrElseUpdate(d, {
-      val tmp = scratch(graft.core.Scratch.stagingName("upsert", d))
-      val derived = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
-        .select("l_orderkey", "l_linenumber", "net_price", "week_no")
-      graft.sources.Writers.partitionedParquet(derived, s"$tmp/by_week", "week_no")
-      s"$tmp/by_week"
-    })
-
   private def dynamicUpsert(s: SparkSession, d: String): DataFrame = {
-    val table = upsertBaseTable(s, d)
+    val table = weeklyBaseTable(s, d, "upsert")
     val fix = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
       .select("l_orderkey", "l_linenumber", "net_price", "week_no")
       .filter(col("week_no") === 52)
@@ -213,18 +213,8 @@ object IoQueries {
     * stable. Grouped by (week_no, inserted-flag) so the gate separates
     * updated, untouched, and inserted row populations.
     */
-  private val mergeBase = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def mergeBaseTable(s: SparkSession, d: String): String =
-    mergeBase.getOrElseUpdate(d, {
-      val tmp = scratch(graft.core.Scratch.stagingName("merge", d))
-      val derived = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
-        .select("l_orderkey", "l_linenumber", "net_price", "week_no")
-      graft.sources.Writers.partitionedParquet(derived, s"$tmp/by_week", "week_no")
-      s"$tmp/by_week"
-    })
-
   private def mergeUpsert(s: SparkSession, d: String): DataFrame = {
-    val table = mergeBaseTable(s, d)
+    val table = weeklyBaseTable(s, d, "merge")
     val w52 = graft.transform.Derive.pricing(Catalog(s, d).lineitem)
       .select("l_orderkey", "l_linenumber", "net_price", "week_no")
       .filter(col("week_no") === 52)

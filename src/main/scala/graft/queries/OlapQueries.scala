@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Catalog
 import graft.functions.Exact._
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -235,8 +236,7 @@ object OlapQueries {
           .agg(max(when(col("event_type") === "purchase" && col("value") > 150.0, 1)
             .otherwise(0)).as("converted"))
           .withColumn("variant",
-            when(pmod(conv(substring(md5(col("user_id").cast("string").cast("binary")),
-              1, 12), 16, 10).cast("long"), lit(2L)) === 0, "A").otherwise("B"))
+            when(Md5Prefix.bucket(col("user_id").cast("string"), 2) === 0, "A").otherwise("B"))
         val g = users.groupBy(col("variant"))
           .agg(count(lit(1)).as("n"), sum(col("converted")).as("conv"))
         val a = g.filter(col("variant") === "A")
@@ -250,8 +250,8 @@ object OlapQueries {
               |  SELECT user_id,
               |    max(CASE WHEN event_type = 'purchase' AND value > 150.0
               |             THEN 1 ELSE 0 END) AS converted,
-              |    CASE WHEN CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)
-              |              AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS variant
+              |    CASE WHEN ${Md5Prefix.sql("CAST(user_id AS VARCHAR)")} % 2 = 0
+              |         THEN 'A' ELSE 'B' END AS variant
               |  FROM events GROUP BY 1),
               |g AS (SELECT variant, count(*) AS n,
               |             CAST(sum(converted) AS BIGINT) AS conv FROM u GROUP BY 1),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Rows.canon
 import graft.core.{Catalog, GraftSession}
 import graft.ext.{AnnIvf, LabelPropagation, PageRank, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -86,9 +87,6 @@ class ChaosRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
           col("a.l_partkey") =!= col("b.l_partkey"))
       .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
   }
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   private def underChaos(name: String)(clean: => DataFrame, chaotic: => DataFrame): Unit = {
     val baseline = canon(clean)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Rows.canon
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,9 +27,6 @@ class ConcurrentQuerySpec extends AnyFunSuite with SharedSpark {
 
   private val sfSmall = "/root/testdata/sf0.001"
   private val sfMid = "/root/testdata/sf0.01"
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   /** (query name, sf dir) work items — the raced pair (q25 shares the
     * old view names with q52) across two catalogs, plus DataFrame-API

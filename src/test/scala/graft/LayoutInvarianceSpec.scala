@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import graft.Rows.canon
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-layout invariance of the gated query surface.
@@ -66,9 +66,6 @@ class LayoutInvarianceSpec extends AnyFunSuite with SharedSpark
       .delete(new org.apache.hadoop.fs.Path(variantDir), true)
     super.afterAll()
   }
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   /** The regression set: the three distinct staging code paths that
     * failed the sweep (stagedEventsDir stateful / stream-stream joins /

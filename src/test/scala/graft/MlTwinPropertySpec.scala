@@ -1,5 +1,6 @@
 package graft
 
+import graft.Rows.canon
 import graft.core.Catalog
 import graft.ml.{AlsTwin, ChurnTree, SegmentationLloyd}
 import org.apache.spark.sql.DataFrame
@@ -20,9 +21,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * regression case. Seeded scrambles, three rounds each.
   */
 class MlTwinPropertySpec extends AnyFunSuite with SharedSpark {
-
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   private def scramble(df: DataFrame, seed: Int): DataFrame =
     df.orderBy(rand(seed)).repartition(7)

@@ -79,4 +79,29 @@ class ScratchSweepSpec extends AnyFunSuite {
     assert(na != nb, s"/a/b and /a_b share the staging name $na")
     assert(na.startsWith("e4_events__a_b_") && nb.startsWith("e4_events__a_b_"))
   }
+
+  test("staged runs its build once when two first calls race") {
+    // a memo that looks up, builds, then inserts lets both racing first
+    // calls build: two staging writes into one overwrite-mode dir
+    val sf = s"/staged_spec/${java.util.UUID.randomUUID()}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = Seq.fill(2)(new Thread(() => {
+      go.await()
+      paths.add(graft.core.Scratch.staged("staged_spec", sf) { dir =>
+        builds.incrementAndGet()
+        Thread.sleep(300)
+        dir
+      })
+    }))
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join(60000))
+    assert(builds.get == 1, s"the build ran ${builds.get} times for one key")
+    val got = paths.toArray(Array.empty[String]).toSeq
+    assert(got.size == 2 && got.distinct.size == 1, s"the racing calls got $got")
+    assert(got.head.endsWith(graft.core.Scratch.stagingName("staged_spec", sf)))
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(got.head)))
+  }
 }
