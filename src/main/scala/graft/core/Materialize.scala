@@ -24,10 +24,11 @@ import org.apache.spark.sql.DataFrame
   * output sort lazily over the returned checkpoint, so a caller that
   * only counts or joins never pays the range-partitioned sort.
   *
-  * What stays outside: superstep state and barriers with no release
-  * point are direct `localCheckpoint`s (e.g. `CorpusPipeline.spreadText`
-  * is a lazy one — the same Catalyst barrier as a cache, run once on
-  * first action, but nothing the caller must remember to unpersist).
+  * What stays outside: superstep state is checkpointed round by round
+  * in [[Superstep]], and a single barrier with no release point is a
+  * direct `localCheckpoint` (e.g. `CorpusPipeline.spreadText` is a lazy
+  * one — the same Catalyst barrier as a cache, run once on first
+  * action, but nothing the caller must remember to unpersist).
   */
 object Materialize {
 

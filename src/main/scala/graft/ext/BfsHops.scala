@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Materialize
+import graft.core.{Materialize, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * the previous round — so each node's adjacency list is expanded
   * exactly once over the whole run and total join work is Σ|frontier|
   * ≈ |reached|, not iterations × |reached|. The settled set is carried
-  * as a 2-column frame, the newly-reached delta is computed with a
-  * single anti-join per round, and both are localCheckpointed every
-  * round, as in [[PageRank]] (each round plans against a checkpointed
-  * frame, not the whole history; superseded rounds' blocks free on GC).
+  * as a 2-column frame and the newly-reached delta is computed with a
+  * single anti-join per round: the frontier form of
+  * [[graft.core.Superstep]], which stops on an empty delta.
   * All arithmetic is integer, so the hop counts hash-gate against an
   * oracle that replays the fixed-point as an unrolled min-union CTE
   * chain — frontier expansion and min-union are different SCHEDULES of
@@ -64,38 +63,19 @@ object BfsHops {
       .union(adj.select(col("dst").as("node")))
       .distinct()
 
-    // settled set and frontier both live as localCheckpoints (the
-    // DedupClusters/PageRank lifecycle): lineage stays truncated per
-    // round as before, and superseded rounds free on GC via the
-    // ContextCleaner instead of leaking CacheManager entries — which
-    // also closes the old swap-dance leak where an early-terminating
-    // run left the last frontier cached forever
-    var dist = nodes.where(col("node") % seedMod === 0)
+    val seeds = nodes.where(col("node") % seedMod === 0)
       .select(col("node"), lit(0L).as("hops"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var frontierEmpty = false
-    for (k <- 1 to maxHops if !frontierEmpty) {
+    Superstep.frontier(seeds, maxHops) { (dist, frontier, k) =>
       // expand ONLY the frontier, keep first-reach rows only: the
       // anti-join against the settled set is what makes round k cost
       // |frontier_k|, not |reached_k|
-      val next = frontier
+      frontier
         .join(adj, col("node") === col("src"))
         .select(col("dst").as("node"))
         .distinct()
         .join(dist, Seq("node"), "left_anti")
         .select(col("node"), lit(k.toLong).as("hops"))
-        .localCheckpoint(true)
-      frontierEmpty = next.count() == 0
-      if (!frontierEmpty) {
-        // (when the frontier IS empty, dist is already the fixed point —
-        // skip the dead union+materialize pass on the terminating round:
-        // pure overhead, cold-path probe measured it at seconds)
-        dist = dist.union(next).localCheckpoint(true)
-        frontier = next
-      }
-    }
-    dist.orderBy(col("node"))
+    }.orderBy(col("node"))
   }
 
   /** DuckDB twin over an `edges(src, dst)` CTE the caller prepends: the

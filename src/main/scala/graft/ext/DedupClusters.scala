@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Materialize
+import graft.core.{Materialize, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,20 +18,14 @@ import org.apache.spark.sql.functions._
   * (shuffle on doc_id); the driver only checks the converged flag — the
   * classic Spark pattern for iterative graph algorithms (large-star /
   * small-star is the optimization for web-scale graphs; dedup components
-  * are tiny and shallow, so plain propagation is the right tool).
+  * are tiny and shallow, so plain propagation is the right tool). The
+  * rounds run on [[graft.core.Superstep]] until no label changes, and a
+  * run that reaches `maxIter` unconverged fails.
   */
 object DedupClusters {
 
   /** (doc_id, cluster_id) for every document; cluster_id = min doc_id
     * reachable through `pairs` (columns doc_a, doc_b).
-    *
-    * Every round's labels are truncated with a `localCheckpoint`: it
-    * keeps each round's plan the same fixed shape over a materialized
-    * previous round, so whole-stage codegen compiles once and is
-    * cache-hit thereafter, where growing lineage recompiles a bigger plan
-    * per round (measured 6.1s -> 5.1s on the sf0.1 d8 shape; the
-    * checkpointed state is |connected| label rows, far smaller than the
-    * corpus, so the write is noise).
     */
   def components(documents: DataFrame, pairs: DataFrame,
                  maxIter: Int = 20): DataFrame = Materialize.scoped { scope =>
@@ -57,46 +51,23 @@ object DedupClusters {
     // each saved round is a join + aggregate + checkpoint + probe job.
     // The fixpoint (min reachable doc_id) and the convergence probe are
     // unchanged; only the starting point moves.
-    var labels = scope.cache(edges
+    val seed = scope.cache(edges
       .groupBy(col("src"))
       .agg(min(col("dst")).as("nmin"))
       .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("cluster_id")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val labels = Superstep.untilStable("DedupClusters.components", seed, maxIter) { (labels, _) =>
       val neighborMin = edges
         .join(labels, col("dst") === col("doc_id"))
         .groupBy(col("src")).agg(min(col("cluster_id")).as("nmin"))
       // the convergence probe rides along as a flag column — no separate
       // next-vs-previous join per round (one job per iteration total)
-      val next = labels
+      labels
         .join(neighborMin, col("doc_id") === col("src"), "left")
         .select(
           col("doc_id"),
           least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"),
-          (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id")).as("relabeled"))
-        // each round's plan nests the previous round's; truncate the
-        // lineage so planning and codegen stay O(1) per iteration and an
-        // executor loss doesn't replay the whole history (cluster
-        // deployments use a reliable checkpoint dir instead of local)
-        .localCheckpoint()
-      val changed = next.filter(col("relabeled")).limit(1).count()
-      // frees the seed labels' cache after round 0; later labels are
-      // checkpoints the scope does not hold
-      scope.release(labels)
-      labels = next
-      converged = changed == 0
-      iter += 1
+          (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id")).as(Superstep.Changed))
     }
-    // silently-unconverged labels would diverge from the recursive-CTE
-    // oracle (and from the documented min-reachable-doc_id semantics)
-    // with nothing to attribute the mismatch to — fail loudly instead;
-    // maxIter bounds runaway cost, it is not an approximation knob
-    if (!converged)
-      throw new IllegalStateException(
-        s"DedupClusters.components did not converge within $maxIter iterations: " +
-          "some component's diameter exceeds maxIter; raise maxIter (labels would " +
-          "otherwise silently diverge from min-reachable-doc_id semantics)")
     // the converged labels are checkpointed, so nothing lazy reads the
     // scope's caches once it exits
     documents.select(col("doc_id"))

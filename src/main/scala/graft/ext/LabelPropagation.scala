@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Materialize
+import graft.core.{Materialize, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   * partial+final `max(struct(votes, -label))` — an aggregate, NOT a
   * per-dst window, so the argmax never sorts and never ships more than
   * one candidate row per (partition, dst) to the final stage. The
-  * labels are localCheckpointed every round, as in [[PageRank]] (each
-  * round plans against a checkpointed 2-column frame; superseded
-  * rounds' blocks free on GC).
+  * rounds are a fixed count on [[graft.core.Superstep]], each planning
+  * against the previous round's checkpointed 2-column label frame.
   */
 object LabelPropagation {
 
@@ -79,8 +78,7 @@ object LabelPropagation {
           s"max(-label)); got min node id $minNode")
     }
 
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (i <- 1 to iterations) {
+    Superstep.fixed(nodes.select(col("node"), col("node").as("label")), iterations) { (labels, _) =>
       val votes = adj
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst"), col("label"))
@@ -93,17 +91,11 @@ object LabelPropagation {
         .groupBy(col("dst"))
         .agg(max(struct(col("votes"), (-col("label")).as("neg"))).as("m"))
         .select(col("dst").as("node"), (-col("m.neg")).as("new_label"))
-      // superstep materialization as a localCheckpoint (the
-      // DedupClusters/PageRank lifecycle): lineage truncation as before,
-      // but the blocks are ContextCleaner-managed — superseded rounds
-      // free on GC instead of leaking CacheManager entries
-      labels = labels
+      labels
         .join(picked, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.orderBy(col("node"))
+    }.orderBy(col("node"))
   }
 
   /** DuckDB twin over an `edges(src, dst)` CTE the caller prepends: the

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Materialize
+import graft.core.{Materialize, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,11 +26,9 @@ import org.apache.spark.sql.functions._
   * by src and cached — the per-iteration work is one shuffle of the
   * (node, rank) frame to the edge partitioning, one partial+final sum
   * by dst, and one left join back to the node set; the edge frame
-  * itself never re-shuffles. 5 iterations = 5 such passes — the
-  * classic bulk-synchronous schedule, with the ranks localCheckpointed
-  * every round, so each pass plans against a 2-column frame with its
-  * lineage truncated (as [[DedupClusters]] does for its propagation
-  * loop).
+  * itself never re-shuffles. 5 iterations = 5 such passes — a fixed
+  * round count on [[graft.core.Superstep]], so each pass plans against
+  * the previous round's checkpointed 2-column frame.
   */
 object PageRank {
 
@@ -70,28 +68,17 @@ object PageRank {
     } else {
       val teleport = (scale * 15L) / (100L * n)
 
-      var rank = nodes.select(col("node"), lit(scale / n).as("rank"))
-      for (i <- 1 to iterations) {
+      Superstep.fixed(nodes.select(col("node"), lit(scale / n).as("rank")), iterations) { (rank, _) =>
         val inSum = withDeg
           .join(rank.withColumnRenamed("node", "src"), Seq("src"))
           .selectExpr("dst", "rank DIV outdeg AS contrib")
           .groupBy(col("dst"))
           .agg(sum(col("contrib")).as("in_sum"))
-        // materialize the superstep as a localCheckpoint: each iteration
-        // plans against a 2-column LogicalRDD instead of the whole history
-        // (the DedupClusters lineage-truncation lesson — a chained 5-deep
-        // join/agg/join plan re-optimizes and re-broadcasts every prior
-        // round's subtree), and unlike .cache() the blocks are
-        // ContextCleaner-managed: they free when the superseded frame is
-        // GC'd instead of leaking CacheManager entries in a long-lived
-        // session (cluster deployments use a reliable checkpoint dir)
-        rank = nodes
+        nodes
           .join(inSum.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .selectExpr("node",
             s"${teleport}L + (85 * coalesce(in_sum, 0L)) DIV 100 AS rank")
-          .localCheckpoint(true)
-      }
-      rank.orderBy(col("rank").desc, col("node").asc).limit(topK)
+      }.orderBy(col("rank").desc, col("node").asc).limit(topK)
     }
   }
 
