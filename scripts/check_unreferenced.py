@@ -58,6 +58,15 @@ fork the superstep policy (barrier, stop probe, non-convergence
 failure) the driver owns. Comments are not searched; any other site is
 flagged.
 
+One query-run harness: `System.gc(` and `clearCache(` may appear in
+src/main code only in core/QueryTrace.scala, and `addSparkListener(`
+may appear anywhere under src/ (main or test) only there too. Every
+timed run goes through `QueryTrace.timed` (pre-run hygiene, the wall
+clock, the listener and its drain on a marker job), so Bench,
+graft.Trace and the probes time the same thing under the same pre-run
+state and count the same work. Comments are not searched; any other
+site is flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -105,6 +114,9 @@ CHECKPOINT_SITES = {
     # the `materialize` arm: one write+read instead of a second upstream pass
     ("Cumulative.scala", "runningTotals"),
 }
+HARNESS_HOME = os.path.join("src", "main", "scala", "graft", "core", "QueryTrace.scala")
+HYGIENE_RE = re.compile(r"\bSystem\s*\.\s*gc\(|\bclearCache\(")
+LISTENER_RE = re.compile(r"\baddSparkListener\(")
 DEF_NAME_RE = re.compile(r"\bdef\s+(\w+)")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
@@ -124,11 +136,12 @@ MAIN_OBJECT_RE = re.compile(r"^object\s+(\w+)[^\n]*?\{(?:(?!^object\s).)*?\bdef 
 DEF_RE = re.compile(r"^(  |\t)(?:final |implicit |@\w+ )*def ([A-Za-z_][A-Za-z0-9_]*)")
 
 
-def confined_outside(homes, pattern, allowed=frozenset()):
-    """`file:line` of every match of `pattern` in src/main code outside the
-    `homes` files and the (file name, enclosing def) pairs in `allowed`."""
+def confined_outside(homes, pattern, allowed=frozenset(), base=os.path.join("src", "main")):
+    """`file:line` of every match of `pattern` in the code under `base`
+    outside the `homes` files and the (file name, enclosing def) pairs in
+    `allowed`."""
     sites = []
-    for path in sorted(scala_files(os.path.join(ROOT, "src", "main"))):
+    for path in sorted(scala_files(os.path.join(ROOT, base))):
         rel = os.path.relpath(path, ROOT)
         if rel in homes:
             continue
@@ -199,6 +212,8 @@ def main():
     streams = confined_outside({STREAM_HOME}, STREAM_RE)
     hashes = confined_outside({HASH_HOME}, HASH_RE)
     checkpoints = confined_outside(CHECKPOINT_HOMES, CHECKPOINT_RE, CHECKPOINT_SITES)
+    harness = (confined_outside({HARNESS_HOME}, HYGIENE_RE)
+               + confined_outside({HARNESS_HOME}, LISTENER_RE, base="src"))
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -233,6 +248,11 @@ def main():
               "and CHECKPOINT_SITES (use Superstep):")
         for site in checkpoints:
             print(f"  {site}")
+    if harness:
+        print(f"System.gc(/clearCache( in src/main or addSparkListener( in src/ outside {HARNESS_HOME} "
+              "(use QueryTrace):")
+        for site in harness:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -242,7 +262,7 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or caches or streams or hashes or checkpoints or stray_mains:
+    if flagged or builders or caches or streams or hashes or checkpoints or harness or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

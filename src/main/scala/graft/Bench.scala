@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.core.QueryTrace
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs SparkEntry.benchQueries on SPARK_GRAFT_SF_DIR,
@@ -18,43 +19,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a crashing query can never masquerade as a fast successful run, and
   * its name is listed under "errors".
   *
-  * Timing is min-of-N (SPARK_GRAFT_RUNS, default 3): single-run timings
-  * in a shared JVM moved ±40% round-over-round with no code change, and
-  * with min-of-2 sub-second queries still disagreed 1.2-1.5x between
-  * back-to-back full runs; min-of-3 keeps per-query jitter ~10% at a
-  * wall-clock cost the hygiene fix already paid back 2x over. The cache is cleared before EVERY
-  * timed run: several queries `.cache()` an intermediate frame, and
-  * without the clear, run 2 of an identical plan is served from run 1's
-  * cache by Spark's CacheManager — the min would then report a warm-cache
-  * read, not the query (r3 reported d3 at 1.8s vs 10.2s cold).
-  * SPARK_GRAFT_ONLY=a,b,c restricts the set (dev loop for profiling
-  * individual queries).
-  *
-  * Cross-query isolation (r6 postmortem): sixteen queries "regressed"
-  * 1.3-2x in BENCH_r06 with no code change, and q37 reported 5x its
-  * isolated cost, because 60+ predecessors in the shared JVM leave
-  * behind (a) warehouse tables + metastore state from saveAsTable,
-  * (b) shuffle files and broadcast blocks that Spark's ContextCleaner
-  * only reclaims when their driver-side handles are GC'd, and (c) an
-  * old-gen full of dead plan state forcing GC pauses into the measured
-  * window. `hygiene()` before every timed run drops leftover tables,
-  * clears the cache, and forces a full GC (which is also what triggers
-  * the ContextCleaner); the heap default is sized (build.sbt, 24g) so
-  * collection stays out of the timed window.
+  * Timing is min-of-N (SPARK_GRAFT_RUNS, default 3) over
+  * [[graft.core.QueryTrace.timed]] runs, each after the harness's
+  * hygiene: single-run timings in a shared JVM moved ±40% round-over-round
+  * with no code change, and with min-of-2 sub-second queries still
+  * disagreed 1.2-1.5x between back-to-back full runs; min-of-3 keeps
+  * per-query jitter ~10%. The heap default is sized (build.sbt, 24g) so
+  * collection stays out of the timed window. The min-wall run's work
+  * counters are written beside its time. SPARK_GRAFT_ONLY=a,b,c restricts
+  * the set (dev loop for profiling individual queries).
   */
 object Bench {
 
-  /** 1-minute system load average (ManagementFactory OS bean; -1.0 where
-    * the platform can't report one). Stamped per-query and at the run
-    * boundaries so a reader of bench.json can separate ambient machine
-    * load from genuine regressions without cross-referencing a second
-    * same-session run (the r9/r10 drift postmortems both needed exactly
-    * this signal and had to reconstruct it from pair deltas).
-    */
-  private def loadAvg: Double = {
-    val v = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    math.round(v * 100.0) / 100.0
+  /** One query's timed runs, each beside its start load; a failed run has no [[QueryTrace.Run]]. */
+  private final case class QueryResult(name: String, runs: Seq[(Option[QueryTrace.Run], Double)], load: Double) {
+    def ok: Boolean = runs.forall(_._1.isDefined)
+    /** The min-wall run of a successful query. */
+    def best: Option[QueryTrace.Run] = if (ok) Some(runs.flatMap(_._1).minBy(_.wall)) else None
+    /** The min wall time, or the -1 failure marker. */
+    def min: Double = best.fold(-1.0)(_.wall)
   }
 
   /** Deterministic, data-independent single-thread CPU calibration fold
@@ -147,21 +130,12 @@ object Bench {
       queryFn: String => (SparkSession, String) => DataFrame = SparkEntry.queries,
       calibRuns: Int = 3,
   ): (String, Seq[String], Seq[String]) = {
-    // restore the JVM to a common baseline before every timed run — see
-    // the class doc ("Cross-query isolation"); runs outside the window
-    def hygiene(): Unit = {
-      spark.catalog.listTables().collect()
-        .filterNot(_.isTemporary)
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    val loadStart = loadAvg
+    val loadStart = QueryTrace.loadAvg
     // the calibration pair runs FIRST (before any workload query warms
     // caches it could alias) — min-of-calibRuns so JIT compile and the
     // one-time parquet write drop out of the recorded numbers
     val calibDir = calibScanWrite(spark, outDir)
-    val cScan = (1 to calibRuns).map { _ => hygiene(); calibScan(spark, calibDir) }.min
+    val cScan = (1 to calibRuns).map { _ => QueryTrace.hygiene(spark); calibScan(spark, calibDir) }.min
     val cCpu = (1 to calibRuns).map(_ => calibCpu()).min
     val results = names.map { name =>
       // registry resolution failures (a benchQueries name with no
@@ -169,55 +143,47 @@ object Bench {
       // artifact must always be written; a lookup crash that kills the
       // run before the file exists is exactly the telemetry loss this
       // channel exists to prevent
-      val fn: Either[Throwable, (SparkSession, String) => DataFrame] =
-        try Right(queryFn(name))
-        catch { case e: Throwable => System.err.println(s"BENCH FAIL $name: $e"); Left(e) }
-      val qLoad = loadAvg
-      val secs = (1 to runs).map { _ =>
-        // cold-plan guarantee (no CacheManager hit) + cross-query reset
-        hygiene()
-        val runLoad = loadAvg
-        val t0 = System.nanoTime()
-        val ok = fn match {
-          case Left(_) => false
-          case Right(f) =>
-            try { f(spark, sfDir).count(); true }
-            catch { case e: Throwable => System.err.println(s"BENCH FAIL $name: $e"); false }
+      def fail(e: Throwable) = { System.err.println(s"BENCH FAIL $name: $e"); None }
+      val fn = try Some(queryFn(name)) catch { case e: Throwable => fail(e) }
+      val qLoad = QueryTrace.loadAvg
+      // each run is cold-plan (no CacheManager hit) and cross-query reset
+      // by the harness's hygiene; a failed run keeps the load at its failure
+      val timed = (1 to runs).map { _ =>
+        val run = fn.flatMap { f =>
+          try Some(QueryTrace.timed(spark)(f(spark, sfDir).count())) catch { case e: Throwable => fail(e) }
         }
-        (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, ok, runLoad)
+        (run, run.fold(QueryTrace.loadAvg)(_.load))
       }
-      val ok = secs.forall(_._2)
-      (name, if (ok) secs.map(_._1).min else -1.0, ok, secs.map(t => (t._1, t._3)), qLoad)
+      QueryResult(name, timed, qLoad)
     }
-    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // every individual run time (not just the min) + the 1-min loadavg
-    // sampled as each query started: the drift-diagnosis channel — a
-    // slow MIN with quiet load is a regression, a slow min with one slow
-    // run or climbing load is the machine
     def fmt(t: Double): String =
       // Locale.ROOT: the default-locale f"" interpolator writes a comma
       // decimal separator under comma-decimal locales, corrupting the
       // JSON line (every other number here is Double.toString, which is
       // locale-independent)
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
-    val runsDetail = results.map { case (k, _, _, ts, _) =>
-      "\"" + k + "\":[" + ts.map(t => fmt(t._1)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // loadavg sampled immediately before EACH timed run (post-hygiene):
-    // with per-run load next to per-run time, one record adjudicates
-    // machine-vs-regression per query — a slow min whose own run-load
-    // was quiet is a regression, a slow min under climbing load is the
-    // machine (the r12 verdict's g2 phantom needed a second pair run to
-    // decide this; now the artifact itself carries the answer)
-    val runLoads = results.map { case (k, _, _, ts, _) =>
-      "\"" + k + "\":[" + ts.map(t => fmt(t._2)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val loads = results.map { case (k, _, _, _, l) => "\"" + k + "\":" + l }
-      .mkString("{", ",", "}")
-    val errors = results.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true, _, _) => v }.sum
+    def byQuery(rs: Seq[QueryResult])(v: QueryResult => String): String =
+      rs.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
+    val qs = byQuery(results)(_.min.toString)
+    // every individual run time (not just the min), each beside the
+    // loadavg sampled just before it (post-hygiene): the drift-diagnosis
+    // channel — a slow min whose own run-load was quiet is a regression,
+    // a slow min under climbing load is the machine (the r12 verdict's g2
+    // phantom needed a second pair run to decide this)
+    val runsDetail = byQuery(results)(_.runs.map(t => fmt(t._1.fold(-1.0)(_.wall))).mkString("[", ",", "]"))
+    val runLoads = byQuery(results)(_.runs.map(t => fmt(t._2)).mkString("[", ",", "]"))
+    val loads = byQuery(results)(_.load.toString)
+    val ok = results.filter(_.ok)
+    // the min-wall run's work counters, successful queries only: the
+    // drift-proof signal to judge that run's wall time against
+    val counters = byQuery(ok) { r =>
+      val run = r.best.get
+      val c = run.c
+      s"""{"jobs":${c.jobs.size},"stages":${c.stages},"tasks":${c.tasks},"shuffle_read_b":${c.shuffleReadB},""" +
+        s""""shuffle_write_b":${c.shuffleWriteB},"spill_b":${c.spillB},"driver_gap_s":${fmt(run.driverGapS)}}"""
+    }
+    val errors = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    val total = ok.map(_.min).sum
     // field order matters for readers that keep only the LINE'S TAIL
     // (the driver stores a 2000-char stdout suffix): the per-query
     // min-times map — the number a human actually wants — goes LAST,
@@ -225,24 +191,21 @@ object Bench {
     // timings instead of the telemetry arrays (r13 verdict item 1: the
     // tail showed run_loads' loadavg values where r12's showed times,
     // reading as a phantom 10x regression)
-    val loadEnd = loadAvg
+    val loadEnd = QueryTrace.loadAvg
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"sf":"$sfDir","load_start":$loadStart,"load_end":$loadEnd,"calib_cpu_sec":${fmt(cCpu)},"calib_scan_sec":${fmt(cScan)},"load":$loads,"runs":$runsDetail,"run_loads":$runLoads,"total_sec":$total,"queries":$qs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"sf":"$sfDir","load_start":$loadStart,"load_end":$loadEnd,"calib_cpu_sec":${fmt(cCpu)},"calib_scan_sec":${fmt(cScan)},"load":$loads,"runs":$runsDetail,"run_loads":$runLoads,"counters":$counters,"total_sec":$total,"queries":$qs}"""
     // ---- digest lines (see the DIGEST CONTRACT in the method doc) ----
     // family = the query-name prefix before the first digit/underscore
     // (q1_agg→q, ml_churn_twin→ml, e8→e, mm1→mm, d5b→d, g2_triangles→g)
     def family(n: String): String =
       n.takeWhile(_.isLetter) match { case "" => "other"; case f => f }
-    val ok = results.filter(_._3)
-    val famJson = ok.groupBy(r => family(r._1))
-      .map { case (f, rs) => f -> rs.map(_._2).sum }
+    val famJson = ok.groupBy(r => family(r.name))
+      .map { case (f, rs) => f -> rs.map(_.min).sum }
       .toSeq.sortBy(_._1)
       .map { case (f, s) => "\"" + f + "\":" + fmt(s) }
       .mkString("{", ",", "}")
-    val topJson = ok.sortBy(-_._2).take(15)
-      .map { case (k, v, _, _, _) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val nErr = results.count(!_._3)
+    val topJson = byQuery(ok.sortBy(-_.min).take(15))(r => fmt(r.min))
+    val nErr = results.count(!_.ok)
     val digest = Seq(
       s"""{"digest":"calib","cpu_sec":${fmt(cCpu)},"scan_sec":${fmt(cScan)},"runs":$calibRuns}""",
       s"""{"digest":"families","unit":"sec","sums":$famJson}""",
@@ -255,7 +218,7 @@ object Bench {
     // re-deriving families from the full map)
     Files.write(Paths.get(outDir, "bench_digest.json"),
       (digest.mkString("", "\n", "\n")).getBytes(StandardCharsets.UTF_8))
-    (line, results.collect { case (k, _, false, _, _) => k }, digest)
+    (line, results.filterNot(_.ok).map(_.name), digest)
   }
 
   def main(args: Array[String]): Unit = {

@@ -51,15 +51,18 @@ object Superstep {
 
   /** `step` run until the first round whose frame has no [[Changed]] row,
     * probed with `filter(changed).limit(1).count()`; that round's frame is
-    * returned. A run still changing after `maxRounds` rounds throws: its
-    * state would silently diverge from the fixed point the oracle replays,
-    * with nothing to attribute the mismatch to. The bound caps runaway
-    * cost; it is not an approximation knob.
+    * returned. `init` is checkpointed first, as [[frontier]]'s seed is: a
+    * lazy seed built inside round 1's barrier may be shuffled before AQE
+    * re-plans the join over it, so the job count varied run to run. A run
+    * still changing after `maxRounds` rounds throws: its state would
+    * silently diverge from the fixed point the oracle replays, with
+    * nothing to attribute the mismatch to. The bound caps runaway cost;
+    * it is not an approximation knob.
     */
   def untilStable(operator: String, init: DataFrame, maxRounds: Int)(
       step: (DataFrame, Int) => DataFrame): DataFrame =
     // scanLeft is lazy: round k + 1 is planned only after round k's probe
-    (1 to maxRounds).iterator.scanLeft(init)((state, k) => barrier(step(state, k))).drop(1)
+    (1 to maxRounds).iterator.scanLeft(barrier(init))((state, k) => barrier(step(state, k))).drop(1)
       .find(_.filter(col(Changed)).limit(1).count() == 0)
       .getOrElse(throw new IllegalStateException(
         s"$operator did not converge within $maxRounds rounds: raise the bound"))

@@ -50,11 +50,12 @@ object DedupClusters {
     // direct pairs) converge in ONE confirming round instead of two, and
     // each saved round is a join + aggregate + checkpoint + probe job.
     // The fixpoint (min reachable doc_id) and the convergence probe are
-    // unchanged; only the starting point moves.
-    val seed = scope.cache(edges
+    // unchanged; only the starting point moves. The seed is not cached:
+    // the driver checkpoints it before round 1.
+    val seed = edges
       .groupBy(col("src"))
       .agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("cluster_id")))
+      .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("cluster_id"))
     val labels = Superstep.untilStable("DedupClusters.components", seed, maxIter) { (labels, _) =>
       val neighborMin = edges
         .join(labels, col("dst") === col("doc_id"))

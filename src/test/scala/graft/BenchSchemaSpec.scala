@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * regression that took a manual judge re-run to refute. The file
   * `graft.Bench` writes is now the durable channel — so its shape is a
   * CONTRACT: one strict-JSON line carrying per-query min times, every
-  * individual run time, and the per-run 1-min loadavg samples that let a
-  * reader adjudicate machine-vs-regression from the artifact alone. This
+  * individual run time, the min-wall run's work counters, and the per-run
+  * loadavg samples that let a reader adjudicate machine-vs-regression
+  * from the artifact alone. This
   * spec keeps that contract executable: a field dropped or reordered (the
   * tail-order pin) fails here, not in a round postmortem.
   */
@@ -47,7 +48,7 @@ class BenchSchemaSpec extends AnyFunSuite with SharedSpark {
     val fields = root.fieldNames().asScala.toList
     val required = List("metric", "value", "unit", "errors", "sf", "load_start",
       "load_end", "calib_cpu_sec", "calib_scan_sec", "load", "runs",
-      "run_loads", "total_sec", "queries")
+      "run_loads", "counters", "total_sec", "queries")
     required.foreach(f => assert(fields.contains(f), s"missing field '$f'"))
 
     // tail-order pin: the driver stores a 2000-char stdout SUFFIX, so the
@@ -55,6 +56,8 @@ class BenchSchemaSpec extends AnyFunSuite with SharedSpark {
     // total_sec (r13: a reordered tail read as a phantom 10x regression)
     assert(fields.last == "queries", s"queries must be the last field, got ${fields.last}")
     assert(fields(fields.size - 2) == "total_sec")
+    // the counters map sits before the tail pair, never inside it
+    assert(fields.indexOf("counters") < fields.indexOf("total_sec"))
 
     assert(root.get("metric").asText() == "total")
     assert(root.get("unit").asText() == "sec")
@@ -79,6 +82,14 @@ class BenchSchemaSpec extends AnyFunSuite with SharedSpark {
       assert(loadArr != null && loadArr.isArray && loadArr.size() == runs,
         s"run_loads.$n must have exactly $runs entries")
       assert(root.get("load").get(n) != null && root.get("load").get(n).isNumber)
+      // the min-wall run's work counters, from the same timed run
+      val c = root.get("counters").get(n)
+      assert(c != null && c.fieldNames().asScala.toList == List("jobs", "stages", "tasks",
+        "shuffle_read_b", "shuffle_write_b", "spill_b", "driver_gap_s"), s"counters.$n: $c")
+      assert(c.get("jobs").asInt() >= 1 && c.get("tasks").asInt() >= c.get("jobs").asInt(), s"counters.$n: $c")
+      assert(c.get("stages").asInt() >= 1, s"counters.$n: $c")
+      assert(Seq("shuffle_read_b", "shuffle_write_b", "spill_b").forall(c.get(_).asLong() >= 0), s"counters.$n: $c")
+      assert(c.get("driver_gap_s").isNumber && c.get("driver_gap_s").asDouble() <= minT.asDouble() + 0.001)
     }
     assert(root.get("load_start").isNumber && root.get("load_end").isNumber)
     // total/value = sum of per-query mins
@@ -228,6 +239,8 @@ class BenchSchemaSpec extends AnyFunSuite with SharedSpark {
       assert(root.get("runs").get("b_boom").get(i).asDouble() == -1.0))
     // the healthy neighbor still measured, and the total excludes the crash
     assert(root.get("queries").get("b_good").asDouble() > 0.0)
+    // a failed query has no counters entry; the healthy neighbor has one
+    assert(root.get("counters").fieldNames().asScala.toList == List("b_good"))
     assert(root.get("total_sec").asDouble() == root.get("queries").get("b_good").asDouble())
   }
 }

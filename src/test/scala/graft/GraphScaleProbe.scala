@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * superstep operators rests on a measured curve.
   *
   * The 10x graph is 10 DISJOINT replicas of the 1x edge list with node
-  * ids shifted by replica · 10^7: within a replica every degree,
+  * ids shifted by replica · 10^7 ([[Probes.replicated]]): within a replica every degree,
   * triangle, community, and hop distance is exactly the original's, and
   * no cross-replica edge exists — so the workload grows 10x with
   * CONSTANT local structure (the same constant-density regime the
@@ -35,42 +35,18 @@ object GraphScaleProbe {
 
     // materialize the 1x edge list once (the probe measures the graph
     // algorithms, not the lineitem self-join both scales would share)
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_partkey"))
-    val edges1x = li.as("a").join(li.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") =!= col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
     val e1xPath = s"$tmp/edges1x.parquet"
-    edges1x.write.mode("overwrite").parquet(e1xPath)
+    Probes.coPurchaseEdges(spark.read.parquet(s"$sfDir/lineitem.parquet"))
+      .write.mode("overwrite").parquet(e1xPath)
 
-    val replicas = spark.range(0, 10).select(col("id").as("replica"))
     val e10xPath = s"$tmp/edges10x.parquet"
-    spark.read.parquet(e1xPath).crossJoin(broadcast(replicas))
-      .select((col("src") + col("replica") * 10000000L).as("src"),
-        (col("dst") + col("replica") * 10000000L).as("dst"))
+    Probes.replicated(spark.read.parquet(e1xPath), 10, Seq("src", "dst"), unit = 10000000L)
       .write.mode("overwrite").parquet(e10xPath)
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    def time(name: String)(f: => Long): Unit = {
-      // per-measurement hygiene (the Bench idiom): the previous
-      // measurement's shuffle files and broadcast blocks are reclaimed
-      // by the ContextCleaner only on GC, and without the reset that
-      // cleanup lands inside the NEXT measurement's window — the first
-      // probe run recorded g5_capped_clique800 at 20.6 s purely because
-      // it followed g2's 45 s wedge blowout (identical induced subgraph
-      // to the 5.4 s base case, as its row count proved)
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE $name%-24s ${sec}%8.3f s  rows=$rows")
-      results += s"${name}_sec" -> math.rint(sec * 1000) / 1000
-      results += s"${name}_rows" -> rows
-    }
+    val results: Probes.Record = scala.collection.mutable.LinkedHashMap.empty
+    def time(name: String)(f: => Long): Unit = Probes.time(spark, results, name)(f)
 
     for ((tag, path) <- Seq("1x" -> e1xPath, "10x" -> e10xPath)) {
-      spark.catalog.clearCache(); System.gc()
       val edges = spark.read.parquet(path)
       results += s"${tag}_edges" -> edges.count()
       // g1's topK truncates to 100 rows at both scales; count the full
@@ -99,7 +75,6 @@ object GraphScaleProbe {
     // g5 (cap 128 < c-1) drops the clique nodes and stays flat — the
     // measured sub-m^1.5 argument for the capped variant.
     for (c <- Seq(500, 800)) {
-      spark.catalog.clearCache(); System.gc()
       val ids = spark.range(0, c).select((col("id") + 90000000L).as("n"))
       val clique = ids.as("x").crossJoin(ids.as("y"))
         .where(col("x.n") < col("y.n"))
@@ -116,11 +91,7 @@ object GraphScaleProbe {
       time(s"g2_triangles_clique$c") { Triangles.perNode(edges).count() }
     }
 
-    val json = results.map {
-      case (k, v: String) => s""""$k":"$v""""
-      case (k, v) => s""""$k":$v"""
-    }.mkString("{", ",", "}")
-    println("GRAPHSCALEPROBE_JSON " + json)
+    println("GRAPHSCALEPROBE_JSON " + Probes.json(results))
     spark.stop()
   }
 }

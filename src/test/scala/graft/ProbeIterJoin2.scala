@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Catalog, GraftSession}
+import graft.core.{Catalog, GraftSession, QueryTrace}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,9 @@ object ProbeIterJoin2 {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.local("probe-iterjoin2", 32)
-    val li = Catalog(spark, sf).lineitem.select(col("l_orderkey"), col("l_partkey"))
+    val li = Catalog(spark, sf).lineitem
     li.count()
-    def edges: DataFrame = li.as("a").join(li.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") =!= col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+    def edges: DataFrame = Probes.coPurchaseEdges(li)
     def triRun(sortCache: Boolean): Long = {
       val und = edges.selectExpr("least(src, dst) AS u", "greatest(src, dst) AS v")
         .where(col("u") =!= col("v")).distinct().cache()
@@ -48,7 +45,7 @@ object ProbeIterJoin2 {
     }
     for ((arm, sorted) <- Seq("unsorted" -> false, "sorted" -> true))
       Trace.report(s"g2 wedge, $arm cache",
-        (1 to 2).map(_ => Trace.traced(spark)(triRun(sorted))).minBy(_.wall))
+        (1 to 2).map(_ => QueryTrace.timed(spark)(triRun(sorted))).minBy(_.wall))
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import graft.core.QueryTrace
 import graft.transform.SkewJoin
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: measure the hot-key join ladder that SCALING.md and
@@ -34,15 +35,16 @@ import org.apache.spark.sql.functions._
   *     actually cross (1 MB/2×, advisory 4 MB) — the split fires
   *     (`SortMergeJoin(skew=true)`, skewSplits in telemetry).
   *   - skew_off: the naive plan — the hot key joins in ONE task
-  *     (maxTaskMs in the telemetry is the straggler).
+  *     (maxTaskSec in the telemetry is the straggler).
   *   - salted8: [[SkewJoin.innerSalted]] at default AQE thresholds —
   *     the row-oriented defense, costing a dim replication (visible as
   *     ~2× shuffle bytes) to cut the straggler 8×.
   *
   * Per-variant telemetry (a straggler is invisible to wall clock under
-  * ambient noise): per-stage task counts, CPU seconds, shuffle bytes,
-  * and MAX task duration; every variant's aggregate output is
-  * checksummed and asserted identical.
+  * ambient noise), from the `QueryTrace.timed` run's counters: task
+  * count, executor run seconds, shuffle write bytes, and the longest
+  * task's run time; every variant's aggregate output is checksummed and
+  * asserted identical.
   *
   * Run: `sbt "Test/runMain graft.ProbeSkew"`; paste the JSON line into
   * `bench_records/r17_skew_probe.json`. Env-tunable:
@@ -58,8 +60,7 @@ object ProbeSkew {
 
     val spark = graft.core.GraftSession.local("skew_probe", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Any]
+    val results: Probes.Record = scala.collection.mutable.LinkedHashMap.empty
     results += "fact_rows" -> nFact
     results += "dim_rows" -> nDim
     results += "hot_pct" -> hotPct
@@ -89,50 +90,6 @@ object ProbeSkew {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m")
     val offConf = defaultConf + ("spark.sql.adaptive.skewJoin.enabled" -> "false")
 
-    def agg(joined: DataFrame): DataFrame =
-      joined.agg(count(lit(1)).as("n"), sum(col("v") * col("w")).as("chk"))
-
-    // per-stage telemetry: task counts, CPU, shuffle write, and the MAX
-    // task duration (the straggler metric wall clock hides under noise)
-    case class StageRec(tasks: Int, runMs: Long, shuffleWrite: Long)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRec]()
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          stages.add(StageRec(sc.stageInfo.numTasks, m.executorRunTime,
-            m.shuffleWriteMetrics.bytesWritten))
-        }
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val d = te.taskInfo.duration
-          var cur = maxTaskMs.get()
-          while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-        }
-      })
-
-    def run(df: => DataFrame): (Double, (Long, Long), String) = {
-      import scala.jdk.CollectionConverters._
-      stages.clear(); maxTaskMs.set(0)
-      spark.sparkContext.setJobGroup("probe", "skew")
-      val adf = agg(df)
-      val t0 = System.nanoTime()
-      val row = adf.collect()(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener drain
-      val ss = stages.asScala.toSeq
-      val plan = adf.queryExecution.executedPlan.toString
-      val splits = if (plan.contains("skew=true"))
-        s" skewSplits=${"AQEShuffleRead skewed".r.findAllIn(plan).size}" else ""
-      val tel = f"tasks=${ss.map(_.tasks).sum}%d " +
-        f"cpuSec=${ss.map(_.runMs).sum / 1000.0}%.1f " +
-        f"shuffleGB=${ss.map(_.shuffleWrite).sum / 1e9}%.2f " +
-        f"maxTaskSec=${maxTaskMs.get() / 1000.0}%.1f$splits"
-      (math.rint(sec * 1000) / 1000, (row.getLong(0), row.getLong(1)), tel)
-    }
-
     val variants: Seq[(String, Map[String, String], () => DataFrame)] = Seq(
       ("aqe_default", defaultConf, () => fact.join(dim, "k")),
       ("aqe_tuned", tunedConf, () => fact.join(dim, "k")),
@@ -140,41 +97,43 @@ object ProbeSkew {
       ("salted8", defaultConf, () => SkewJoin.innerSalted(fact, dim, "k", saltBuckets = 8)))
 
     var checksum: Option[(Long, Long)] = None
-    val secs = scala.collection.mutable.Map.empty[String, List[Double]]
-    val maxTasks = scala.collection.mutable.Map.empty[String, List[Double]]
+    val runs = scala.collection.mutable.Map.empty[String, List[QueryTrace.Run]].withDefaultValue(Nil)
     for (pass <- 1 to 2; (name, conf, mk) <- variants) {
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      System.gc()
-      val load = osBean.getSystemLoadAverage
-      val (sec, chk, tel) = run(mk())
+      val adf = mk().agg(count(lit(1)).as("n"), sum(col("v") * col("w")).as("chk"))
+      var row: Row = null
+      val r = QueryTrace.timed(spark) { row = adf.collect()(0); 1L }
+      val chk = (row.getLong(0), row.getLong(1))
+      // per-run telemetry from the harness's counters: task count,
+      // executor run time, shuffle write, and the LONGEST task's run time
+      // (the straggler metric wall clock hides under noise)
+      val plan = adf.queryExecution.executedPlan.toString
+      val splits = if (plan.contains("skew=true"))
+        s" skewSplits=${"AQEShuffleRead skewed".r.findAllIn(plan).size}" else ""
+      val tel = f"tasks=${r.c.tasks}%d cpuSec=${r.c.runS}%.1f shuffleGB=${r.c.shuffleWriteB / 1e9}%.2f " +
+        f"maxTaskSec=${r.c.maxTaskS}%.1f$splits"
       checksum match {
         case None => checksum = Some(chk)
         case Some(c) => assert(c == chk,
           s"$name returned $chk, expected $c — a rewrite changed the answer")
       }
-      println(f"PROBE pass=$pass $name%-12s $sec%8.3f s load=$load%.2f $tel chk=$chk")
-      secs(name) = secs.getOrElse(name, Nil) :+ sec
-      maxTasks(name) = maxTasks.getOrElse(name, Nil) :+
-        ("maxTaskSec=([0-9.]+)".r.findFirstMatchIn(tel).map(_.group(1).toDouble).getOrElse(0.0))
-      results += s"${name}_pass${pass}_load" -> (math.rint(load * 100) / 100)
+      println(f"PROBE pass=$pass $name%-12s ${r.wall}%8.3f s load=${r.load}%.2f $tel chk=$chk")
+      runs(name) :+= r
+      results += s"${name}_pass${pass}_load" -> r.load
       results += s"${name}_pass${pass}_telemetry" -> tel
     }
     defaultConf.foreach { case (k, v) => spark.conf.set(k, v) }
 
     for ((name, _, _) <- variants) {
-      results += s"${name}_secs" -> secs(name).mkString("[", ",", "]")
-      results += s"${name}_min_sec" -> secs(name).min
-      results += s"${name}_min_max_task_sec" -> maxTasks(name).min
+      val secs = runs(name).map(r => math.rint(r.wall * 1000) / 1000)
+      results += s"${name}_secs" -> secs.mkString("[", ",", "]")
+      results += s"${name}_min_sec" -> secs.min
+      results += s"${name}_min_max_task_sec" -> runs(name).map(r => math.rint(r.c.maxTaskS * 10) / 10).min
     }
     results += "checksum_n" -> checksum.get._1
     results += "checksum_sum" -> checksum.get._2
 
-    val json = results.map {
-      case (k, v: String) if v.startsWith("[") => s""""$k":$v"""
-      case (k, v: String) => s""""$k":"$v""""
-      case (k, v) => s""""$k":$v"""
-    }.mkString("{", ",", "}")
-    println("SKEW_PROBE_JSON " + json)
+    println("SKEW_PROBE_JSON " + Probes.json(results))
     spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
+import graft.Probes.{rotatedDocs, replicated}
 import graft.ext._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev-only 3-POINT scale curve for one representative per headline
   * family (the r14 verdict's item 2) — the two earlier probes measured
@@ -20,14 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Synthesis preserves LOCAL structure so the curve measures weak
   * scaling (more of the same corpus, the real growth regime):
   *
-  *   - documents: per-replica Caesar character bijection (ScaleProbe's
-  *     construction — within a replica every Jaccard value, bucket
-  *     structure and length is the original's; cross-replica shingle
-  *     overlap ~zero, so duplicate DENSITY is constant and d3's pair
-  *     count must scale exactly Nx). c1's OUTPUT stays ~constant by
+  *   - documents: per-replica Caesar character bijection
+  *     ([[Probes.rotatedDocs]]), so duplicate DENSITY is constant and
+  *     d3's pair count must scale exactly Nx. c1's OUTPUT stays ~constant by
   *     design: rotated replicas fail the predicted_lang == "en" gate,
   *     but the dedup work it pays runs over the full Nx corpus.
-  *   - orders/lineitem/events: Nx disjoint replicas with key offsets
+  *   - orders/lineitem/events: Nx disjoint replicas ([[Probes.replicated]])
   *     (orderkey/custkey/partkey/user_id/event_id + replica * 10^9),
   *     so per-customer repurchase structure, per-user session
   *     structure, and per-order co-purchase fan-out are exactly the
@@ -42,9 +40,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     output stays 10 queries x k rows, cost is the scan+shortlist.
   *
   * Protocol (the round-discipline pitfalls): scales ascend, queries run
-  * cheap-before-heavy within a scale, every measurement starts from
-  * clearCache()+System.gc(), each point is a min-of-2 with per-run
-  * loadavg stamped in the JSON (single-shot absolutes are 20-40% noisy
+  * cheap-before-heavy within a scale, every point is a min-of-2 of
+  * `QueryTrace.timed` runs (hygiene first) with per-run loadavg stamped
+  * in the JSON (single-shot absolutes are 20-40% noisy
   * on this box; the fitted exponent over min points is the artifact).
   *
   * Run: `sbt "Test/runMain graft.ScaleCurveProbe"`; paste the JSON line
@@ -65,50 +63,10 @@ object ScaleCurveProbe {
   private val RotSeed: Int =
     sys.env.get("SPARK_GRAFT_ROT_SEED").map(_.toInt).getOrElse(0)
 
-  /** Per-replica Caesar bijection over letters+digits (ScaleProbe's
-    * length/Jaccard-preserving construction, generalized to N replicas).
-    * Replica i>0 rotates by ((i-1+RotSeed) mod 25)+1 — nonzero and
-    * distinct across replicas for n-1 <= 25, identity for replica 0.
-    */
-  private def rotatedDocs(docs: DataFrame, n: Int): DataFrame = {
-    val lower = "abcdefghijklmnopqrstuvwxyz"
-    val upper = lower.toUpperCase
-    val digits = "0123456789"
-    def rot(s: String, i: Int) = s.drop(i % s.length) + s.take(i % s.length)
-    val from = lower + upper + digits
-    def to(i: Int) = rot(lower, i) + rot(upper, i) + rot(digits, i)
-    def rotIdx(i: Int) = ((i - 1 + RotSeed) % 25) + 1
-    val replicas = docs.sparkSession.range(0, n).select(col("id").as("replica"))
-    val rotated = (1 until n).foldLeft(when(col("replica") === 0, col("text"))) {
-      (acc, i) => acc.when(col("replica") === i, translate(col("text"), from, to(rotIdx(i))))
-    }
-    docs.crossJoin(broadcast(replicas))
-      .select(
-        (col("doc_id") + col("replica") * 10000000L).as("doc_id"),
-        rotated.as("text"),
-        col("lang"), col("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-  }
-
-  /** Nx disjoint replicas: every column in `offsets` is shifted by
-    * replica * 10^9 (10^7 for embeddings/documents ids elsewhere), all
-    * other columns pass through — per-key local structure is preserved
-    * exactly, cross-replica keys never collide.
-    */
-  private def replicated(df: DataFrame, n: Int, offsets: Seq[String],
-                         unit: Long = 1000000000L): DataFrame = {
-    val replicas = df.sparkSession.range(0, n).select(col("id").as("replica"))
-    val base = df.crossJoin(broadcast(replicas))
-    offsets.foldLeft(base) { (acc, c) =>
-      acc.withColumn(c, col(c) + col("replica") * unit)
-    }.drop("replica")
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.local("scalecurve", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
 
     val tmp = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_scale_curve",
@@ -119,7 +77,7 @@ object ScaleCurveProbe {
       if (scale == 1) s"$sfDir/$t.parquet" else s"$tmp/x$scale/$t.parquet"
     for (scale <- Scales if scale > 1) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      rotatedDocs(docs, scale)
+      rotatedDocs(docs, scale, RotSeed)
         .write.mode("overwrite").parquet(tablePath(scale, "documents"))
       replicated(spark.read.parquet(s"$sfDir/embeddings.parquet"), scale,
           Seq("vec_id"), unit = 10000000L)
@@ -136,26 +94,10 @@ object ScaleCurveProbe {
       println(s"synthesized x$scale under $tmp/x$scale")
     }
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Any]
+    val results: Probes.Record = scala.collection.mutable.LinkedHashMap.empty
     val minSecs = scala.collection.mutable.LinkedHashMap.empty[(String, Int), Double]
-    def measure(name: String, scale: Int)(f: => Long): Unit = {
-      val runs = (1 to 2).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        val load = osBean.getSystemLoadAverage
-        val t0 = System.nanoTime()
-        val rows = f
-        val sec = (System.nanoTime() - t0) / 1e9
-        (math.rint(sec * 1000) / 1000, math.rint(load * 100) / 100, rows)
-      }
-      val best = runs.map(_._1).min
-      minSecs += (name, scale) -> best
-      println(f"PROBE ${name}_x$scale%-14s min=$best%8.3f s  " +
-        f"runs=${runs.map(_._1).mkString("/")}  rows=${runs.head._3}")
-      results += s"${name}_x${scale}_sec" -> best
-      results += s"${name}_x${scale}_runs" -> runs.map(_._1).mkString("[", ",", "]")
-      results += s"${name}_x${scale}_loads" -> runs.map(_._2).mkString("[", ",", "]")
-      results += s"${name}_x${scale}_rows" -> runs.head._3
-    }
+    def measure(name: String, scale: Int)(f: => Long): Unit =
+      minSecs += (name, scale) -> Probes.time(spark, results, s"${name}_x$scale", runs = 2)(f)
 
     for (scale <- Scales) {
       val docsRaw = spark.read.parquet(tablePath(scale, "documents"))
@@ -188,11 +130,7 @@ object ScaleCurveProbe {
         AnnPq.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), 5,
           AnnIvf.fixedCentroids(emb, 16), AnnPq.fixedCodebooks(emb)).count()
       }
-      val li = lineitem.select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") =!= col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+      val edges = Probes.coPurchaseEdges(lineitem)
       results += s"x${scale}_edges" -> edges.count()
       measure("g2_triangles", scale) { Triangles.perNode(edges).count() }
     }
@@ -210,12 +148,7 @@ object ScaleCurveProbe {
       println(f"EXPONENT $q%-18s ${math.rint(slope * 100) / 100}%5.2f")
     }
 
-    val json = results.map {
-      case (k, v: String) if v.startsWith("[") => s""""$k":$v"""
-      case (k, v: String) => s""""$k":"$v""""
-      case (k, v) => s""""$k":$v"""
-    }.mkString("{", ",", "}")
-    println("SCALECURVE_JSON " + json)
+    println("SCALECURVE_JSON " + Probes.json(results))
     spark.stop()
   }
 }

@@ -2,21 +2,17 @@ package graft
 
 import graft.ext._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev-only scaling probe (not part of the suite): measures the dedup /
   * curation pipelines at sf0.1 (1x) and on a synthesized 10x corpus, so
   * the 100x design argument rests on a measured scaling curve rather
   * than plan-shape pins alone.
   *
-  * The 10x corpus replicates sf0.1's documents 10 times with a
-  * per-replica CHARACTER BIJECTION (Caesar-rotated `translate` over
-  * letters and digits, spaces fixed): a bijection on characters is a
-  * bijection on shingles and is length-preserving, so within a replica
-  * every Jaccard value, minhash bucket-collision structure, span grid
-  * position, and doc length is EXACTLY the original's, while
-  * cross-replica shingle overlap is ~zero. Duplicate DENSITY therefore
-  * stays constant as the corpus grows — the regime where runtime should
+  * The 10x corpus is 10 per-replica CHARACTER BIJECTIONS of sf0.1's
+  * documents ([[Probes.rotatedDocs]]: within a replica every Jaccard
+  * value, bucket structure, span grid position and length is EXACTLY the
+  * original's). Duplicate DENSITY therefore stays constant as the corpus
+  * grows — the regime where runtime should
   * scale ~linearly. (A first attempt suffixed every word with a replica
   * tag instead; with the corpus's tiny word vocabulary that INFLATED
   * within-replica similarity — 479M LSH candidates, 5159-doc buckets,
@@ -29,25 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ScaleProbe {
 
-  private def synthesize10x(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val lower = "abcdefghijklmnopqrstuvwxyz"
-    val upper = lower.toUpperCase
-    val digits = "0123456789"
-    def rot(s: String, i: Int) = s.drop(i % s.length) + s.take(i % s.length)
-    val from = lower + upper + digits
-    def to(i: Int) = rot(lower, i) + rot(upper, i) + rot(digits, i)
-    val replicas = spark.range(0, 10).select(col("id").as("replica"))
-    val rotated = (1 until 10).foldLeft(when(col("replica") === 0, col("text"))) {
-      (acc, i) => acc.when(col("replica") === i, translate(col("text"), from, to(i)))
-    }
-    docs.crossJoin(broadcast(replicas))
-      .select(
-        (col("doc_id") + col("replica") * 10000000L).as("doc_id"),
-        rotated.as("text"),
-        col("lang"), col("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.local("scaleprobe", 32)
@@ -56,21 +33,13 @@ object ScaleProbe {
     val tmp = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_scale").toString
     val tenxPath = s"$tmp/docs10x.parquet"
-    synthesize10x(spark, spark.read.parquet(s"$sfDir/documents.parquet"))
+    Probes.rotatedDocs(spark.read.parquet(s"$sfDir/documents.parquet"), 10)
       .write.mode("overwrite").parquet(tenxPath)
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE $name%-24s ${sec}%8.3f s  rows=$rows")
-      results += s"${name}_sec" -> math.rint(sec * 1000) / 1000
-      results += s"${name}_rows" -> rows
-    }
+    val results: Probes.Record = scala.collection.mutable.LinkedHashMap.empty
+    def time(name: String)(f: => Long): Unit = Probes.time(spark, results, name)(f)
 
     for ((tag, path) <- Seq("1x" -> s"$sfDir/documents.parquet", "10x" -> tenxPath)) {
-      spark.catalog.clearCache(); System.gc()
       val raw = spark.read.parquet(path)
       results += s"${tag}_docs" -> raw.count()
       val docs = CorpusPipeline.spreadText(raw)
@@ -99,22 +68,14 @@ object ScaleProbe {
     // scan + shortlist cost, not recall; replica 0 keeps the original
     // ids so the fixed codebooks are identical at both scales)
     val emb1x = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val replicas = spark.range(0, 10).select(col("id").as("replica"))
-    val emb10x = emb1x.crossJoin(broadcast(replicas))
-      .select((col("vec_id") + col("replica") * 10000000L).as("vec_id"),
-        col("embedding"), col("label"))
     val emb10xPath = s"$tmp/emb10x.parquet"
-    emb10x.write.mode("overwrite").parquet(emb10xPath)
+    Probes.replicated(emb1x, 10, Seq("vec_id"), unit = 10000000L).write.mode("overwrite").parquet(emb10xPath)
     for ((tag, e) <- Seq("1x" -> emb1x, "10x" -> spark.read.parquet(emb10xPath))) {
       val cb = AnnPq.fixedCodebooks(e)
       time(s"s6_pq_$tag") { AnnPq.topK(e, e.filter(col("vec_id") < 10), 5, cb).count() }
     }
 
-    val json = results.map {
-      case (k, v: String) => s""""$k":"$v""""
-      case (k, v) => s""""$k":$v"""
-    }.mkString("{", ",", "}")
-    println("SCALEPROBE_JSON " + json)
+    println("SCALEPROBE_JSON " + Probes.json(results))
     spark.stop()
   }
 }

@@ -2,34 +2,30 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler._
+import graft.core.QueryTrace
+import graft.core.QueryTrace.Run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** The dev-loop tracing instrument: a registry query's wall time split
   * into fixed driver/job cost (jobs, stages, tasks, driver gap) and
-  * data-proportional cost (executor time, shuffle and spill bytes).
+  * data-proportional cost (executor time, shuffle and spill bytes), as
+  * measured by [[graft.core.QueryTrace]], the harness Bench times with.
   *
   * Usage: Test/runMain graft.Trace <q1,q2,...> [--sf DIR] [--runs N]
   *          [--conf KEY=A,B] [--plan DIR:TAG]
   *
-  * Per query: one warm run, then N measured runs (cache cleared and GC
-  * run before each); prints the min-wall run's counters and its jobs.
+  * Per query: one warm run, then N measured runs (each a
+  * `QueryTrace.timed` run); prints the min-wall run's counters and its jobs.
   * `--conf` runs the arms interleaved (A,B,A,B...) instead, prints min
   * wall per arm and its ratio to A, and exits 1 if an arm's row-multiset
   * hash differs from A's. `--plan` writes `explain("formatted")` of the
   * RETURNED frame to `DIR/<query>_TAG.txt` (the `plans/rN/` files).
   * Defaults: sf0.1 (TESTDATA.md), 2 runs. The session is the one Verify
   * and Bench run on ([[Verify.mainSetup]], `SPARK_GRAFT_CPUS` cores).
-  * Eager work inside an operator (fits, checkpoints, sink writes) runs
-  * while the frame is built, so it is timed and counted too.
   */
 object Trace {
   type Query = (SparkSession, String) => DataFrame
@@ -55,77 +51,6 @@ object Trace {
     go(args.toList, Opts())
   }
 
-  /** Counters of one traced run. `jobs` holds (id, start ms, end ms, description). */
-  final class Counters {
-    var stages = 0; var tasks = 0; var runS = 0.0; var cpuS = 0.0
-    var shuffleReadB = 0L; var shuffleWriteB = 0L; var spillB = 0L
-    val jobs = mutable.ArrayBuffer.empty[(Int, Long, Long, String)]
-    /** Seconds of wall clock covered by at least one job. */
-    def jobSeconds: Double = jobs.map(j => (j._2, j._3)).sorted
-      .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
-        (sum + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
-      }._1 / 1e3
-  }
-
-  final case class Run(wall: Double, rows: Long, c: Counters)
-
-  private val Marker = "graft.Trace end-of-run marker"
-  /** Folds job, stage and task events into [[Counters]] until the marker
-    * job ends; events arrive in order, so by then the run's have all arrived.
-    * A job is described by its explicit description, else by the call site
-    * of the SQL action that ran it, else by its last stage's name.
-    */
-  private final class Listener extends SparkListener {
-    val c = new Counters
-    val done = new CountDownLatch(1)
-    private val open = mutable.Map.empty[Int, (Long, String)]
-    private val markerStages = mutable.Set.empty[Int]
-    private var markerJob = -1
-    private val actions = mutable.Map.empty[String, String]
-
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => actions(s.executionId.toString) = s.description
-      case _ =>
-    }
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-      val desc = prop("spark.job.description").orElse(prop("spark.sql.execution.id").flatMap(actions.get))
-        .orElse(e.stageInfos.lastOption.map(_.name.split("\n").head)).getOrElse("?")
-      if (desc == Marker) { markerJob = e.jobId; markerStages ++= e.stageIds }
-      else open(e.jobId) = (e.time, desc.take(90))
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (e.jobId == markerJob) done.countDown()
-      else open.remove(e.jobId).foreach { case (t0, d) => c.jobs += ((e.jobId, t0, e.time, d)) }
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      if (!markerStages(e.stageInfo.stageId)) c.stages += 1
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null && !markerStages(e.stageId)) {
-        c.tasks += 1; c.runS += m.executorRunTime / 1e3; c.cpuS += m.executorCpuTime / 1e9
-        c.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
-        c.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten; c.spillB += m.diskBytesSpilled
-      }
-    }
-  }
-
-  /** One traced run of `action` (returning a row count), after clearing the cache and GC. */
-  def traced(spark: SparkSession)(action: => Long): Run = {
-    spark.catalog.clearCache(); System.gc()
-    val sc = spark.sparkContext
-    val l = new Listener
-    sc.addSparkListener(l)
-    try {
-      val t0 = System.nanoTime()
-      val rows = action
-      val wall = (System.nanoTime() - t0) / 1e9
-      sc.setJobDescription(Marker)
-      try sc.parallelize(Seq(0), 1).count() finally sc.setJobDescription(null)
-      require(l.done.await(60, TimeUnit.SECONDS), "listener events did not drain")
-      Run(wall, rows, l.c)
-    } finally sc.removeSparkListener(l)
-  }
-
   /** Order-independent hash of a frame's row multiset: (row count, sum of
     * a per-row xxhash64 over every column). xxhash64 skips nulls, so each
     * column's null flag is hashed beside it.
@@ -149,7 +74,7 @@ object Trace {
       spark.conf.set(key, arms.head)
       fn(spark, sf).count()
       val timed = (1 to runs).flatMap(_ => arms.indices.map { i =>
-        spark.conf.set(key, arms(i)); i -> traced(spark)(fn(spark, sf).count()) })
+        spark.conf.set(key, arms(i)); i -> QueryTrace.timed(spark)(fn(spark, sf).count()) })
       val best = arms.indices.map(i => timed.collect { case (`i`, r) => r }.minBy(_.wall))
       val hashes = arms.map { v => spark.conf.set(key, v); rowHash(fn(spark, sf)) }
       for (i <- arms.indices) println(f"[trace] $name%-28s $key=${arms(i)}  min ${best(i).wall}%.3f s" +
@@ -162,7 +87,7 @@ object Trace {
   def report(name: String, r: Run): Unit = {
     val c = r.c
     println(f"[trace] $name%-28s min ${r.wall}%.3f s  rows ${r.rows}  jobs ${c.jobs.size}  " +
-      f"stages ${c.stages}  tasks ${c.tasks}  driver gap ${r.wall - c.jobSeconds}%.3f s")
+      f"stages ${c.stages}  tasks ${c.tasks}  driver gap ${r.driverGapS}%.3f s")
     println(f"[trace] $name%-28s executor run ${c.runS}%.2f s  cpu ${c.cpuS}%.2f s  " +
       s"shuffle read ${c.shuffleReadB} B  write ${c.shuffleWriteB} B  spill ${c.spillB} B")
     for ((id, t0, t1, d) <- c.jobs.sortBy(_._1))
@@ -178,7 +103,7 @@ object Trace {
         case Some((key, arms)) => ab(spark, name, fn, o.sf, key, arms, o.runs)
         case None =>
           fn(spark, o.sf).count()
-          report(name, (1 to o.runs).map(_ => traced(spark)(fn(spark, o.sf).count())).minBy(_.wall))
+          report(name, (1 to o.runs).map(_ => QueryTrace.timed(spark)(fn(spark, o.sf).count())).minBy(_.wall))
           true
       }
       o.plan.foreach { case (dir, tag) =>

@@ -23,11 +23,6 @@ class TraceSpec extends AnyFunSuite with SharedSpark {
     assert(Trace.rowHash(pair) != Trace.rowHash(pair.select(col("b").as("a"), col("a").as("b"))))
   }
 
-  test("a traced registry query reports jobs and tasks") {
-    val r = Trace.traced(spark)(SparkEntry.queries("q1_agg")(spark, sf).count())
-    assert(r.rows > 0 && r.c.jobs.nonEmpty && r.c.tasks > 0)
-  }
-
   test("an A/B passes on equal arms and exits 1 when the arms' rows differ") {
     val key = "spark.sql.shuffle.partitions"
     def status(query: String, arms: String, registry: Map[String, Trace.Query]): Int = Trace.run(
