@@ -67,6 +67,15 @@ graft.Trace and the probes time the same thing under the same pre-run
 state and count the same work. Comments are not searched; any other
 site is flagged.
 
+One tuning surface: `defaultParallelism`, `conf.get(` and
+`conf.getOption(` may appear in src/main code only in
+core/GraftSession.scala, whose `parallelism` is the engine's one
+partition-count source. Operators read no session conf of their own,
+so no conf string can crash one and no deploy-time knob hides in one.
+The one exception, named in CONF_SITES with its reason, is a deployment
+path rather than a tuning value. Comments are not searched; any other
+site is flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -117,6 +126,12 @@ CHECKPOINT_SITES = {
 HARNESS_HOME = os.path.join("src", "main", "scala", "graft", "core", "QueryTrace.scala")
 HYGIENE_RE = re.compile(r"\bSystem\s*\.\s*gc\(|\bclearCache\(")
 LISTENER_RE = re.compile(r"\baddSparkListener\(")
+CONF_RE = re.compile(r"\bdefaultParallelism\b|\bconf\s*\.\s*get(?:Option)?\(")
+# (file, enclosing def): deployment settings, not tuning
+CONF_SITES = {
+    # where the managed bucketed table lives, to clear an orphaned location
+    ("Bucketing.scala", "writeBucketed"),
+}
 DEF_NAME_RE = re.compile(r"\bdef\s+(\w+)")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
@@ -214,6 +229,7 @@ def main():
     checkpoints = confined_outside(CHECKPOINT_HOMES, CHECKPOINT_RE, CHECKPOINT_SITES)
     harness = (confined_outside({HARNESS_HOME}, HYGIENE_RE)
                + confined_outside({HARNESS_HOME}, LISTENER_RE, base="src"))
+    confs = confined_outside({SESSION_HOME}, CONF_RE, CONF_SITES)
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -253,6 +269,11 @@ def main():
               "(use QueryTrace):")
         for site in harness:
             print(f"  {site}")
+    if confs:
+        print(f"defaultParallelism/conf.get(/conf.getOption( outside {SESSION_HOME} "
+              "and CONF_SITES (use GraftSession.parallelism):")
+        for site in confs:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -262,7 +283,7 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or caches or streams or hashes or checkpoints or harness or stray_mains:
+    if flagged or builders or caches or streams or hashes or checkpoints or harness or confs or stray_mains:
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -58,10 +58,25 @@ object GraftSession {
     // count tracks DATA VOLUME at any scale — r21 interleaved A/Bs:
     // g3 0.76-0.85x, g5 0.73-0.84x, d8 0.75-0.86x, ml_kmeans_autok
     // 0.59x, g1 0.90x, d3/d6/d14/d10/d12 0.91-0.93x, nothing slower
-    // (operators whose per-round compute needs full parallelism pin an
-    // explicit partition count instead — LabelPropagation's adjacency).
+    // (operators whose per-round compute needs full parallelism pin
+    // [[parallelism]] instead — LabelPropagation's adjacency).
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.ui.enabled" -> "false")
+
+  /** Full compute parallelism of `spark`: the engine's one partition-count
+    * source, read as an Int from the resolved SQL conf (the count Spark
+    * itself gives an unsized shuffle), so no conf string is parsed here.
+    * Every session [[local]] builds has it equal to its cores.
+    *
+    * The policy: AQE sizes every cache and shuffle by data volume
+    * (`canChangeCachedPlanOutputPartitioning` in [[conf]]). A site whose
+    * per-row compute needs full parallelism repartitions to this count
+    * instead, and says why at the site; a runtime
+    * `spark.sql.shuffle.partitions` change moves every such site.
+    */
+  def parallelism(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
 
   /** Local session on `cores` threads under [[conf]]`(cores)`. */
   def local(appName: String, cores: Int): SparkSession = {

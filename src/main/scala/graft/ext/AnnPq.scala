@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -97,7 +98,7 @@ object AnnPq {
     val spark = embeddings.sparkSession
     val enc = encode(embeddings, cb)
       .select(col("vec_id").as("cid"), col("codes"))
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(GraftSession.parallelism(spark))
     val qd = queries.select(
       col("vec_id").as("qid"),
       graft.functions.PqDistanceTable.of(col("embedding"), cb).as("dtab"))
@@ -159,7 +160,7 @@ object AnnPq {
     val enc = AnnIvf.assign(embeddings, cents)
       .select(col("cell"), col("vec_id").as("cid"))
       .join(encode(embeddings, cb).select(col("vec_id").as("cid"), col("codes")), "cid")
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(GraftSession.parallelism(spark))
     val qd = AnnIvf.probeCells(queries, cents, nProbe).select(
       col("qid"), col("cell"),
       graft.functions.PqDistanceTable.of(col("qv"), cb).as("dtab"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Materialize
+import graft.core.{GraftSession, Materialize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,7 @@ object CorpusPipeline {
     */
   def spreadText(documents: DataFrame): DataFrame =
     documents
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism)
+      .repartition(GraftSession.parallelism(documents.sparkSession))
       // eager = false: the no-arg overload is EAGER and would run the
       // corpus scan + shuffle at DataFrame-CONSTRUCTION time — a plan
       // built then discarded (PlanSpec printing d10/d11, a registry
@@ -62,7 +62,7 @@ object CorpusPipeline {
   private def preparedCorpus(scope: Materialize.Scope, documents: DataFrame): DataFrame =
     scope.cache(MinHashDedup.prepared(
       documents
-        .repartition(documents.sparkSession.sparkContext.defaultParallelism)
+        .repartition(GraftSession.parallelism(documents.sparkSession))
         .select(col("doc_id"), col("text"),
           TextStats.nWordsCol(col("text")).as("n_words"),
           TextStats.qualityScoreCol(col("text")).as("quality_score"),

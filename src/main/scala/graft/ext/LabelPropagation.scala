@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Materialize, Superstep}
+import graft.core.{GraftSession, Materialize, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -56,10 +56,9 @@ object LabelPropagation {
     // the coalesced cache read g4 1.03-1.13x slower across four
     // interleaved A/Bs while every other iterative operator won). An
     // explicit count is AQE-exempt, pinning today's behavior at any
-    // conf; shuffle-partition count tracks deployment sizing.
+    // conf; [[GraftSession.parallelism]] tracks deployment sizing.
     val adj = scope.cache(edges.select(col("src"), col("dst"))
-      .repartition(edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
+      .repartition(GraftSession.parallelism(edges.sparkSession), col("src"))
       .sortWithinPartitions(col("src")))
     // nodes feeds ONLY the seed labels frame (one consumer — no cache);
     // adj's cache is what the supersteps reuse

@@ -229,33 +229,13 @@ object SimHash {
     * ~9× the 0.32 cost — the lane gets slow exactly where it starts
     * losing recall), 0.96 → 0.686, 1.28 → 0.354 — and the ratio
     * governs, not n alone (cap 25 at n=2²¹ reads 0.355 vs cap 50 at
-    * n=2²² reading 0.354, identical to 3 decimals). The default bound
+    * n=2²² reading 0.354, identical to 3 decimals). The bound
     * 0.5 sits between the last ≥0.99 point and measurable degradation.
-    * Override via
-    * `spark.graft.simhash.maxOccupancyPerCap` after re-measuring; past
-    * the ceiling prefer the MinHash banded lane (recall floor ~0.88
+    * Past the ceiling prefer the MinHash banded lane (recall floor ~0.88
     * under the same adversarial shapes, r19 probe) or pre-group by a
     * family key.
     */
-  private[graft] val defaultMaxOccupancyPerCap: Double = 0.5
-
-  /** Deploy-time override for [[defaultMaxOccupancyPerCap]]; junk or
-    * non-positive values are named errors carrying the key (the
-    * [[graft.ext.Triangles.resolvedBloomMaxPartials]] conf convention).
-    */
-  private[graft] def resolvedMaxOccupancyPerCap(
-      spark: org.apache.spark.sql.SparkSession): Double = {
-    val k = "spark.graft.simhash.maxOccupancyPerCap"
-    spark.conf.getOption(k).map(_.trim).map { s =>
-      val v = try s.toDouble catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$k must be a positive number, got '$s'")
-      }
-      require(!v.isNaN && v > 0, s"$k must be > 0, got $s")
-      v
-    }.getOrElse(defaultMaxOccupancyPerCap)
-  }
+  private[graft] val maxOccupancyPerCap: Double = 0.5
 
   /** Near-duplicate candidates via (maxHamming+1)-block pigeonholing +
     * exact Hamming verify (<= maxHamming); layout from [[blockLayout]].
@@ -281,7 +261,7 @@ object SimHash {
     * 1.6M docs at cap 50 — past which even a flat, family-free corpus
     * loses recall to background block collisions (0.95 at 2²¹ docs,
     * 0.355 at 2²²). pairs() now FAILS LOUDLY past the measured bound
-    * (see [[defaultMaxOccupancyPerCap]]); for corpora past the ceiling
+    * (see [[maxOccupancyPerCap]]); for corpora past the ceiling
     * use the MinHash banded lane (its 64-bit band space does not
     * saturate at terrestrial corpus sizes) or pre-group by a cheap
     * family key before pigeonholing.
@@ -294,7 +274,7 @@ object SimHash {
       .select(col("doc_id") +: layout.zipWithIndex.map {
         case ((off, w), i) => blockInt(off, w).as(s"blk_$i")
       }: _*))
-    // saturation guard (r20, measured — see [[defaultMaxOccupancyPerCap]]):
+    // saturation guard (r20, measured — see [[maxOccupancyPerCap]]):
     // mean bucket occupancy λ = n / 2^minWidth must stay under the
     // bound × cap, else the cap silently drops the only routes
     // near-duplicate pairs have. The count materializes the cache the
@@ -302,16 +282,14 @@ object SimHash {
     val nDocs = fpInts.count()
     val minWidth = layout.map(_._2).min
     val lambda = nDocs.toDouble / (1L << minWidth)
-    val bound = resolvedMaxOccupancyPerCap(documents.sparkSession)
-    require(bucketCap == Int.MaxValue || lambda <= bound * bucketCap,
+    require(bucketCap == Int.MaxValue || lambda <= maxOccupancyPerCap * bucketCap,
       f"simhash pairs: block space saturated — $nDocs docs over ${layout.size} " +
         f"blocks of $minWidth bits gives mean bucket occupancy $lambda%.1f > " +
-        f"$bound x bucketCap=$bucketCap (measured collapse past this bound: " +
+        f"$maxOccupancyPerCap x bucketCap=$bucketCap (measured collapse past this bound: " +
         f"recall 0.95 at ratio 0.64, 0.686 at 0.96, 0.354 at 1.28 — " +
         f"bench_records/r20_simhash_saturation.json). Use the MinHash banded " +
-        f"lane for corpora this size, pre-group by a family key, raise " +
-        f"bucketCap, or override spark.graft.simhash.maxOccupancyPerCap " +
-        f"after re-measuring")
+        f"lane for corpora this size, pre-group by a family key, or raise " +
+        f"bucketCap (Int.MaxValue turns the cap and this guard off)")
     val blocked = fpInts.select(
       col("doc_id"), posexplode(array((0 until nBlocks).map(i => col(s"blk_$i")): _*))
         .as(Seq("block", "block_val")))

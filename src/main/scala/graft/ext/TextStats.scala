@@ -74,12 +74,11 @@ object TextStats {
   }
 
   /** The three language marker counts — the portable token contract,
-    * case-insensitive via per-token lowering.
+    * case-insensitive via per-token lowering — of ONE [[memberCounts]]
+    * column `m`.
     */
-  private def langCounts(text: Column): (Column, Column, Column) =
-    (element_at(memberCounts(text), 2),
-      element_at(memberCounts(text), 3),
-      element_at(memberCounts(text), 4))
+  private def langCounts(m: Column): (Column, Column, Column) =
+    (element_at(m, 2), element_at(m, 3), element_at(m, 4))
 
   /** BPE-ish subword proxy: letter runs, digit runs, or single punctuation
     * marks — the usual pre-tokenizer split that upper-bounds BPE tokens.
@@ -272,25 +271,29 @@ object TextStats {
     * rationale as [[qualityScoreCol]]: per-row, join-free filtering).
     */
   def predictedLangCol(text: Column): Column = {
-    val (en, es, fr) = langCounts(text)
+    val (en, es, fr) = langCounts(memberCounts(text))
+    predictedLang(en, es, fr)
+  }
+
+  /** Highest marker count wins with a fixed precedence
+    * (en > es > fr > unknown) so ties are deterministic.
+    */
+  private def predictedLang(en: Column, es: Column, fr: Column): Column =
     when(en >= es && en >= fr && en > 0, lit("en"))
       .when(es >= fr && es > 0, lit("es"))
       .when(fr > 0, lit("fr"))
       .otherwise(lit("unknown"))
-  }
 
   /** Marker-word language ID (n-gram heuristic): count hits of tiny
-    * language-specific word sets; highest count wins with a fixed
-    * precedence (en > es > fr > unknown) so ties are deterministic.
+    * language-specific word sets, see [[predictedLang]]. The member
+    * counts are projected once, so the row is tokenized once whether or
+    * not subexpression elimination fires.
     */
   def langId(documents: DataFrame): DataFrame = {
-    val (en, es, fr) = langCounts(col("text"))
-    documents.select(col("doc_id"), en.as("en_score"), es.as("es_score"), fr.as("fr_score"))
-      .withColumn("predicted_lang",
-        when(col("en_score") >= col("es_score") && col("en_score") >= col("fr_score") && col("en_score") > 0, lit("en"))
-          .when(col("es_score") >= col("fr_score") && col("es_score") > 0, lit("es"))
-          .when(col("fr_score") > 0, lit("fr"))
-          .otherwise(lit("unknown")))
+    val (en, es, fr) = langCounts(col("member_counts"))
+    documents.select(col("doc_id"), memberCounts(col("text")).as("member_counts"))
+      .select(col("doc_id"), en.as("en_score"), es.as("es_score"), fr.as("fr_score"))
+      .withColumn("predicted_lang", predictedLang(col("en_score"), col("es_score"), col("fr_score")))
   }
 
   val langIdOracle: String =

@@ -247,55 +247,21 @@ object Triangles {
     * 237 s). Shuffled BYTES are sub-linear in the count (sparser
     * partials compress better: 4.9 / 7.1 / 9.5 GB) — bytes understate
     * the merge's deserialize+OR cost 3×, which is why the r17 probe's
-    * byte-free telemetry missed this.
+    * byte-free telemetry missed this. The 16 is a SINGLE-NODE optimum
+    * (the build fold is memory-bus-bound on one machine); the sketch is
+    * bit-identical at any partials count, so a caller may pass another.
     */
   private[graft] val bloomMaxPartials: Int = 16
 
-  /** Deploy-time override for [[bloomMaxPartials]] (r18 advisory): the
-    * measured 16 is a SINGLE-NODE optimum — on local[32] the build fold
-    * is memory-bus-bound, so capping the scan at 16 tasks costs ~nothing
-    * (69.8 vs 75.7 s) while the merge gain is 2.1×. On a multi-node
-    * cluster each node has its own memory bus: the same cap would strand
-    * build parallelism the single-machine probe cannot see. The sketch
-    * is bit-identical at any partials count (the knob is pure cost
-    * tuning), so the bound is a conf, not a constant — multi-node
-    * deployments should raise it toward ~(16 × nodes) and re-measure the
-    * build/merge balance; the default stays the value measured at the
-    * regime-2 ceiling (`bench_records/r18_bloom_merge_probe.json`).
-    */
-  private[graft] def resolvedBloomMaxPartials(
-      spark: org.apache.spark.sql.SparkSession): Int = {
-    val k = "spark.graft.bloom.maxPartials"
-    val v = spark.conf.getOption(k).map(_.trim)
-    v.map { s =>
-      val n = try s.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$k must be a positive integer, got '$s'")
-      }
-      require(n >= 1, s"$k must be >= 1, got $n")
-      n
-    }.getOrElse(bloomMaxPartials)
-  }
-
   private[graft] def closureBloom(oriented: DataFrame, m: Long,
-      maxPartials: Int = -1)
+      maxPartials: Int = bloomMaxPartials)
       : org.apache.spark.util.sketch.BloomFilter = {
     import oriented.sparkSession.implicits._
-    // -1 is the only resolve-from-conf sentinel; an accidental 0/negative
-    // argument must be a named error, not a silent conf fallback —
-    // mirroring resolvedBloomMaxPartials' rejection of non-positive conf
-    // values (r19 advisory)
-    require(maxPartials == -1 || maxPartials >= 1,
-      s"closureBloom: maxPartials must be >= 1 (or -1 to resolve from " +
-        s"spark.graft.bloom.maxPartials), got $maxPartials")
-    val bound =
-      if (maxPartials > 0) maxPartials
-      else resolvedBloomMaxPartials(oriented.sparkSession)
+    require(maxPartials >= 1, s"closureBloom: maxPartials must be >= 1, got $maxPartials")
     val hashes = oriented.select(expr("xxhash64(src, dst)")).as[Long].rdd
     val bounded =
-      if (hashes.getNumPartitions > bound)
-        hashes.coalesce(bound)
+      if (hashes.getNumPartitions > maxPartials)
+        hashes.coalesce(maxPartials)
       else hashes
     bounded
       .mapPartitions { it =>

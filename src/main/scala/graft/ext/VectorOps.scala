@@ -140,7 +140,7 @@ object VectorOps {
       .sortBy(_._1)
     val bc = spark.sparkContext.broadcast(quantized)
     val n = quantized.length
-    spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
+    spark.range(0, n, 1, graft.core.GraftSession.parallelism(spark))
       .as[Long]
       .mapPartitions { it =>
         val m = bc.value

@@ -54,7 +54,7 @@ private[streaming] object StreamRunner {
     val gate = spark.newSession()
     for ((k, v) <- spark.conf.getAll if gate.conf.isModifiable(k)) gate.conf.set(k, v)
     gate.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, spark.sparkContext.defaultParallelism).toString)
+      math.min(4, graft.core.GraftSession.parallelism(spark)).toString)
     gate
   }
 

@@ -57,28 +57,11 @@ class ClosureBloomSpec extends AnyFunSuite with SharedSpark {
         "(plus sampling slack) — the sketch is undersized or saturated")
   }
 
-  test("partials bound is conf-overridable; sketch is bit-identical across partials counts (r18 advisory)") {
-    val k = "spark.graft.bloom.maxPartials"
-    // default = the value measured at the regime-2 ceiling on local[32]
-    assert(Triangles.resolvedBloomMaxPartials(spark) == 16)
-    // a multi-node deployment raises it via conf — honored verbatim
-    spark.conf.set(k, "48")
-    try assert(Triangles.resolvedBloomMaxPartials(spark) == 48)
-    finally spark.conf.unset(k)
-    // junk fails with a named error, not a NumberFormatException deep in
-    // a job: the conf is deploy-time surface, defects must name the key
-    for (bad <- Seq("0", "-4", "lots")) {
-      spark.conf.set(k, bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          Triangles.resolvedBloomMaxPartials(spark))
-        assert(e.getMessage.contains(k), s"error for '$bad' must name the conf key")
-      } finally spark.conf.unset(k)
-    }
-    // the knob is pure cost tuning: the merged sketch must be
+  test("sketch is bit-identical across partials counts; a non-positive bound is a named error") {
+    // the bound is pure cost tuning: the merged sketch must be
     // bit-identical at any partials count (OR is associative and the
-    // sizing depends only on m), so retuning it per cluster can never
-    // change results
+    // sizing depends only on m), so a caller passing another bound can
+    // never change results
     val n = 200000L
     val inserted = spark.range(0, n)
       .select(col("id").as("src"), (col("id") + 1000000000L).as("dst"))
@@ -90,11 +73,9 @@ class ClosureBloomSpec extends AnyFunSuite with SharedSpark {
     }
     assert(java.util.Arrays.equals(bytesAt(2), bytesAt(7)),
       "sketch bits differ across partials counts — the bound is no longer cost-only")
-    // explicit non-positive maxPartials is a named error, NOT a silent
-    // fallback to the conf: -1 is the only resolve-from-conf sentinel,
-    // so an accidental 0/negative argument must fail as loudly as a
-    // non-positive conf value does (r19 advisory)
-    for (bad <- Seq(0, -4)) {
+    // an explicit non-positive maxPartials is a named error, not a
+    // coalesce to zero partitions (r19 advisory)
+    for (bad <- Seq(0, -4, -1)) {
       val e = intercept[IllegalArgumentException](
         Triangles.closureBloom(inserted, n, maxPartials = bad))
       assert(e.getMessage.contains("maxPartials"),

@@ -93,10 +93,14 @@ class LayoutInvarianceSpec extends AnyFunSuite with SharedSpark
     * is a performance choice, never a semantic one. The layout regression
     * set plus the cache users whose partitioning the cached-plan flag
     * re-sizes must return the same rows with every tuning knob the
-    * engine relies on turned the other way.
+    * engine relies on turned the other way. The alternate arm's 7
+    * shuffle partitions also move every explicit count taken from
+    * [[graft.core.GraftSession.parallelism]]: g4's adjacency, d8's and
+    * c2's corpus spreads, s6's code exchange.
     */
   private val confSensitiveSet = regressionSet ++ Seq(
-    "g3_bfs_hops", "g4_label_prop", "q31_etl_transactions", "d8_dup_clusters")
+    "g3_bfs_hops", "g4_label_prop", "q31_etl_transactions", "d8_dup_clusters",
+    "s6_ann_pq", "c2_corpus_filter_first")
 
   /** Canonical-layout rows under the engine conf: the baseline of both laws. */
   private lazy val engineRows: Map[String, Seq[String]] =

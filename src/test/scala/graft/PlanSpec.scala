@@ -204,6 +204,15 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       s"interval merge window not partitioned by doc:\n$p")
   }
 
+  test("t3: langId tokenizes once — one TokenMemberCounts in the analysed plan") {
+    // the one-pass property must hold by construction, not by whether
+    // subexpression elimination fires (interpreted fallback never does)
+    val analysed = SparkEntry.queries("t3_langid")(spark, sf).queryExecution.analyzed
+    val n = analysed.collect { case node => node.expressions.map(_.collect {
+      case e: graft.functions.TokenMemberCounts => e }.size).sum }.sum
+    assert(n == 1, s"$n TokenMemberCounts trees in langId's analysed plan:\n$analysed")
+  }
+
   test("t11: grouped top-n prunes map-side via WindowGroupLimit") {
     // rank<=n over a skewed group must NOT ship every group member to
     // one task: Spark 4 plans the filter as per-task top-n heaps

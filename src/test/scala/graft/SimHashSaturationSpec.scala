@@ -11,15 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * λ/cap = 0.64, 0.355 at 1.28, with the ratio (not n alone) governing.
   * `pairs()` now rejects corpora past λ > bound × cap with a named error
   * instead of silently returning a recall-dead pair set. This spec pins
-  * the guard's arithmetic, its conf override, and the named errors on
-  * junk conf values — using a NARROW block layout (maxHamming=15 → 16
+  * the guard's arithmetic, its named error, and the 0.5 bound itself at
+  * its boundary — using a NARROW block layout (maxHamming=15 → 16
   * blocks of 4 bits, space 2⁴=16) so a few hundred docs cross the
   * ceiling that needs millions at the default 16-bit layout.
   */
 class SimHashSaturationSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
-
-  private val ConfKey = "spark.graft.simhash.maxOccupancyPerCap"
 
   // 500 docs over 4-bit blocks: λ = 500/16 = 31.25
   private def docs = spark.range(0, 500)
@@ -30,8 +28,8 @@ class SimHashSaturationSpec extends AnyFunSuite with SharedSpark {
     // λ=31.25 > 0.5 × cap=50 = 25 → named rejection
     val e = intercept[IllegalArgumentException](
       SimHash.pairs(docs, maxHamming = 15, bucketCap = 50))
-    for (needle <- Seq("block space saturated", "occupancy", ConfKey,
-        "MinHash", "r20_simhash_saturation"))
+    for (needle <- Seq("block space saturated", "occupancy", "MinHash",
+        "r20_simhash_saturation"))
       assert(e.getMessage.contains(needle),
         s"guard error must carry '$needle', got: ${e.getMessage.take(400)}")
   }
@@ -44,24 +42,13 @@ class SimHashSaturationSpec extends AnyFunSuite with SharedSpark {
     assert(SimHash.pairs(docs, maxHamming = 15, bucketCap = Int.MaxValue).count() >= 0L)
   }
 
-  test("conf override is honored; junk conf values are named errors carrying the key") {
-    assert(SimHash.resolvedMaxOccupancyPerCap(spark) == 0.5,
-      "default must be the measured 0.5 knee")
-    spark.conf.set(ConfKey, "2.5")
-    try {
-      assert(SimHash.resolvedMaxOccupancyPerCap(spark) == 2.5)
-      // bound raised → the same over-ceiling corpus now passes
-      assert(SimHash.pairs(docs, maxHamming = 15, bucketCap = 50).count() >= 0L)
-    } finally spark.conf.unset(ConfKey)
-    for (bad <- Seq("0", "-1", "junk", "NaN")) {
-      spark.conf.set(ConfKey, bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          SimHash.resolvedMaxOccupancyPerCap(spark))
-        assert(e.getMessage.contains(ConfKey),
-          s"error for '$bad' must name the conf key, got: ${e.getMessage.take(200)}")
-      } finally spark.conf.unset(ConfKey)
-    }
+  test("the bound is the measured 0.5 knee, pinned at its boundary") {
+    assert(SimHash.maxOccupancyPerCap == 0.5, "the bound must be the measured 0.5 knee")
+    // λ = 31.25: 0.5 × 63 = 31.5 admits the corpus, 0.5 × 62 = 31 does not
+    assert(SimHash.pairs(docs, maxHamming = 15, bucketCap = 63).count() >= 0L)
+    val e = intercept[IllegalArgumentException](
+      SimHash.pairs(docs, maxHamming = 15, bucketCap = 62))
+    assert(e.getMessage.contains("bucketCap=62"), e.getMessage.take(400))
   }
 
   test("the default 16-bit layout admits gate-scale corpora untouched") {

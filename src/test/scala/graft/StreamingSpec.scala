@@ -253,7 +253,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       val gate = SparkEntry.queries("e4_stateful_totals")(spark, sf).sparkSession
       for (k <- keys) assert(gate.conf.get(k) == "false", s"$k did not reach the gate session")
       assert(gate.conf.get("spark.sql.shuffle.partitions") ==
-        math.min(4, spark.sparkContext.defaultParallelism).toString)
+        math.min(4, graft.core.GraftSession.parallelism(spark)).toString)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
