@@ -76,6 +76,15 @@ The one exception, named in CONF_SITES with its reason, is a deployment
 path rather than a tuning value. Comments are not searched; any other
 site is flagged.
 
+One table-read path: a parquet read of a registry table by its path
+(`read.parquet(s"$d/<table>.parquet")`, for any of the ten tables in
+REGISTRY_TABLES) may appear in src/main code only in core/Catalog.scala.
+`Catalog.table` reads the schema from the table's footer on the driver,
+so building a frame runs no Spark job; a bare read runs one schema-
+inference job per call, and a hand-written read of `events` also skips
+the canonical `ts` normalization of `Catalog.events`. Comments are not
+searched; any other site is flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -132,6 +141,11 @@ CONF_SITES = {
     # where the managed bucketed table lives, to clear an orphaned location
     ("Bucketing.scala", "writeBucketed"),
 }
+CATALOG_HOME = os.path.join("src", "main", "scala", "graft", "core", "Catalog.scala")
+REGISTRY_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+                   "lineitem", "events", "documents", "embeddings")
+TABLE_READ_RE = re.compile(r"\bread\s*\.\s*parquet\(\s*s?\"[^\"\n]*/(?:"
+                           + "|".join(REGISTRY_TABLES) + r")\.parquet\"")
 DEF_NAME_RE = re.compile(r"\bdef\s+(\w+)")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
@@ -230,6 +244,7 @@ def main():
     harness = (confined_outside({HARNESS_HOME}, HYGIENE_RE)
                + confined_outside({HARNESS_HOME}, LISTENER_RE, base="src"))
     confs = confined_outside({SESSION_HOME}, CONF_RE, CONF_SITES)
+    table_reads = confined_outside({CATALOG_HOME}, TABLE_READ_RE)
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -274,6 +289,10 @@ def main():
               "and CONF_SITES (use GraftSession.parallelism):")
         for site in confs:
             print(f"  {site}")
+    if table_reads:
+        print(f"registry-table parquet read outside {CATALOG_HOME} (use Catalog.table):")
+        for site in table_reads:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -283,7 +302,8 @@ def main():
         print(f"test-tree mains named in none of {', '.join(LIVING_DOCS)}:")
         for site in stray_mains:
             print(f"  {site}")
-    if flagged or builders or caches or streams or hashes or checkpoints or harness or confs or stray_mains:
+    if (flagged or builders or caches or streams or hashes or checkpoints or harness or confs or table_reads
+            or stray_mains):
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.core.QueryTrace
+import graft.core.{Catalog, QueryTrace}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs SparkEntry.benchQueries on SPARK_GRAFT_SF_DIR,
@@ -228,7 +228,7 @@ object Bench {
     val (spark, only) = Verify.mainSetup("graft-bench")
     // warm the JVM + file cache once with a trivial scan so the first
     // measured query doesn't pay session bring-up
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    Catalog(spark, sfDir).lineitem.count()
     val names = SparkEntry.benchQueries.filter(only)
     val (line, failed, digest) = runBench(spark, sfDir, names, runs, outDir)
     System.out.println(line)

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Table access over a scale-factor directory of parquet files
   * (`/root/testdata/sf*` layout, see TESTDATA.md).
@@ -8,12 +8,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference loads every table through a single helper with schema
   * inference (`src/main/java/com/retail/ingestion/DataLoader.java:9-11`);
   * here parquet carries its own schema so the catalog is a thin path
-  * mapper. CSV ingestion with *declared* schemas (the engine's fix for the
-  * reference's inferSchema double-scan anti-pattern, SURVEY §4) lives in
-  * [[graft.sources.CsvIo]].
+  * mapper. Each [[table]] call reads that schema from the table's parquet
+  * footer on the driver ([[GraftBridge.parquetSchema]]) and hands it to
+  * the reader, so building a frame runs no Spark job: a bare
+  * `spark.read.parquet` runs one per table just to read the same footer,
+  * before the query's own action. The catalog keeps no state, so every
+  * call sees the files and the conf as they are now. CSV ingestion with
+  * *declared* schemas (the engine's fix for the reference's inferSchema
+  * double-scan anti-pattern, SURVEY §4) lives in [[graft.sources.CsvIo]].
   */
 final case class Catalog(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(GraftBridge.parquetSchema(spark, path)).parquet(path)
+  }
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")

@@ -409,7 +409,7 @@ object Triangles {
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
         val mightContain = {
-          import org.apache.spark.sql.GraftColumnBridge._
+          import org.apache.spark.sql.GraftBridge._
           column(org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
             expression(lit(bos.toByteArray)), expression(expr("xxhash64(a, b)"))))
         }

@@ -137,7 +137,7 @@ case class BpeTokenCount(child: Expression) extends UnaryExpression {
 
 object BpeTokenCount {
   def of(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(BpeTokenCount(expression(text)))
   }
 }

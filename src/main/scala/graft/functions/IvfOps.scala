@@ -297,7 +297,7 @@ case class IvfTopCells(child: Expression, centsQ: Array[Array[Long]], nProbe: In
 object IvfNearestCell {
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(v: Column, centsQ: Array[Array[Long]]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(IvfNearestCell(expression(v), centsQ))
   }
 }
@@ -305,7 +305,7 @@ object IvfNearestCell {
 object IvfTopCells {
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(v: Column, centsQ: Array[Array[Long]], nProbe: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(IvfTopCells(expression(v), centsQ, nProbe))
   }
 }

@@ -358,7 +358,7 @@ private[graft] object PqExpression {
 object PqCodes {
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(v: Column, codebook: Array[Array[Array[Float]]]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(PqCodes(expression(v), codebook))
   }
 }
@@ -366,7 +366,7 @@ object PqCodes {
 object PqDistanceTable {
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(v: Column, codebook: Array[Array[Array[Float]]]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(PqDistanceTable(expression(v), codebook))
   }
 }

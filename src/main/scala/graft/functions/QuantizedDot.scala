@@ -167,7 +167,7 @@ object QuantizedDot {
 
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(QuantizedDot(expression(a), expression(b)))
   }
 }

@@ -44,7 +44,7 @@ object RegexCounts {
   }
 
   def of(text: Column, patterns: Seq[String]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(RegexCounts(expression(text), patterns))
   }
 }

@@ -76,7 +76,7 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 
 object RollingHash {
   def apply(c: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(new RollingHash(expression(c)))
   }
 

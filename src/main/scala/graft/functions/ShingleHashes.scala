@@ -120,7 +120,7 @@ case class HashedNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object HashedNgrams {
   def of(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(HashedNgrams(expression(text), n))
   }
 }
@@ -148,7 +148,7 @@ case class MinHashSignature(child: Expression, n: Int, numHashes: Int, p: Long)
 
 object MinHashSignature {
   def of(text: Column, n: Int, numHashes: Int, p: Long): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(MinHashSignature(expression(text), n, numHashes, p))
   }
 }

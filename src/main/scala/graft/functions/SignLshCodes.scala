@@ -143,7 +143,7 @@ object SignLshCodes {
 
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def of(v: Column, bands: Int, bits: Int, dims: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(SignLshCodes(expression(v), bands, bits, dims))
   }
 }

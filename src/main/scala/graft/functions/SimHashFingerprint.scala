@@ -76,7 +76,7 @@ object SimHashFingerprint {
   }
 
   def of(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(SimHashFingerprint(expression(text)))
   }
 }

@@ -108,7 +108,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 object SortedIntersectCount {
   /** Column-API entry point (Spark 4 classic Column<->Expression bridge). */
   def ofSorted(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(SortedIntersectCount(expression(a), expression(b)))
   }
 

@@ -60,7 +60,7 @@ object TokenMemberCounts {
   }
 
   def of(text: Column, lists: Seq[(Seq[String], Boolean)]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(TokenMemberCounts(expression(text), lists))
   }
 }

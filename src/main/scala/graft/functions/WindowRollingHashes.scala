@@ -106,7 +106,7 @@ case class WindowRollingHashes(child: Expression, window: Int, stride: Int)
 
 object WindowRollingHashes {
   def of(text: Column, window: Int, stride: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(WindowRollingHashes(expression(text), window, stride))
   }
 }

@@ -90,7 +90,7 @@ case class WordGramHashesExpr(child: Expression, n: Int) extends UnaryExpression
 
 object WordGramHashesExpr {
   def of(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
+    import org.apache.spark.sql.GraftBridge._
     column(WordGramHashesExpr(expression(text), n))
   }
 }

@@ -163,7 +163,7 @@ object ExtensionQueries {
     // finding generalized)
     graft.core.Scratch.staged("e4_events", d) { dir =>
       val rw = dir + "_rw"
-      s.read.parquet(s"$d/events.parquet").coalesce(1)
+      Catalog(s, d).table("events").coalesce(1)
         .write.mode("overwrite").parquet(rw)
       stageParquetPayload(java.nio.file.Paths.get(rw), java.nio.file.Paths.get(dir), "events_")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -207,7 +207,7 @@ object ExtensionQueries {
   private def stagedSplitEventFiles(s: SparkSession, d: String): (String, String) =
     graft.core.Scratch.staged("e10_split", d) { base =>
       val cut = to_timestamp(lit("2024-01-16 00:00:00")) // UTC session frame
-      val raw = graft.core.EventTime.normalizeTs(s.read.parquet(s"$d/events.parquet"))
+      val raw = Catalog(s, d).events
       def half(name: String, pred: org.apache.spark.sql.Column): String = {
         val dir = s"$base/$name"
         raw.filter(pred).coalesce(1).write.mode("overwrite").parquet(dir)

@@ -36,13 +36,15 @@ object EventStream {
     * is how r9 broke (the footer changed from TIMESTAMP(NANOS) to
     * TIMESTAMP_NTZ micros and a forced-LongType read double-divided the
     * values onto 1970). Instead the schema is derived from the actual
-    * parquet footers (a driver-only metadata read of the same directory)
-    * and `ts` goes through the SAME canonical normalization as the batch
-    * catalog ([[graft.core.EventTime.normalizeTs]]) — one ingestion code
-    * path, so batch and streaming can never disagree on event time.
+    * parquet footer (a driver-only read of one footer of the same
+    * directory, [[org.apache.spark.sql.GraftBridge.parquetSchema]]: no
+    * Spark job) and `ts` goes through the SAME canonical normalization as
+    * the batch catalog ([[graft.core.EventTime.normalizeTs]]) — one
+    * ingestion code path, so batch and streaming can never disagree on
+    * event time.
     */
   def readStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = spark.read.parquet(dir).schema
+    val fileSchema = org.apache.spark.sql.GraftBridge.parquetSchema(spark, dir)
     graft.core.EventTime.normalizeTs(
       spark.readStream
         .schema(fileSchema)

@@ -1,8 +1,11 @@
 package graft
 
-import graft.core.Catalog
+import graft.core.{Catalog, QueryTrace}
 import graft.ml.SegmentationPipeline
 import graft.serve.Serving
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +39,57 @@ class ServingSpec extends AnyFunSuite with SharedSpark {
       Seq[Any](0L, 1000.0, 5.0, 20000.0, 30.0))
     assert(manual.select("prediction").head().getInt(0) >= 0)
     features.unpersist()
+  }
+
+  /** The serving frame as a caller holds it: features persisted as a
+    * multi-file parquet table (so the lookup's one job must cover every
+    * file), and a model fitted on it.
+    */
+  private lazy val served = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve_jobs").toString
+    val c = Catalog(spark, sf)
+    SegmentationPipeline.features(c.customer, c.orders).repartition(3)
+      .write.mode("overwrite").parquet(s"$dir/features.parquet")
+    val features = Catalog(spark, dir).table("features")
+    (features, SegmentationPipeline.fitFixedK(features, 3))
+  }
+
+  private def batchPredictions(model: PipelineModel, frame: DataFrame, key: Long): Seq[(Double, Int)] =
+    model.transform(frame).filter(col("custkey") === key)
+      .select("acctbal", "prediction").collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq.sorted
+
+  test("a present key costs one job, the caller's collect included; an absent key one job and None") {
+    val (features, model) = served
+    val key = features.select("custkey").head().getLong(0)
+    var preds = Seq.empty[Int]
+    val present = QueryTrace.timed(spark) {
+      preds = Serving.predictByKey(model, features, "custkey", key).get
+        .select("prediction").collect().map(_.getInt(0)).toSeq
+      preds.size.toLong
+    }
+    assert(present.c.jobs.size == 1, present.c.jobs.map(_._4).mkString("; "))
+    assert(preds == batchPredictions(model, features, key).map(_._2))
+
+    var absent: Option[DataFrame] = Some(features)
+    val missing = QueryTrace.timed(spark) {
+      absent = Serving.predictByKey(model, features, "custkey", -1L); 0L
+    }
+    assert(absent.isEmpty)
+    assert(missing.c.jobs.size == 1, missing.c.jobs.map(_._4).mkString("; "))
+  }
+
+  test("a key with more rows than the bound is scored in full, as a batch transform scores it") {
+    val (features, model) = served
+    val key = features.select("custkey").head().getLong(0)
+    val n = Serving.MaxKeyRows + 5
+    // n distinct rows of one key: its features with acctbal shifted by 0 until n
+    val crowded = features.filter(col("custkey") === key).crossJoin(spark.range(n))
+      .withColumn("acctbal", col("acctbal") + col("id")).drop("id")
+      .unionByName(features.filter(col("custkey") =!= key))
+    val got = Serving.predictByKey(model, crowded, "custkey", key).get
+      .select("acctbal", "prediction").collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq.sorted
+    assert(got.size == n)
+    assert(got == batchPredictions(model, crowded, key))
   }
 
   test("ml_model_roundtrip registry gate: loaded model rescoring matches exactly") {
