@@ -85,6 +85,16 @@ inference job per call, and a hand-written read of `events` also skips
 the canonical `ts` normalization of `Catalog.events`. Comments are not
 searched; any other site is flagged.
 
+One bounded driver fit: a statement that chains `.limit(` into
+`.collect()`, `.head(`, `.take(` or `.first()` (on one line, or across
+lines that continue the chain with a leading `.`), and the cap literal
+`65536`, may appear in src/main code only in core/BoundedFit.scala.
+Every driver fit pulls its sample there (the `MaxRows` smallest rows
+by a key list, or the `n` smallest for a fixed seed) and every oracle
+replays that sample from the same keys, so the sample definition and
+its cap are decided once. Comments are not searched; any other site is
+flagged.
+
 No unreferenced dev mains: every `object` with a `def main` under
 src/test must be named in a living doc (README.md, SCALING.md or
 COVERAGE.md) that says what it reproduces. Historical records
@@ -146,6 +156,11 @@ REGISTRY_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
                    "lineitem", "events", "documents", "embeddings")
 TABLE_READ_RE = re.compile(r"\bread\s*\.\s*parquet\(\s*s?\"[^\"\n]*/(?:"
                            + "|".join(REGISTRY_TABLES) + r")\.parquet\"")
+FIT_HOME = os.path.join("src", "main", "scala", "graft", "core", "BoundedFit.scala")
+# `.limit(` then, within one statement, a driver action: the chain may
+# only cross a newline onto a line that continues it with `.`
+FIT_RE = re.compile(r"\.\s*limit\((?:[^\n]|\n\s*(?=\.))*?\.\s*(?:collect\(\)|head\(|take\(|first\(\))"
+                    r"|(?<![\w.])65536(?!\d)")
 DEF_NAME_RE = re.compile(r"\bdef\s+(\w+)")
 # string/char literals are kept as-is (so a `//` inside one is not a
 # comment); comments are blanked, keeping their newlines for line numbers
@@ -245,6 +260,7 @@ def main():
                + confined_outside({HARNESS_HOME}, LISTENER_RE, base="src"))
     confs = confined_outside({SESSION_HOME}, CONF_RE, CONF_SITES)
     table_reads = confined_outside({CATALOG_HOME}, TABLE_READ_RE)
+    fits = confined_outside({FIT_HOME}, FIT_RE)
 
     docs = ""
     for doc in LIVING_DOCS:
@@ -293,6 +309,10 @@ def main():
         print(f"registry-table parquet read outside {CATALOG_HOME} (use Catalog.table):")
         for site in table_reads:
             print(f"  {site}")
+    if fits:
+        print(f"limit-then-collect pull or the 65536 cap outside {FIT_HOME} (use BoundedFit):")
+        for site in fits:
+            print(f"  {site}")
     if flagged:
         print("UNREFERENCED public defs in src/main (no other occurrence in src/):")
         for name, sites in flagged:
@@ -303,7 +323,7 @@ def main():
         for site in stray_mains:
             print(f"  {site}")
     if (flagged or builders or caches or streams or hashes or checkpoints or harness or confs or table_reads
-            or stray_mains):
+            or fits or stray_mains):
         sys.exit(1)
     print(f"check_unreferenced: OK ({len(decls)} public defs, all referenced)")
 

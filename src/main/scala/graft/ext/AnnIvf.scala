@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.BoundedFit
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vector
@@ -26,23 +27,19 @@ import org.apache.spark.sql.types.DoubleType
   */
 object AnnIvf {
 
-  /** Cap on vectors fed to the k-means fit. Centroids are a *summary*;
-    * fitting on the full corpus would make the (iterative, driver-coupled)
-    * fit the bottleneck before the first query runs at 100 TB. A bounded
-    * uniform sample gives statistically equivalent centroids at constant
-    * cost; the sample is seeded, so centroids stay deterministic for a
-    * fixed input partitioning.
-    */
-  val maxFitVectors: Long = 65536L
-
-  /** Seeded k-means cell centroids over a bounded sample (deterministic;
-    * the model is derived state, recomputable from data alone).
+  /** Seeded k-means cell centroids over a sample of about
+    * [[BoundedFit.MaxRows]] vectors (deterministic for a fixed input
+    * partitioning; the model is derived state, recomputable from data
+    * alone). Centroids are a *summary*; fitting on the full corpus would
+    * make the iterative, driver-coupled fit the bottleneck before the
+    * first query runs at 100 TB, and a bounded uniform sample gives
+    * statistically equivalent centroids at constant cost.
     */
   def centroids(embeddings: DataFrame, nCells: Int, seed: Long = 42L): Array[Vector] = {
     val n = embeddings.count()
     val sampled =
-      if (n <= maxFitVectors) embeddings
-      else embeddings.sample(withReplacement = false, maxFitVectors.toDouble / n, seed)
+      if (n <= BoundedFit.MaxRows) embeddings
+      else embeddings.sample(withReplacement = false, BoundedFit.MaxRows.toDouble / n, seed)
     val vecs = sampled.select(array_to_vector(col("embedding")).as("features"))
     new KMeans().setK(nCells).setSeed(seed).setMaxIter(10)
       .fit(vecs).clusterCenters
@@ -86,20 +83,17 @@ object AnnIvf {
   private[ext] def probeCells(queries: DataFrame, cents: Array[Vector], nProbe: Int): DataFrame =
     probeCellsQ(queries, quantCents(cents), nProbe)
 
-  /** Centroids = the vectors with the `nCells` smallest vec_ids. A
-    * deterministic, SQL-replayable centroid choice: with it the WHOLE
-    * IVF path (assign, probe, rescore, rank) is hash-gated by
-    * [[fixedTopKOracle]] — the k-means fit is the only piece ANSI SQL
-    * cannot replay, and here it drops out. Statistically worse cells
-    * than k-means; byte-identical plan shape.
+  /** Centroids = the vectors with the `nCells` smallest vec_ids (the
+    * [[BoundedFit.vectors]] pull). A deterministic, SQL-replayable
+    * centroid choice: with it the WHOLE IVF path (assign, probe,
+    * rescore, rank) is hash-gated by [[fixedTopKOracle]] — the k-means
+    * fit is the only piece ANSI SQL cannot replay, and here it drops
+    * out. Statistically worse cells than k-means; byte-identical plan
+    * shape.
     */
-  def fixedCentroids(embeddings: DataFrame, nCells: Int): Array[Vector] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    embeddings.orderBy(col("vec_id")).limit(nCells)
-      .select(col("embedding")).as[Array[Float]].collect()
+  def fixedCentroids(embeddings: DataFrame, nCells: Int): Array[Vector] =
+    BoundedFit.vectors(embeddings, nCells)
       .map(a => org.apache.spark.ml.linalg.Vectors.dense(a.map(_.toDouble)))
-  }
 
   /** [[assign]] under quantized-integer centroids (the grid the kernels
     * score on directly — the literal form's `(q + 0.5) / Grid` double
@@ -128,78 +122,26 @@ object AnnIvf {
   /** Deterministic fixed-iteration Lloyd on the integer grid — the
     * SQL-replayable k-means that lets the FITTED IVF path hash-gate
     * (where [[centroids]]' ML k-means fit cannot: k-means|| init +
-    * order-dependent double sums). Init = the quantized vectors of the
-    * `nCells` smallest vec_ids (cell id = rank); each iteration assigns
-    * every vector to its argmin cell on the integer score grid (ties to
-    * the lower cell) and re-centers each cell at the elementwise
-    * floor-div mean `floorDiv(Σ xq, n)` — BIGINT sums are
-    * order-independent, floor-div is engine-exact, so T iterations
-    * replay bit-identically as an unrolled CTE chain
-    * ([[lloydTopKOracle]]), the PageRank/LabelPropagation pattern
-    * applied to the clustering fit. Cells that lose all members keep
-    * their previous centroid.
+    * order-dependent double sums). It is [[BoundedFit.lloyd]] over the
+    * quantized [[BoundedFit.vectors]] sample of the smallest vec_ids
+    * (the full corpus whenever it fits, as at every oracle scale; ≤16 MB
+    * at the cap): init = the `nCells` smallest vec_ids (cell id = rank;
+    * a corpus smaller than nCells seeds fewer cells), argmin on the
+    * integer score grid (ties to the lower cell), floor-div re-centering;
+    * T iterations replay bit-identically as an unrolled CTE chain
+    * ([[lloydTopKOracle]]), the PageRank/LabelPropagation pattern applied
+    * to the clustering fit.
     *
-    * The per-iteration driver pull is `nCells × dims` (sum, count) rows
-    * — a plan constant (the AnnIvf-centroid license), never data. At
-    * 100 TB the assignment pass is the same one scan per iteration the
-    * ML fit pays; the sample-bounding of [[centroids]] applies the same
-    * way if the fit input is capped upstream.
+    * The fit is a driver loop with ZERO per-iteration planning or codegen
+    * cost. A distributed formulation of the same arithmetic measured
+    * 4.8–12 s at a 2000-vector corpus — all of it Catalyst re-planning +
+    * janino recompiling the 16×64-literal scoring expression per
+    * iteration (the literals change every round), none of it compute.
     */
   def lloydCentroidsQ(embeddings: DataFrame, nCells: Int, iters: Int = 3): Array[Array[Long]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val grid = graft.functions.QuantizedDot.Grid
-    // the fit input is the [[maxFitVectors]] SMALLEST vec_ids (the full
-    // corpus whenever it fits, as at every oracle scale) — a
-    // deterministic, SQL-expressible subset, unlike a seeded sample —
-    // collected and quantized on the driver: ≤16 MB at the cap, so the
-    // fit is a tight driver loop with ZERO per-iteration planning or
-    // codegen cost. A distributed formulation of the same arithmetic
-    // measured 4.8–12 s at a 2000-vector corpus — all of it Catalyst
-    // re-planning + janino recompiling the 16×64-literal scoring
-    // expression per iteration (the literals change every round), none
-    // of it compute. Integer sums are order-independent, so the driver
-    // loop is bit-identical to the distributed form and to the oracle's
-    // CTE replay.
-    val data: Array[Array[Long]] = embeddings
-      .orderBy(col("vec_id")).limit(maxFitVectors.toInt)
-      .select(col("embedding")).as[Array[Float]].collect()
+    val data = BoundedFit.vectors(embeddings)
       .map(_.map(x => graft.functions.QuantizedDot.quantize(x.toDouble)))
-    // a corpus smaller than nCells seeds fewer cells (the oracle's
-    // LIMIT nCells likewise just yields fewer) — every loop below bounds
-    // on cents.length, never the requested nCells, so a 10-vector corpus
-    // with the default 16 cells fits 10 cells instead of indexing past
-    // the seed array
-    var cents: Array[Array[Long]] = data.take(nCells).map(_.clone())
-    val k = cents.length
-    val dims = if (data.isEmpty) 0 else data(0).length
-    for (_ <- 1 to iters) {
-      val c2 = cents.map(c => { var s = 0L; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s })
-      val sums = Array.fill(k)(new Array[Long](dims))
-      val cnt = new Array[Long](k)
-      data.foreach { v =>
-        // argmin of |c|^2 - 2 v*c with strict < : ties keep the LOWER
-        // cell (the oracle's ORDER BY score ASC, cell ASC rn=1)
-        var best = 0; var bestScore = Long.MaxValue
-        var c = 0
-        while (c < k) {
-          var dot = 0L; var i = 0
-          val cc = cents(c)
-          while (i < dims) { dot += v(i) * cc(i); i += 1 }
-          val score = c2(c) - 2L * dot
-          if (score < bestScore) { bestScore = score; best = c }
-          c += 1
-        }
-        val s = sums(best); var i = 0
-        while (i < dims) { s(i) += v(i); i += 1 }
-        cnt(best) += 1
-      }
-      cents = cents.zipWithIndex.map { case (old, c) =>
-        if (cnt(c) == 0L) old // empty cell keeps its centroid (oracle COALESCE)
-        else sums(c).map(s => Math.floorDiv(s, cnt(c)))
-      }
-    }
-    cents
+    BoundedFit.lloyd(data, nCells, iters)
   }
 
   /** Top-k ANN: probe nProbe cells per query, rescore exactly, rank. */
@@ -211,43 +153,30 @@ object AnnIvf {
     * that hash-gates end to end against [[lloydTopKOracle]].
     */
   def topKLloyd(embeddings: DataFrame, queries: DataFrame, k: Int,
-                nCells: Int = 16, nProbe: Int = 4, iters: Int = 3): DataFrame = {
-    val centsQ = lloydCentroidsQ(embeddings, nCells, iters)
-    if (centsQ.isEmpty) return emptyTopK(queries)
+                nCells: Int = 16, nProbe: Int = 4, iters: Int = 3): DataFrame =
+    topKQ(embeddings, queries, k, lloydCentroidsQ(embeddings, nCells, iters), nProbe)
+
+  /** [[topK]] with caller-supplied centroids (fitted or fixed). */
+  def topKWith(embeddings: DataFrame, queries: DataFrame, k: Int,
+               cents: Array[Vector], nProbe: Int = 4): DataFrame =
+    topKQ(embeddings, queries, k, quantCents(cents), nProbe)
+
+  /** The one IVF scoring body under quantized-integer centroids: assign
+    * the corpus, probe each query's `nProbe` nearest cells, join on
+    * cell, rescore exactly, rank. An empty corpus seeds zero cells and
+    * returns the operator's normal (qid, rank, cid, cosine) shape with
+    * zero rows (the scoring kernels require at least one centroid, like
+    * the `array_min` forest they replaced).
+    */
+  private def topKQ(embeddings: DataFrame, queries: DataFrame, k: Int,
+                    centsQ: Array[Array[Long]], nProbe: Int): DataFrame = {
+    if (centsQ.isEmpty)
+      return queries.select(col("vec_id").as("qid"), lit(1).as("rank"),
+        col("vec_id").as("cid"), lit(0.0).as("cosine")).limit(0)
     val assigned = assignQ(embeddings, centsQ)
       .select(col("cell"), col("vec_id").as("cid"), col("embedding").as("cv"),
         col("nrm").as("cn"))
     val probes = probeCellsQ(queries, centsQ, nProbe)
-    val scored = probes.join(assigned, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .filter(VectorOps.validNorm(col("qn")) && VectorOps.validNorm(col("cn")))
-      .withColumn("cosine",
-        VectorOps.dotQ(col("qv"), col("cv")).cast(DoubleType) / (col("qn") * col("cn")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cosine").desc, col("cid").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), col("cosine"))
-  }
-
-  /** [[topK]] with caller-supplied centroids (fitted or fixed). */
-  /** The operator's normal (qid, rank, cid, cosine) shape with zero
-    * rows — what every IVF path returns when an empty corpus seeded
-    * zero cells (the scoring kernels require at least one centroid,
-    * like the `array_min` forest they replaced).
-    */
-  private def emptyTopK(queries: DataFrame): DataFrame =
-    queries.select(col("vec_id").as("qid"), lit(1).as("rank"),
-      col("vec_id").as("cid"), lit(0.0).as("cosine")).limit(0)
-
-  def topKWith(embeddings: DataFrame, queries: DataFrame, k: Int,
-               cents: Array[Vector], nProbe: Int = 4): DataFrame = {
-    if (cents.isEmpty) return emptyTopK(queries)
-    val assigned = assign(embeddings, cents)
-      .select(col("cell"), col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"))
-    val probes = probeCells(queries, cents, nProbe)
     val scored = probes.join(assigned, "cell")
       .filter(col("qid") =!= col("cid"))
       .filter(VectorOps.validNorm(col("qn")) && VectorOps.validNorm(col("cn")))
@@ -331,7 +260,7 @@ object AnnIvf {
     */
   def lloydTopKOracle(k: Int, maxQid: Long, nCells: Int = 16, nProbe: Int = 4,
                       iters: Int = 3, candWhere: String = "TRUE"): String = {
-    // the fit CTEs run over `fel` — the [[maxFitVectors]] SMALLEST
+    // the fit CTEs run over `fel` — the [[BoundedFit.MaxRows]] SMALLEST
     // vec_ids, the exact subset [[lloydCentroidsQ]] collects — so the
     // gate stays correct on a corpus larger than the cap (fitting the
     // oracle on ALL rows would silently diverge from the engine there);
@@ -339,7 +268,7 @@ object AnnIvf {
     // engine's assignQ/probeCellsQ
     val base =
       s"""WITH ${VectorOps.oracleElems},
-         |fids AS (SELECT vec_id FROM embeddings WHERE len(embedding) = 64 ORDER BY vec_id LIMIT $maxFitVectors),
+         |fids AS (SELECT vec_id FROM embeddings WHERE len(embedding) = 64 ORDER BY vec_id LIMIT ${BoundedFit.MaxRows}),
          |fel AS (SELECT e.* FROM el e JOIN fids f ON f.vec_id = e.vec_id),
          |cells0 AS (
          |  SELECT cvec, CAST(row_number() OVER (ORDER BY cvec) - 1 AS INT) AS cell

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.GraftSession
+import graft.core.{BoundedFit, GraftSession}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -37,16 +37,13 @@ import org.apache.spark.sql.types.DoubleType
 object AnnPq {
 
   /** Codebook `(m)(j)` = subspace-`m` slice of the embedding with
-    * `vec_id = j` — fixed, SQL-replayable, collected once driver-side
-    * (`nSub × nCodes × dsub` floats — kilobytes; the moral equivalent of
-    * a broadcast).
+    * `vec_id = j` — fixed, SQL-replayable, collected once driver-side by
+    * the [[BoundedFit.vectors]] pull (`nSub × nCodes × dsub` floats —
+    * kilobytes; the moral equivalent of a broadcast).
     */
   def fixedCodebooks(embeddings: DataFrame, nSub: Int = 8,
                      nCodes: Int = 16): Array[Array[Array[Float]]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val seeds = embeddings.orderBy(col("vec_id")).limit(nCodes)
-      .select(col("embedding")).as[Array[Float]].collect()
+    val seeds = BoundedFit.vectors(embeddings, nCodes)
     require(seeds.length == nCodes, s"corpus smaller than nCodes=$nCodes")
     val dim = seeds.head.length
     require(dim % nSub == 0, s"dim=$dim not divisible by nSub=$nSub")

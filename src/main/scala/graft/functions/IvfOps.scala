@@ -38,9 +38,9 @@ private[graft] sealed trait IvfExpression extends UnaryExpression {
   def centsQ: Array[Array[Long]]
 
   // loud-failure convention (r18 advisory): AnnIvf's gated paths guard the
-  // zero-cell fit via emptyTopK, but assign/assignQ are public — a caller
-  // with an empty fit must get a named error here, not an opaque
-  // ArrayIndexOutOfBounds from the driver-side trait constructor.
+  // zero-cell fit in their one scoring body, but assign/assignQ are
+  // public — a caller with an empty fit must get a named error here, not
+  // an opaque ArrayIndexOutOfBounds from the driver-side trait constructor.
   require(centsQ.nonEmpty, s"$prettyName: at least one centroid required")
 
   protected val nCells: Int = centsQ.length

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Materialize
+import graft.core.{BoundedFit, Materialize}
 import graft.functions.Md5Prefix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -44,14 +44,13 @@ import org.apache.spark.sql.functions._
   *      product with a partkey tie-break — integer scores, total order.
   *
   * Like the other twins, the fit loop runs on the driver over the
-  * [[maxFitRows]]-bounded, SQL-expressible sample (the smallest
-  * (custkey, partkey) rating rows — ≤ 1.5 MB of longs, a plan
-  * constant); the distributed work is the ratings aggregation and the
-  * final scoring, which joins two ≤65536-row broadcast factor frames
-  * onto the full rating matrix — no shuffle beyond the groupBy the
-  * product ALS already pays. At 100 TB the ratings build is the
-  * measured part; the twin adds two broadcast hash joins and a
-  * per-user window.
+  * [[BoundedFit]] sample of the smallest (custkey, partkey) rating rows
+  * (≤ 1.5 MB of longs, a plan constant); the distributed work is the
+  * ratings aggregation and the final scoring, which joins two
+  * cap-bounded broadcast factor frames onto the full rating matrix — no
+  * shuffle beyond the groupBy the product ALS already pays. At 100 TB
+  * the ratings build is the measured part; the twin adds two broadcast
+  * hash joins and a per-user window.
   */
 object AlsTwin {
 
@@ -85,12 +84,11 @@ object AlsTwin {
     */
   val TopN = 5
 
-  /** Fit-sample bound — the shared bounded-driver-fit posture: factors
-    * are a summary; the fit input is the maxFitRows smallest
-    * (custkey, partkey) rating rows (deterministic, SQL-expressible;
-    * the full matrix at the oracle gate scale).
+  /** The fit sample's order: factors are a summary, fit on the
+    * [[BoundedFit.MaxRows]] smallest (custkey, partkey) rating rows (the
+    * full matrix at the oracle gate scale).
     */
-  val maxFitRows = 65536
+  private val FitKeys = Seq("custkey", "partkey")
 
   /** Integer rating matrix: the reference's A10 aggregation with
     * per-row BIGINT quantity cast so the sum is exact and
@@ -244,10 +242,7 @@ object AlsTwin {
     val spark = orders.sparkSession
     Materialize.checkpointed { scope =>
       val rat = scope.cache(ratingsInt(orders, lineitem))
-      val fitRows: Array[Array[Long]] = rat
-        .orderBy(col("custkey"), col("partkey")).limit(maxFitRows)
-        .collect()
-        .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2)))
+      val fitRows = BoundedFit.longs(rat, FitKeys, Seq("custkey", "partkey", "r"))
       if (fitRows.isEmpty)
         rat.select(col("custkey"), col("partkey"),
           lit(0L).as("pred"), lit(0).as("rn")).limit(0)
@@ -318,7 +313,7 @@ object AlsTwin {
        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        |  GROUP BY 1, 2
        |  HAVING SUM(CAST(trunc(l_quantity) AS BIGINT)) IS NOT NULL),
-       |fq AS (SELECT * FROM rat ORDER BY custkey, partkey LIMIT $maxFitRows),
+       |${BoundedFit.oracleCte("rat", FitKeys)},
        |fqc AS (SELECT custkey, partkey, LEAST(r, $ConfCap) AS cm1 FROM fq),
        |if0 AS (
        |  SELECT partkey AS id,

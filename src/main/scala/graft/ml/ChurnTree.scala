@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Materialize
+import graft.core.{BoundedFit, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,23 +36,22 @@ import org.apache.spark.sql.functions._
   *      special-cased, so both engines minimize over the SAME candidate
   *      set with ties broken by (feature, threshold).
   *
-  * Like the Lloyd twin, the fit loop runs on the driver over a
-  * [[maxFitRows]]-bounded, SQL-expressible sample (the smallest
-  * (custkey, partkey) keys — ≤ 2 MB of longs, a plan constant); the
-  * distributed work is the label/feature build and the final assignment,
-  * which is ONE narrow projection with the three splits and four leaf
-  * stats baked in as literals — no join, no shuffle beyond the
-  * repurchase labeling itself. At 100 TB the labeling is the measured
-  * part (q7/q8's band-join path); the tree adds a map.
+  * Like the Lloyd twin, the fit loop runs on the driver over the
+  * [[BoundedFit]] sample of the smallest (custkey, partkey) keys
+  * (≤ 2 MB of longs, a plan constant); the distributed work is the
+  * label/feature build and the final assignment, which is ONE narrow
+  * projection with the three splits and four leaf stats baked in as
+  * literals — no join, no shuffle beyond the repurchase labeling
+  * itself. At 100 TB the labeling is the measured part (q7/q8's
+  * band-join path); the tree adds a map.
   */
 object ChurnTree {
 
-  /** Fit-sample bound — the [[SegmentationLloyd.maxFitRows]] posture:
-    * splits are a summary; the fit input is the maxFitRows smallest
-    * (custkey, partkey) examples (deterministic and SQL-expressible;
-    * the full example set at the oracle gate scale).
+  /** The fit sample's order: splits are a summary, fit on the
+    * [[BoundedFit.MaxRows]] smallest (custkey, partkey) examples (the
+    * full example set at the oracle gate scale).
     */
-  val maxFitRows = 65536
+  private val FitKeys = Seq("custkey", "partkey")
 
   /** A split: examples with feature `f` (1-based) ≤ `t` go left. */
   final case class Split(f: Int, t: Long)
@@ -193,11 +192,7 @@ object ChurnTree {
              window: Int = 30): DataFrame =
     Materialize.checkpointed { scope =>
       val ex = scope.cache(features(customer, orders, lineitem, window))
-      val fitRows: Array[Array[Long]] = ex
-        .orderBy(col("custkey"), col("partkey")).limit(maxFitRows)
-        .select(col("f1"), col("f2"), col("f3"), col("label"))
-        .collect()
-        .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val fitRows = BoundedFit.longs(ex, FitKeys, Seq("f1", "f2", "f3", "label"))
       // the empty fit keeps the same ordered-output contract as the
       // normal path (uniform even though the frame is empty today)
       if (fitRows.isEmpty)
@@ -258,7 +253,7 @@ object ChurnTree {
        |  FROM lab l JOIN customer c ON c.c_custkey = l.custkey
        |  JOIN segr s ON s.seg = c.c_mktsegment
        |  WHERE c.c_acctbal IS NOT NULL AND NOT isnan(CAST(c.c_acctbal AS DOUBLE))),
-       |fq AS (SELECT * FROM ex ORDER BY custkey, partkey LIMIT $maxFitRows),
+       |${BoundedFit.oracleCte("ex", FitKeys)},
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM fq),
        |ranks AS (
        |  SELECT DISTINCT r FROM (

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Materialize
+import graft.core.{BoundedFit, Materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   *   1. the same quantized feature frame as [[SegmentationLloyd]]
   *      (shared oracle prefix — one feature contract, two gates);
   *   2. for each K in {kMin..kMax}: the integer-grid Lloyd fit on the
-  *      bounded sample (sample pulled ONCE across all K), then one
+  *      [[BoundedFit]] sample (pulled ONCE across all K), then one
   *      distributed criterion pass over the FULL quantized frame —
   *      per row, the BIGINT squared distances to all K centroid
   *      literals, sorted; `a` = nearest (sums to the exact WSSSE the
@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Scale shape: the K sweep is kMax-1 narrow map+aggregate passes over
   * one cached quantized frame — no join, no shuffle beyond the RFM
-  * aggregation; the Lloyd fits are driver loops over one bounded
-  * SQL-expressible sample (the BoundedFitSpec-audited contract), and
+  * aggregation; the Lloyd fits are [[BoundedFit.lloyd]] driver loops
+  * over one [[BoundedFit]] sample (the BoundedFitSpec-audited contract), and
   * every per-row term stays in whole-stage codegen. At 100 TB the
   * criterion pass is a scan with k literal centroids, exactly like
   * [[SegmentationLloyd.assign]].
@@ -112,9 +112,9 @@ object SegmentationAutoK {
     val crit = Materialize.checkpointed { scope =>
       val q = scope.cache(SegmentationLloyd.quantized(
         SegmentationPipeline.features(customer, orders)))
-      val sample = SegmentationLloyd.collectFitSample(q)
+      val sample = SegmentationLloyd.fitSample(q)
       (kMin to kMax)
-        .map(k => critFrame(q, k, SegmentationLloyd.fitLloydData(sample, k, iters)))
+        .map(k => critFrame(q, k, BoundedFit.lloyd(sample, k, iters)))
         .reduce(_.unionByName(_))
     }
     // the ranking runs over a (kMax-kMin+1)-row checkpointed frame — the

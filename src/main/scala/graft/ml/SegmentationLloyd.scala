@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Materialize
+import graft.core.{BoundedFit, Materialize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *      ([[oracle]]); empty cells keep their previous centroid.
   *
   * Like the IVF fit, the Lloyd loop itself runs on the driver over the
-  * [[maxFitRows]]-bounded, SQL-expressible sample (k·dims longs per
+  * [[BoundedFit]] sample of the smallest custkeys (k·dims longs per
   * iteration of state — a plan constant); the distributed work is the
   * feature scan and the final assignment projection. At 100 TB the
   * assignment is one narrow map over the feature frame with the k
@@ -44,12 +44,10 @@ object SegmentationLloyd {
     */
   val Grid = 1000000L
 
-  /** Cap on rows fed to the Lloyd fit — the [[graft.ext.AnnIvf]]
-    * posture: centroids are a summary; the fit input is the maxFitRows
-    * SMALLEST custkeys (deterministic and SQL-expressible, the full
-    * corpus at every oracle scale).
+  /** The fit sample's order: the [[BoundedFit.MaxRows]] smallest
+    * custkeys, in the engine's pull and in the oracle's `fq`.
     */
-  val maxFitRows = 65536
+  private val FitKeys = Seq("custkey")
 
   private val featCols = Seq("acctbal", "frequency", "monetary", "recency_days")
 
@@ -88,58 +86,21 @@ object SegmentationLloyd {
         }: _*)
   }
 
-  /** Fixed-iteration Lloyd over the quantized grid — the driver loop
-    * twin of [[graft.ext.AnnIvf.lloydCentroidsQ]] (full squared
-    * distance instead of the csq−2·dot form: the per-row |q|² constant
-    * shifts every cell's score equally, so argmin and ties agree).
-    * A corpus smaller than k seeds fewer cells; every loop bounds on
-    * the actual seed count.
+  /** Fixed-iteration Lloyd over the quantized grid: [[BoundedFit.lloyd]]
+    * over [[fitSample]], the kernel [[graft.ext.AnnIvf.lloydCentroidsQ]]
+    * runs too. Its `|c|² − 2·v·c` score is the full squared distance
+    * the oracle orders by, less the per-row constant `|q|²`, so argmin
+    * and ties agree. A corpus smaller than k seeds fewer cells.
     */
   def fitLloyd(q: DataFrame, k: Int, iters: Int): Array[Array[Long]] =
-    fitLloydData(collectFitSample(q), k, iters)
+    BoundedFit.lloyd(fitSample(q), k, iters)
 
-  /** The maxFitRows-bounded, custkey-ordered fit sample as a driver
-    * array — factored out so callers that fit several K values (the
-    * auto-K twin sweeps K=2..8) pull the sample ONCE instead of once
-    * per K. The orderBy().limit() shape is the bounded-fit contract
-    * BoundedFitSpec audits.
+  /** The custkey-ordered [[BoundedFit]] sample of the quantized frame as
+    * driver rows (q1..q4) — its own def so the auto-K twin, which fits
+    * K=2..8, pulls it once instead of once per K.
     */
-  def collectFitSample(q: DataFrame): Array[Array[Long]] = q
-    .orderBy(col("custkey")).limit(maxFitRows)
-    .select(col("q1"), col("q2"), col("q3"), col("q4"))
-    .collect()
-    .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-
-  /** Lloyd over an already-collected fit sample (see [[fitLloyd]]). */
-  def fitLloydData(data: Array[Array[Long]], k: Int, iters: Int): Array[Array[Long]] = {
-    var cents: Array[Array[Long]] = data.take(k).map(_.clone())
-    val kk = cents.length
-    val dims = 4
-    for (_ <- 1 to iters) {
-      val sums = Array.fill(kk)(new Array[Long](dims))
-      val cnt = new Array[Long](kk)
-      data.foreach { v =>
-        var best = 0
-        var bestScore = Long.MaxValue
-        var c = 0
-        while (c < kk) {
-          var s2 = 0L
-          var i = 0
-          while (i < dims) { val d = v(i) - cents(c)(i); s2 += d * d; i += 1 }
-          if (s2 < bestScore) { bestScore = s2; best = c } // strict <: ties keep the lower cell
-          c += 1
-        }
-        cnt(best) += 1
-        var i = 0
-        while (i < dims) { sums(best)(i) += v(i); i += 1 }
-      }
-      cents = cents.zipWithIndex.map { case (old, c) =>
-        if (cnt(c) == 0L) old
-        else sums(c).map(s => Math.floorDiv(s, cnt(c)))
-      }
-    }
-    cents
-  }
+  def fitSample(q: DataFrame): Array[Array[Long]] =
+    BoundedFit.longs(q, FitKeys, Seq("q1", "q2", "q3", "q4"))
 
   /** (custkey, cluster) under the fitted centroids: one narrow argmin
     * projection — `array_min` over k `struct(score, cluster)` literals,
@@ -233,7 +194,7 @@ object SegmentationLloyd {
          |    CAST(floor(f.monetary / s.s3 * 1000000.0) AS BIGINT) AS q3,
          |    CAST(floor(f.recency_days / s.s4 * 1000000.0) AS BIGINT) AS q4
          |  FROM feats f CROSS JOIN scales s),
-         |fq AS (SELECT * FROM q ORDER BY custkey LIMIT $maxFitRows)""".stripMargin
+         |${BoundedFit.oracleCte("q", FitKeys)}""".stripMargin
 
   /** The unrolled Lloyd fit for one K as a CTE list `cent0$sfx` ..
     * `cent$iters$sfx` over the shared `fq` sample. The suffix keeps the

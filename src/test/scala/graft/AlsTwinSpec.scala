@@ -39,7 +39,7 @@ class AlsTwinSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fit ignores rows beyond the maxFitRows cap (bounded-driver-fit contract)") {
-    // two samples that agree on the first maxFitRows (custkey, partkey)
+    // two samples that agree on the first BoundedFit.MaxRows (custkey, partkey)
     // rows must produce identical factors regardless of trailing rows
     val base = Array.tabulate(300)(i =>
       Array((i % 40).toLong + 1L, (i % 23).toLong + 1L, (i % 7).toLong + 1L))
@@ -51,7 +51,7 @@ class AlsTwinSpec extends AnyFunSuite with SharedSpark {
     // whole input and the cap must be enforced by the caller's LIMIT
     assert(i2.exists(_._1 == 999L) && !i1.exists(_._1 == 999L))
     // and the engine's sample definition is the smallest (custkey,
-    // partkey) rows: recommend() applies orderBy().limit() before fit —
+    // partkey) rows: recommend() pulls the BoundedFit sample before fit —
     // exercised end-to-end at sf0.1 where pairs exceed the cap (driver
     // gate) and in BoundedFitSpec
     assert(u1.nonEmpty && i1.nonEmpty && u2.nonEmpty)

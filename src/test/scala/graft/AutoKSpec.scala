@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Catalog
+import graft.core.{BoundedFit, Catalog}
 import graft.ml.{SegmentationAutoK, SegmentationLloyd, SegmentationPipeline}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,11 +25,11 @@ class AutoKSpec extends AnyFunSuite with SharedSpark {
       SegmentationPipeline.features(c.customer, c.orders))
     val data = q.select("q1", "q2", "q3", "q4").collect()
       .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val sample = SegmentationLloyd.collectFitSample(q)
+    val sample = SegmentationLloyd.fitSample(q)
     val reported = SegmentationAutoK.report(c.customer, c.orders).collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     Seq(2, 5, 8).foreach { k =>
-      val cents = SegmentationLloyd.fitLloydData(sample, k, iters = 3)
+      val cents = BoundedFit.lloyd(sample, k, iters = 3)
       val wssse = data.map { v =>
         cents.map(ct => v.zip(ct).map { case (x, y) => (x - y) * (x - y) }.sum).min
       }.map(BigDecimal(_)).sum

@@ -143,7 +143,7 @@ class IvfExprSpec extends AnyFunSuite with SharedSpark {
 
   test("malformed centroid tables fail loudly at construction (r18 advisory guards)") {
     val v = col("embedding")
-    // empty fit: AnnIvf's gated paths guard via emptyTopK, but
+    // empty fit: AnnIvf's gated paths guard in their scoring body, but
     // assign/assignQ are public — a zero-cell table must name the defect,
     // not throw a raw ArrayIndexOutOfBounds from the trait constructor
     val e1 = intercept[IllegalArgumentException](
